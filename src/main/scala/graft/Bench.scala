@@ -21,7 +21,7 @@ object Bench {
       // 32-reduce shuffle creates ~1024 temp files + merges, and on
       // this host's high-latency virtualized disk file creation
       // dominates: measured 0.53 s → 0.16 s for one 2-stage shuffle
-      // of 4000 rows (Opt21Probe). The sort-based writer streams one
+      // of 4000 rows (OPTIMIZATION_r21.md). The sort-based writer streams one
       // file + index per map task. Scale posture: at production
       // shuffle.partitions (≫ 200) the bypass writer never engages
       // regardless of this threshold, so the setting only affects
@@ -36,29 +36,6 @@ object Bench {
       // already compiled. Scale-neutral server tuning — memory cost
       // is a few thousand small compiled classes.
       .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // r22 (VERDICT r21 next-round #2, deferred from r21): allow a
-      // join to reuse an existing hash partitioning on a SUBSET of its
-      // keys instead of re-exchanging both sides on the full key set.
-      // Scale-neutral planner setting (upstream default flipped to
-      // requiring all keys only as a conservative perf heuristic);
-      // results are partition-independent by the engine's decimal/
-      // fround pinning, re-verified by the full oracle chain at 3 SFs
-      // with the flag set. Env-overridable like the shuffle-writer
-      // threshold.
-      .config("spark.sql.requireAllClusterKeysForCoPartition",
-        sys.env.getOrElse("SPARK_GRAFT_REQUIRE_ALL_CLUSTER_KEYS", "true"))
-      // r22 PROBED, DEFAULT KEPT (= stock 1m): AQE coalescing sizes
-      // post-shuffle partitions by bytes, so compute-heavy byte-light
-      // stages collapse to one task (text_naive_bayes ran four ~1.3 s
-      // scoring builds on one core each — JobProf). Lowering the floor
-      // to 64k re-spreads them but the alternating filtered A/B was
-      // FLAT (11.5/13.7 s @1m vs 11.6/12.2 @64k over the 8 worst
-      // single-task-stage queries): those stages are concurrent
-      // broadcast-exchange futures, so their serialism barely reaches
-      // the wall clock. Env knob retained for deployments whose
-      // broadcast sides are larger.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // ERROR, not WARN (r21, VERDICT r20 wrong #3): the recurring

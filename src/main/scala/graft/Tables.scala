@@ -70,10 +70,9 @@ object Tables {
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")
 
   /** Content fingerprint of a table path: file names + sizes + mtimes.
-    * Shared by every cross-query memo/catalog key (bucketed-table reuse
-    * in Joins, the near-dup pair memo in Dedup, the skip manifest in
-    * Scans): a regenerated fixture at the same path changes the
-    * fingerprint, so stale cached artifacts are never served. */
+    * The staleness stamp of the artifact memo ([[memo]], [[once]]): a
+    * regenerated fixture at the same path changes the fingerprint, so
+    * stale cached artifacts are never served. */
   def fsSig(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -91,7 +90,7 @@ object Tables {
     * explicitly broadcast-hinted or key-bounded, and skew is capped by
     * the same constants — while its per-stage materialize-and-replan
     * turns every exchange into its own job: one NND build measured 26
-    * jobs with AQE on vs 9 off, 3.50 s vs 2.40 s median (Opt22Probe).
+    * jobs with AQE on vs 9 off, 3.50 s vs 2.40 s median (OPTIMIZATION_r22.md).
     * Disabling it ALSO makes the loop's lazy localCheckpoints truly
     * lazy (with AQE on, execute() materializes every shuffle stage at
     * checkpoint-call time), so a whole build collapses into the
@@ -108,38 +107,54 @@ object Tables {
     }
   }
 
-  /** getOrElseUpdate for the per-(applicationId, fixture-signature)
-    * artifact memos that EVICTS superseded entries (ADVICE r21 #2):
-    * when a new signature shows up for the same (applicationId,
-    * prefix) — a fixture dir regenerated within one JVM — the stale
-    * entry's checkpointed blocks are unpersisted and the entry
-    * dropped, bounding retention to one live artifact per memo per
-    * fixture. In the Bench/Verify lifecycle signatures never change
-    * mid-JVM, so this costs nothing there; it exists for long-lived
-    * sessions over mutable fixture dirs. */
-  def memoArtifact[V](
-      memo: scala.collection.concurrent.TrieMap[(String, String), V],
-      appId: String, prefix: String, sig: String)(unpersist: V => Unit)
-      (build: => V): V = {
-    val key = (appId, prefix + sig)
-    memo.get(key).getOrElse {
-      memo.keysIterator
-        .filter(k => k._1 == appId && k._2.startsWith(prefix) && k._2 != key._2)
-        .toList
-        .foreach(k => memo.remove(k).foreach(v =>
-          try unpersist(v) catch { case _: Throwable => () }))
-      memo.getOrElseUpdate(key, build)
+  /** The one artifact memo: index state (graphs, codebooks, shingled
+    * corpora, fixture layouts, exports) is built once from a source
+    * path and reused until that source changes — the i3cols
+    * build-once, read-many rule. One key, (scope, artifact name,
+    * source path), with any extra build parameter (`k`, `minJ`) folded
+    * into the name; one staleness stamp, normally `fsSig(source)`.
+    * A changed stamp rebuilds and DROPS the superseded value without
+    * unpersisting it: a frame taken before the rebuild stays readable,
+    * and Spark's ContextCleaner frees its checkpoint blocks once
+    * nothing references it. Builds run under a per-key lock, so
+    * concurrent callers build a key once; a build may call other
+    * memos (distinct keys, distinct locks — never inside a
+    * ConcurrentHashMap.compute, which refuses recursive updates). */
+  private final class Slot { var stamp: String = null; var value: Any = null }
+  private val artifacts =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Slot]()
+
+  private def cached[V](scope: String, name: String, source: String, stamp: String,
+                        keep: V => Boolean)(build: => V): V = {
+    val slot = artifacts.computeIfAbsent((scope, name, source), _ => new Slot)
+    slot.synchronized {
+      if (slot.stamp != stamp || !keep(slot.value.asInstanceOf[V])) {
+        slot.value = build
+        slot.stamp = stamp
+      }
+      slot.value.asInstanceOf[V]
     }
   }
 
-  /** Unpersist every checkpointed RDD a memoized frame's plan holds —
-    * the eviction callback for [[memoArtifact]]. */
-  def freeCheckpoints(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false); ()
-      case _ => ()
-    }
+  /** Session-bound artifact (checkpointed frames, collected codebooks),
+    * scoped to the SparkContext's applicationId: a localCheckpoint's
+    * blocks die with their context, so a later session in the same
+    * JVM rebuilds instead of reading dead block ids. */
+  def memo[V](s: SparkSession, name: String, source: String)(build: => V): V =
+    cached(s.sparkContext.applicationId, name, source, fsSig(s, source),
+      (_: V) => true)(build)
+
+  /** Write-once scratch artifact (fixture layouts under [[scratch]]),
+    * scoped to the JVM: the files outlive any one session. */
+  def once[V](s: SparkSession, name: String, source: String)(build: => V): V =
+    cached("jvm", name, source, fsSig(s, source), (_: V) => true)(build)
+
+  /** [[once]] with a caller-computed stamp, for exports whose inputs
+    * span more than one directory listing; `keep` rejects a cached
+    * value whose output has since been removed. */
+  def once[V](name: String, source: String, stamp: String, keep: V => Boolean)
+             (build: => V): V =
+    cached("jvm", name, source, stamp, keep)(build)
 
   /** Scratch path for sink/roundtrip operators, scoped by input dir and
     * JVM: two scale factors or a concurrent Bench+Verify pair never

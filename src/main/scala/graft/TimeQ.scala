@@ -16,8 +16,6 @@ object TimeQ {
       .config("spark.shuffle.sort.bypassMergeThreshold",
         sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
       .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.requireAllClusterKeysForCoPartition",
-        sys.env.getOrElse("SPARK_GRAFT_REQUIRE_ALL_CLUSTER_KEYS", "true"))
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

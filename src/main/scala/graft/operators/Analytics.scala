@@ -44,26 +44,13 @@ object Analytics {
     * behavior and the deterministic tie rule. */
   val LpaRounds = 4
 
-  /** Context-scoped memo of [[cooccurEdges]] over the lineitem fixture:
-    * graph_triangles and graph_kcore share ONE evaluation of the basket
-    * self-join per (context, fixture state) — the same fsSig discipline
-    * as Dedup.pairsMemo (a regenerated fixture or restarted context
-    * rebuilds instead of serving stale checkpoint blocks). Keyed by
-    * `applicationId` (ADVICE r10: identityHashCode can collide between
-    * a dead and a live session): the id is timestamped and never
-    * reused, and its lifetime is EXACTLY the block manager's — the
-    * localCheckpoint blocks this memo guards live and die with the
-    * SparkContext. The support-pruned edge list is tiny, so retention
-    * is a few KB. */
-  private val coocMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  def cooccurEdgesCached(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/lineitem.parquet")
-    coocMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, s"$dir|$sig"),
+  /** [[cooccurEdges]] over the lineitem fixture through the artifact
+    * memo: graph_triangles and graph_kcore share ONE evaluation of the
+    * basket self-join per (session, fixture state). The support-pruned
+    * edge list is tiny, so retention is a few KB. */
+  def cooccurEdgesCached(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(s, "cooccur", s"$dir/lineitem.parquet")(
       cooccurEdges(lineitem(s, dir)).localCheckpoint())
-  }
 
   /** graph_hits round count — small and FIXED so the oracle unrolls
     * the identical rounds as CTEs (the Lloyd/PageRank discipline). */
@@ -86,7 +73,7 @@ object Analytics {
     // CHOICE, measured both ways (r21 A/B, 3 fresh JVMs each): a
     // persist() WOULD carry the ok layout into the self-join under
     // AQE (a checkpoint's LogicalRDD reports UnknownPartitioning —
-    // CkptProbe), but the InMemoryRelation build costs ~3 s cold on
+    // OPTIMIZATION_r21.md §8), but the InMemoryRelation build costs ~3 s cold on
     // this host (8.0 vs 5.0 s for the whole query) — far more than
     // the two narrow re-exchanges it saves; localCheckpoint keeps the
     // materialize-once property at plain block-copy cost. At cluster
@@ -94,7 +81,7 @@ object Analytics {
     // (or a bucketed write) is the right call — the A/B is the
     // decision record.
     // r22 PROBED AND REVERTED: creating this checkpoint inside an
-    // AQE-off scope makes the LogicalRDD keep hash(ok) (Opt22Probe)
+    // AQE-off scope makes the LogicalRDD keep hash(ok) (OPTIMIZATION_r22.md)
     // and the pair self-join co-partitioned — but the query measured
     // 2.8-2.9 s vs 2.5 s stock (2-run filtered A/B): the un-coalesced
     // 32-partition materialization and the 32-task downstream stages
@@ -527,7 +514,7 @@ object Analytics {
     * consumer and the plan grows 2^rounds). */
   def labelPropagate(bidir: DataFrame, rounds: Int): DataFrame =
     // r22: AQE off for the loop scope — under AQE a localCheckpoint
-    // comes back as UnknownPartitioning (CkptProbe) and every round
+    // comes back as UnknownPartitioning (OPTIMIZATION_r21.md §8) and every round
     // re-exchanges the loop-invariant edge list; with AQE off the
     // checkpoint KEEPS the v layout below, so each round's edge-side
     // join input is exchange-free and the round pays ONE exchange
@@ -544,7 +531,7 @@ object Analytics {
     // it once; only the label table, which changes each round, pays
     // per-round work. MATERIALIZATION CHOICE, measured both ways
     // (r21 A/B): a persist() WOULD carry the v layout into every
-    // round's join under AQE (a checkpoint loses it — CkptProbe), but
+    // round's join under AQE (a checkpoint loses it — OPTIMIZATION_r21.md §8), but
     // the InMemoryRelation build costs more cold than the four narrow
     // edge re-exchanges it saves on this host (7.6-9.4 vs 7.3-8.0 s);
     // localCheckpoint keeps materialize-once at block-copy cost; with
@@ -573,23 +560,18 @@ object Analytics {
   }
 
   /** [[labelPropagate]] at [[LpaRounds]] over the co-occurrence graph
-    * through the per-(application, fixture) memo (r21): the partition
-    * is shared artifact state between graph_label_propagation and
-    * graph_modularity — exactly the pairsMemo convention (one
-    * evaluation per session, attributed to whichever family member
-    * runs first; family-sum accounting applies). */
-  private val lpaMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  def lpaLabelsCached(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/lineitem.parquet")
-    lpaMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, s"lpa:$dir|$sig"), {
+    * through the artifact memo (r21): the partition is shared
+    * artifact state between graph_label_propagation and
+    * graph_modularity (one evaluation per session, attributed to
+    * whichever family member runs first; family-sum accounting
+    * applies). */
+  def lpaLabelsCached(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(s, "lpa", s"$dir/lineitem.parquet") {
         val edges = cooccurEdgesCached(s, dir)
         val bidir = edges.select(col("a").as("u"), col("b").as("v"))
           .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
         labelPropagate(bidir, LpaRounds)
-      })
-  }
+    }
 
   /** Modularity report of the [[labelPropagate]] partition over an
     * undirected canonical (a, b) edge list: per community, node count,
@@ -1510,8 +1492,8 @@ object Analytics {
     // [[LpaRounds]]); the oracle unrolls the identical rounds.
     "graph_label_propagation" -> ((s, dir) =>
       // r21: the propagated partition comes through lpaLabelsCached —
-      // shared artifact state with graph_modularity (pairsMemo
-      // convention), identical rounds and results
+      // shared artifact state with graph_modularity, identical
+      // rounds and results
       lpaLabelsCached(s, dir)
         .select(col("node"), col("lab").as("community"))
         .orderBy("node")),

@@ -175,26 +175,19 @@ object Dedup {
         s"transform(sequence(0, n_toks - 1), p -> exists(dup_starts, s -> s <= p and p <= s + ${k - 1}))"))
   }
 
-  /** [[substringCovered]] on the fixture through the per-(application,
-    * fixture) memo — r21, the pairsMemo convention: dedup_substring
-    * (the rollup) and dedup_substring_spans (the span set) derive from
+  /** [[substringCovered]] on the fixture through the artifact memo —
+    * r21: dedup_substring (the rollup) and dedup_substring_spans (the
+    * span set) derive from
     * the SAME coverage frame, and a production pipeline materializes
     * coverage once and emits both reports (two queries, one
     * tokenize + stride-1 digest-window pass). The retained frame holds
     * the tokenized docs + coverage bitmap — corpus-row-scale, which is
     * exactly what the real pipeline persists between the two reports;
     * MEMORY_AND_DISK via localCheckpoint spills rather than OOMs. */
-  private val substringCoveredMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   def substringCoveredCached(s: org.apache.spark.sql.SparkSession,
-                             dir: String): DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/documents.parquet")
-    graft.Tables.memoArtifact(substringCoveredMemo,
-        s.sparkContext.applicationId, s"sscov:$dir|", sig)(
-        graft.Tables.freeCheckpoints)(
+                             dir: String): DataFrame =
+    graft.Tables.memo(s, "sscov", s"$dir/documents.parquet")(
       substringCovered(graft.Tables.documents(s, dir)).localCheckpoint())
-  }
 
   /** VARIABLE-LENGTH duplicated-span EXTRACTION (VERDICT r16 Missing
     * #2's oracle-checked span set): each maximal run of covered token
@@ -332,9 +325,9 @@ object Dedup {
                extra.map(col)): _*)
 
   /** The (doc_id, lang, source, sh) hashed-shingle projection of the
-    * documents fixture through the per-(application, fixture) memo —
-    * r21, the pairsMemo convention: SIX queries (the pair-family
-    * builder, the minhash recall report, source sketches, containment,
+    * documents fixture through the artifact memo — r21: SIX queries
+    * (the pair-family builder, the minhash recall report, source
+    * sketches, containment,
     * ngram-Jaccard, allpairs-prefix) start from this identical
     * projection, and a production dedup pipeline materializes the
     * shingled corpus exactly once and runs the whole family off it
@@ -342,18 +335,11 @@ object Dedup {
     * since r3 — this makes it true ACROSS the family, not just within
     * one query). Corpus-row-scale retention (one row per doc, compact
     * long arrays), MEMORY_AND_DISK. */
-  private val shingledMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   def shingledCorpusCached(s: org.apache.spark.sql.SparkSession,
-                           dir: String): DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/documents.parquet")
-    graft.Tables.memoArtifact(shingledMemo,
-        s.sparkContext.applicationId, s"shingled:$dir|", sig)(
-        graft.Tables.freeCheckpoints)(
+                           dir: String): DataFrame =
+    graft.Tables.memo(s, "shingled", s"$dir/documents.parquet")(
       withHashedShingles(graft.Tables.documents(s, dir), "lang", "source")
         .localCheckpoint())
-  }
 
   /** Exact Jaccard over two SORTED hashed-shingle arrays: one merge
     * scan for |A∩B| ([[graft.functions.SortedIntersectSize]]),
@@ -438,24 +424,17 @@ object Dedup {
       .orderBy("tau")
   }
 
-  /** [[minhashRecallReport]] through the per-(application, fixture)
-    * memo — r21, the pairsMemo convention: dedup_minhash_recall (the
-    * report) and dedup_minhash_recall_bracket (its oracle-checked
+  /** [[minhashRecallReport]] through the artifact memo — r21:
+    * dedup_minhash_recall (the report) and dedup_minhash_recall_bracket
+    * (its oracle-checked
     * certificate) read the SAME two-row report, and a production
     * pipeline computes the tuning sheet once and certifies that
     * artifact (two queries, one truth-pairs + banding pass;
     * family-sum attribution). Retained frame: 2 rows. */
-  private val minhashReportMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   def minhashRecallReportCached(s: org.apache.spark.sql.SparkSession,
-                                dir: String): DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/documents.parquet")
-    graft.Tables.memoArtifact(minhashReportMemo,
-        s.sparkContext.applicationId, s"mhrecall:$dir|", sig)(
-        graft.Tables.freeCheckpoints)(
+                                dir: String): DataFrame =
+    graft.Tables.memo(s, "mhrecall", s"$dir/documents.parquet")(
       minhashRecallReportOf(shingledCorpusCached(s, dir)).localCheckpoint())
-  }
 
   /** Candidate pairs verified with exact Jaccard over shingle sets. */
   def minhashPairs(docs: DataFrame, jaccardMin: Double): DataFrame =
@@ -619,30 +598,17 @@ object Dedup {
     * monotone — an unchanged sum IS the fixpoint. Converges in
     * O(diameter) rounds; near-dup graphs are clique-ish so diameters
     * are tiny. Returns (node, cluster = min node of its component). */
-  /** Session-scoped memo of the checkpointed near-dup pair list:
-    * triage (`graph_degree`), clustering (`dedup_cluster`) and
-    * reachability (`graph_bfs`) all read the SAME pair graph, and a
-    * production pipeline computes it once and reuses the checkpoint —
-    * three queries, one candidate join. Keyed by the context's
-    * `applicationId` (timestamped, never reused — a restarted context,
-    * whose checkpoint blocks are gone, rebuilds instead of reading dead
-    * block ids; identityHashCode could collide between a dead and a
-    * live session, ADVICE r10) AND the documents fixture's
-    * content fingerprint (ADVICE r3: a regenerated fixture at the same
-    * dir must not serve a stale pair graph — same fsSig discipline as
-    * the bucketed-table memo in Joins). The edge list is tiny (sparse
-    * graphs), so retention is a few KB. */
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), DataFrame]
-
-  /** [[blockedJaccardPairs]] through the context-scoped checkpoint
-    * memo (r21: built off the memoized shingled corpus, so the
-    * tokenize+shingle pass is shared with the whole dedup family). */
+  /** [[blockedJaccardPairs]] through the artifact memo: triage
+    * (`graph_degree`), clustering (`dedup_cluster`) and reachability
+    * (`graph_bfs`) all read the SAME pair graph, and a production
+    * pipeline computes it once and reuses the checkpoint — three
+    * queries, one candidate join (r21: built off the memoized shingled
+    * corpus, so the tokenize+shingle pass is shared with the whole
+    * dedup family). `minJ` is part of the artifact name. The edge list
+    * is tiny (sparse graphs), so retention is a few KB. */
   def blockedJaccardPairsCached(docs: DataFrame, dir: String, minJ: Double): DataFrame = {
     val spark = docs.sparkSession
-    val sig = graft.Tables.fsSig(spark, s"$dir/documents.parquet")
-    pairsMemo.getOrElseUpdate(
-      (spark.sparkContext.applicationId, s"$dir|$sig", minJ),
+    graft.Tables.memo(spark, s"pairs:$minJ", s"$dir/documents.parquet")(
       blockedJaccardPairsOf(shingledCorpusCached(spark, dir), minJ)
         .localCheckpoint())
   }

@@ -25,12 +25,6 @@ object Joins {
     * Shared with the oracle SQL. */
   val DppBuckets = 50
 
-  private val dppMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  private val runtimeBloomMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** join_runtime_bloom's session knobs, saved and restored around the
     * one materialization so no OTHER query's plan is affected: the
     * injection rule needs the probe-side scan to clear the
@@ -170,8 +164,7 @@ object Joins {
     // dynamicpruning subquery in the executed scan.
     "join_dpp_partitioned" -> ((s, dir) => {
       val out = scratch(dir, "dpp_fact")
-      dppMemo.getOrElseUpdate(
-        s"$out|${graft.Tables.fsSig(s, s"$dir/lineitem.parquet")}", {
+      graft.Tables.once(s, "dpp_fact", s"$dir/lineitem.parquet") {
           lineitem(s, dir)
             .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity"))
             .withColumn("sbkt", pmod(col("l_suppkey"), lit(DppBuckets)))
@@ -179,7 +172,7 @@ object Joins {
             // dir, not (tasks × dirs) small files
             .repartition(col("sbkt"))
             .write.mode("overwrite").partitionBy("sbkt").parquet(out)
-        })
+        }
       val fact = s.read.parquet(out)
       val dim = supplier(s, dir)
         .where(col("s_suppkey") % 10 === 0)
@@ -518,8 +511,7 @@ object Joins {
     // PlanAuditSpec pins the injected pair on the live plan.
     "join_runtime_bloom" -> ((s, dir) => {
       val out = scratch(dir, "runtime_bloom")
-      runtimeBloomMemo.getOrElseUpdate(
-        s"$out|${graft.Tables.fsSig(s, s"$dir/lineitem.parquet")}", {
+      graft.Tables.once(s, "runtime_bloom", s"$dir/lineitem.parquet") {
           // the conf flips ride a DEDICATED newSession (own SQLConf,
           // shared SparkContext), so a query planned concurrently in
           // the parent session can never see the disabled-broadcast /
@@ -528,7 +520,7 @@ object Joins {
           withRuntimeBloomConfs(ns) {
             runtimeBloomJoin(ns, dir).write.mode("overwrite").parquet(out)
           }
-        })
+        }
       s.read.parquet(out).orderBy("o_orderstatus")
     }),
 

@@ -732,14 +732,13 @@ object Scans {
     "scan_bloom_sidecar" -> ((s, dir) => {
       val out = scratch(dir, "bloom_src")
       val idx = scratch(dir, "bloom_idx")
-      layoutMemo.getOrElseUpdate(
-        s"$out|${graft.Tables.fsSig(s, s"$dir/lineitem.parquet")}", {
+      graft.Tables.once(s, "bloom_src", s"$dir/lineitem.parquet") {
           lineitem(s, dir)
             .repartition(16, col("l_partkey"))
             .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
             .write.mode("overwrite").parquet(out)
           bloomSidecarBuild(s, out, idx)
-        })
+        }
       val keys = BloomProbeKeys
       val files = bloomPrunedFiles(s, idx, keys)
       val base = if (files.isEmpty) s.read.parquet(out).where(lit(false))
@@ -1471,13 +1470,12 @@ object Scans {
       // the range-clustered layout is the table, not the query: write
       // it once per (JVM, source state) — scratch is pid-scoped, the
       // source fingerprint invalidates on fixture regeneration
-      layoutMemo.getOrElseUpdate(
-        s"$out|${graft.Tables.fsSig(s, s"$dir/lineitem.parquet")}", {
+      graft.Tables.once(s, "manifest_src", s"$dir/lineitem.parquet") {
           lineitem(s, dir)
             .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
             .repartitionByRange(16, col("l_orderkey"))
             .write.mode("overwrite").parquet(out)
-        })
+        }
       val files = manifestPrune(s, out, "l_orderkey", 100L, 2000L)
       // a fully-pruned probe must yield the empty result, not a
       // zero-path read error
@@ -2037,28 +2035,6 @@ object Scans {
     })
   )
 
-  /** Per-JVM manifest cache keyed by (table path, content fingerprint):
-    * the manifest is built once per table state and consulted by every
-    * later probe — the Delta/Iceberg shape where data-skipping stats
-    * persist WITH the table instead of being recomputed per query
-    * (VERDICT r3 "What's wrong" #3: the old group-by-input_file_name
-    * manifest was a full data pass on every run). */
-  private val manifestMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[(String, Long, Long)]]
-
-  /** Once-per-(JVM, source-state) guard for the clustered layout write
-    * feeding `scan_manifest_pruned`. */
-  private val layoutMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  /** Once-per-(JVM, source-state) guard for the framed fixture write
-    * feeding `source_framed_extract`. */
-  private val framedMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  private val evolvedMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** The mixed-key-set directory feeding `source_framed_evolved`:
     * "season 1" = even event_ids written WITHOUT the `value` key,
     * "season 2" = odd event_ids with the full evolved key set. Each
@@ -2088,12 +2064,12 @@ object Scans {
 
   def framedEvolvedFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_evolved")
-    evolvedMemo.getOrElseUpdate(s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_evolved", s"$dir/events.parquet") {
       val e = framedSeasonEvents(s, dir)
       stageSeasons(out, Seq(
         e.where(col("event_id") % 2 === 0).drop("value") -> "s1",
         e.where(col("event_id") % 2 === 1) -> "s2"))
-    })
+    }
     out
   }
 
@@ -2128,9 +2104,6 @@ object Scans {
     }
   }
 
-  private val widenedMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** The mixed-WIDTH directory feeding `source_framed_widened`: the
     * other half of real schema evolution (VERDICT r12 #4) — the key
     * SET is constant but a key's physical type widened across
@@ -2142,18 +2115,15 @@ object Scans {
     * (JVM, fixture state). */
   def framedWidenedFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_widened")
-    widenedMemo.getOrElseUpdate(s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_widened", s"$dir/events.parquet") {
       val e = framedSeasonEvents(s, dir)
       stageSeasons(out, Seq(
         e.where(col("event_id") % 2 === 0)
           .withColumn("value", floor(col("value"))) -> "s1",
         e.where(col("event_id") % 2 === 1) -> "s2"))
-    })
+    }
     out
   }
-
-  private val ttMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** The time-travel commit boundary — ONE constant shared by the
     * fixture builders, the oracle SQL (interpolated), and the specs,
@@ -2208,43 +2178,39 @@ object Scans {
   /** One export per (JVM, root, source-chain state): four catalog
     * queries call the export per run, and since r19 each build walks
     * every data file's parquet FOOTER for the manifest row counts —
-    * still metadata-class (never data pages) but O(files); the memo
-    * keys on the _manifests/_commits listing signature so a fixture
-    * rebuild re-exports and a repeat call is free (review r19). */
-  private val icebergExportMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
+    * still metadata-class (never data pages) but O(files). */
   def exportIcebergMetadata(root: String): String = {
-    val chainSig = Seq(s"$root/_manifests", s"$root/_commits",
-                       s"$root/_branches", s"$root/_tags")
-      .flatMap { d =>
-        Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
+    val versions = Option(new java.io.File(s"$root/_manifests").listFiles())
+      .getOrElse(Array.empty).filter(_.getName.matches("v\\d+\\.txt"))
+      .map(_.getName.stripPrefix("v").stripSuffix(".txt").toInt).toSeq
+    graft.Tables.once("iceberg_export", root,
+        exportStamp(root, Seq("_manifests", "_commits", "_branches", "_tags"), versions),
+        exported)(
+      exportIcebergMetadataUncached(root))
+  }
+
+  /** Staleness stamp of a table export: (name, length, mtime) of every
+    * file in the listed metadata dirs, plus (path, length, mtime) of
+    * every data file the given versions' manifests list — the exports
+    * read those files' parquet FOOTERS (and, for delete exports, their
+    * row ordinals), so a file rewritten in place (same listing, new
+    * content) must re-export (r20 ADVICE). */
+  private def exportStamp(root: String, dirs: Seq[String], versions: Seq[Int]): String = {
+    val listing = dirs.flatMap { d =>
+        Option(new java.io.File(s"$root/$d").listFiles()).getOrElse(Array.empty)
           .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
       }.sorted.mkString("|")
-    // the DATA files the manifests list participate too (r20 ADVICE):
-    // their parquet FOOTERS feed the exported manifests' row counts,
-    // so a file rewritten in place (same listing, new content) must
-    // re-export — fold (length, mtime) of every listed file in
-    val dataSig = Option(new java.io.File(s"$root/_manifests").listFiles())
-      .getOrElse(Array.empty).filter(_.getName.matches("v\\d+\\.txt"))
-      .flatMap(f => readManifest(root,
-        f.getName.stripPrefix("v").stripSuffix(".txt").toInt))
-      .distinct.sorted
+    val data = versions.flatMap(v => readManifest(root, v)).distinct.sorted
       .map { p => val f = new java.io.File(p)
              s"$p:${f.length}:${f.lastModified}" }
       .mkString("|")
-    val key = (root, s"$chainSig||$dataSig")
-    val path = icebergExportMemo.getOrElseUpdate(key,
-      exportIcebergMetadataUncached(root))
-    // a same-JVM cleanup of the _iceberg output dir must not be served
-    // the stale memoized path (r20 ADVICE) — re-export when absent
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) path
-    else {
-      val fresh = exportIcebergMetadataUncached(root)
-      icebergExportMemo.update(key, fresh)
-      fresh
-    }
+    s"$listing||$data"
   }
+
+  /** An export's memoized output path is served only while it exists:
+    * a same-JVM cleanup of the output dir re-exports (r20 ADVICE). */
+  private def exported(path: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
 
   private def exportIcebergMetadataUncached(root: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption => C}
@@ -2344,9 +2310,6 @@ object Scans {
     metaPath.toString
   }
 
-  private val icebergDeleteExportMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   /** Export the merge-on-read fixture's v3 as an Iceberg v2 snapshot
     * whose delete state travels as POSITIONAL-DELETE manifests
     * (VERDICT r19 Missing #4 — the `content=deletes` arm the format
@@ -2365,17 +2328,14 @@ object Scans {
     *      manifest + a manifest list carrying BOTH records
     *      ([[graft.sources.AvroManifest.writeSnapshotManifestsWithDeletes]]).
     *
-    * Memoized per (fixture chain, sidecar state); the output dir is
-    * swept before a re-export so a shrunk fixture leaves no orphan
-    * delete files. Returns the manifest-list path. */
+    * Memoized per (data files, sidecar state) and re-exported when the
+    * output is gone; the output dir is swept before a re-export so a
+    * shrunk fixture leaves no orphan delete files. Returns the
+    * manifest-list path. */
   def exportIcebergDeleteSnapshot(s: org.apache.spark.sql.SparkSession,
                                   root: String): String = {
-    val sig = (readManifest(root, 3).sorted ++
-      Option(new java.io.File(s"$root/_deletes/v3").listFiles())
-        .getOrElse(Array.empty)
-        .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted)
-      .mkString("|")
-    icebergDeleteExportMemo.getOrElseUpdate((root, sig), {
+    graft.Tables.once("iceberg_delete_export", root,
+        exportStamp(root, Seq("_deletes/v3"), Seq(3)), exported) {
       val outDir = java.nio.file.Paths.get(root, "_iceberg_del")
       java.nio.file.Files.createDirectories(outDir)
       val out = outDir.toString
@@ -2434,11 +2394,8 @@ object Scans {
         graft.sources.AvroManifest.DataFileMeta(p, "AVRO", n, sz, 3L) }
       graft.sources.AvroManifest.writeSnapshotManifestsWithDeletes(
         outDir, 3L, dataMetas, delMetas, s"$root#delsnap-3").toString
-    })
+    }
   }
-
-  private val icebergEqDeleteExportMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
   /** The EQUALITY-delete twin of [[exportIcebergDeleteSnapshot]] (the
     * spec's other delete-file kind, completing the v2 delete matrix):
@@ -2452,12 +2409,8 @@ object Scans {
     * format. Returns the manifest-list path. */
   def exportIcebergEqualityDeleteSnapshot(
       s: org.apache.spark.sql.SparkSession, root: String): String = {
-    val sig = (readManifest(root, 3).sorted ++
-      Option(new java.io.File(s"$root/_deletes/v3").listFiles())
-        .getOrElse(Array.empty)
-        .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted)
-      .mkString("|")
-    icebergEqDeleteExportMemo.getOrElseUpdate((root, sig), {
+    graft.Tables.once("iceberg_eqdelete_export", root,
+        exportStamp(root, Seq("_deletes/v3"), Seq(3)), exported) {
       val outDir = java.nio.file.Paths.get(root, "_iceberg_eqdel")
       java.nio.file.Files.createDirectories(outDir)
       val out = outDir.toString
@@ -2494,11 +2447,8 @@ object Scans {
           equalityIds = Seq(1)) }
       graft.sources.AvroManifest.writeSnapshotManifestsWithDeletes(
         outDir, 3L, dataMetas, delMetas, s"$root#eqdelsnap-3").toString
-    })
+    }
   }
-
-  private val icebergMixDeleteExportMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
   /** The MIXED delete snapshot — the state a long-lived v2 table
     * actually reaches (equality deletes from streaming upserts,
@@ -2511,12 +2461,8 @@ object Scans {
     * exactly what the lane's oracle catches. */
   def exportIcebergMixedDeleteSnapshot(
       s: org.apache.spark.sql.SparkSession, root: String): String = {
-    val sig = (readManifest(root, 3).sorted ++
-      Option(new java.io.File(s"$root/_deletes/v3").listFiles())
-        .getOrElse(Array.empty)
-        .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted)
-      .mkString("|")
-    icebergMixDeleteExportMemo.getOrElseUpdate((root, sig), {
+    graft.Tables.once("iceberg_mixdelete_export", root,
+        exportStamp(root, Seq("_deletes/v3"), Seq(3)), exported) {
       val outDir = java.nio.file.Paths.get(root, "_iceberg_mixdel")
       java.nio.file.Files.createDirectories(outDir)
       val out = outDir.toString
@@ -2598,7 +2544,7 @@ object Scans {
       graft.sources.AvroManifest.writeSnapshotManifestsMixed(
         outDir, 3L, dataMetas, posMetas, eqMetas,
         s"$root#mixdelsnap-3").toString
-    })
+    }
   }
 
   /** scan_delta_export's pinned commit stamps: v1 = the base write,
@@ -2722,7 +2668,7 @@ object Scans {
     * expiry, plus pinned commit stamps. Memoized per fixture sig. */
   def deltaFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = scratch(dir, "delta_export")
-    ttMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "delta_export", s"$dir/orders.parquet") {
       retentionBuild(s, dir, root)
       DeltaCommitTs.foreach { case (v, ts) => writeCommitTs(root, v, ts) }
       // export ONCE under the fixture memo (review catch): the three
@@ -2731,7 +2677,7 @@ object Scans {
       // DeltaExportSpec still drives exportDeltaLog directly for the
       // idempotency claim
       exportDeltaLog(root)
-    })
+    }
     root
   }
 
@@ -3098,9 +3044,6 @@ object Scans {
     doomed
   }
 
-  private val wapMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** The write-audit-publish table feeding scan_branch_wap: v1/v2 as
     * in the time-travel table with branches `main` and `audit` both
     * at v2; the o_orderkey%10==0 slice is then staged ON `audit`
@@ -3110,7 +3053,7 @@ object Scans {
     * state). */
   def wapFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = scratch(dir, "branch_wap")
-    wapMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "branch_wap", s"$dir/orders.parquet") {
       evolutionBase(s, dir, root)
       createBranch(root, "main", 2)
       createBranch(root, "audit", 2)
@@ -3120,12 +3063,9 @@ object Scans {
       commitOnBranch(s, root, "audit", slice, "a3")
       writeTag(root, "prepublish", resolveBranch(root, "main"))
       publishBranch(root, "audit", "main")
-    })
+    }
     root
   }
-
-  private val pickMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** The diverged-branches table feeding scan_branch_cherrypick:
     * main and audit both fork at v2 (frozen under the `fork` tag);
@@ -3138,7 +3078,7 @@ object Scans {
   def cherrypickFixture(s: org.apache.spark.sql.SparkSession,
                         dir: String): String = {
     val root = scratch(dir, "branch_cp")
-    pickMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "branch_cp", s"$dir/orders.parquet") {
       evolutionBase(s, dir, root)
       createBranch(root, "main", 2)
       createBranch(root, "audit", 2)
@@ -3149,12 +3089,9 @@ object Scans {
       commitOnBranch(s, root, "audit", slice(0), "a3")
       commitOnBranch(s, root, "main", slice(1), "m4")
       cherryPick(root, "audit", "main", "fork")
-    })
+    }
     root
   }
-
-  private val bvMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** The vacuumed branched table feeding scan_branch_vacuum: v1/v2
     * with tag `release`→v1 and `main`→v2; `audit` stages the %10
@@ -3167,7 +3104,7 @@ object Scans {
   def branchVacuumFixture(s: org.apache.spark.sql.SparkSession,
                           dir: String): String = {
     val root = scratch(dir, "branch_vac")
-    bvMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "branch_vac", s"$dir/orders.parquet") {
       evolutionBase(s, dir, root)
       createBranch(root, "main", 2)
       writeTag(root, "release", 1)
@@ -3180,12 +3117,9 @@ object Scans {
       ttWriteManifest(root, 4, f4)
       createBranch(root, "audit", 4)
       branchVacuum(root)
-    })
+    }
     root
   }
-
-  private val tagMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** The tagged table feeding scan_snapshot_tag: the time-travel
     * fixture plus three tag writes — "audit" pinned at v1, "prod"
@@ -3195,11 +3129,11 @@ object Scans {
     * query execution raced concurrent readers of `_tags/prod.txt`). */
   def tagFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = timeTravelFixture(s, dir)
-    tagMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "time_travel_tags", s"$dir/orders.parquet") {
       writeTag(root, "audit", 1)
       writeTag(root, "prod", 1)
       writeTag(root, "prod", 2) // retarget: promote v2 to prod
-    })
+    }
     root
   }
 
@@ -3259,9 +3193,6 @@ object Scans {
     ttWriteManifest(root, 3, v2files ++ f3)
   }
 
-  private val dvMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** The merge-on-read DELETE table feeding scan_delete_vectors:
     * v1/v2 the usual two commits, then v3 deletes the o_orderkey%7
     * slice WITHOUT touching a data file — the commit writes (a) a
@@ -3274,18 +3205,15 @@ object Scans {
     * compaction rewrites. Built once per (JVM, fixture state). */
   def deleteVectorFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = scratch(dir, "time_travel_dv")
-    dvMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "time_travel_dv", s"$dir/orders.parquet") {
       evolutionBase(s, dir, root)
       ttWriteManifest(root, 3, readManifest(root, 2))
       orders(s, dir).where(col("o_orderkey") % 7 === 0)
         .select(col("o_orderkey"))
         .write.mode("overwrite").parquet(s"$root/_deletes/v3")
-    })
+    }
     root
   }
-
-  private val cpMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** The compaction table feeding scan_snapshot_compact: v1/v2 the
     * usual two commits, v3 the merge-on-read DELETE (equality-delete
@@ -3299,7 +3227,7 @@ object Scans {
     * state). */
   def compactionFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = scratch(dir, "time_travel_cp")
-    cpMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "time_travel_cp", s"$dir/orders.parquet") {
       evolutionBase(s, dir, root)
       ttWriteManifest(root, 3, readManifest(root, 2))
       orders(s, dir).where(col("o_orderkey") % 7 === 0)
@@ -3307,12 +3235,9 @@ object Scans {
         .write.mode("overwrite").parquet(s"$root/_deletes/v3")
       val f4 = ttCommit(snapshotRead(s, root, 3), root, "c4")
       ttWriteManifest(root, 4, f4)
-    })
+    }
     root
   }
-
-  private val rbMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** The rollback table feeding scan_snapshot_rollback: v1/v2 as in
     * the time-travel table, then v3 RESTORES v1 — its manifest is
@@ -3322,23 +3247,20 @@ object Scans {
     * Built once per (JVM, fixture state). */
   def rollbackFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = scratch(dir, "time_travel_rb")
-    rbMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "time_travel_rb", s"$dir/orders.parquet") {
       evolutionBase(s, dir, root)
       ttWriteManifest(root, 3, readManifest(root, 1))
-    })
+    }
     root
   }
-
-  private val evoMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** The schema-evolution table feeding scan_snapshot_evolution.
     * Built once per (JVM, fixture state). */
   def evolutionFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = scratch(dir, "time_travel_evo")
-    evoMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "time_travel_evo", s"$dir/orders.parquet") {
       evolutionBuild(s, dir, root)
-    })
+    }
     root
   }
 
@@ -3348,7 +3270,7 @@ object Scans {
     * files. Built once per (JVM, fixture state). */
   def timeTravelFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = scratch(dir, "time_travel")
-    ttMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "time_travel", s"$dir/orders.parquet") {
       val cutoff = lit(TimeTravelCutoff).cast("timestamp")
       val o = orders(s, dir).select("o_orderkey", "o_orderdate", "o_totalprice")
       ttInitDirs(root)
@@ -3357,7 +3279,7 @@ object Scans {
       ttWriteManifest(root, 1, f1)
       ttWriteManifest(root, 2, f1 ++ f2)
       TimeTravelCommitTs.foreach { case (v, ts) => writeCommitTs(root, v, ts) }
-    })
+    }
     root
   }
 
@@ -3427,19 +3349,16 @@ object Scans {
     }
   }
 
-  private val retMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** The post-VACUUM table feeding scan_retention_vacuum: the
     * three-version fixture with v1/v2 expired — only the compacted v3
     * snapshot (and its files) survive. Built once per (JVM, fixture
     * state). */
   def retentionFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = scratch(dir, "time_travel_ret")
-    retMemo.getOrElseUpdate(s"$root|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "time_travel_ret", s"$dir/orders.parquet") {
       retentionBuild(s, dir, root)
       expireVersions(root, Seq(1, 2))
-    })
+    }
     root
   }
 
@@ -3506,8 +3425,7 @@ object Scans {
     * session settings). */
   def framedFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_src")
-    framedMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_src", s"$dir/events.parquet") {
         import graft.sources.FramedFormat._
         // clear any prior state first: per-file overwrite alone would
         // leave a stale part file behind if a regeneration produces an
@@ -3552,14 +3470,9 @@ object Scans {
             }
           }
         }
-      })
+      }
     out
   }
-
-  /** Once-per-(JVM, source-state) guard for the single-large-file
-    * indexed fixture feeding `source_framed_split`. */
-  private val framedSplitMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Write (once per JVM + source state) the events extract as ONE
     * frame file through the DSv2 writer, with a dense FrameIndex
@@ -3568,8 +3481,7 @@ object Scans {
     * so the shared extract oracle applies. */
   def framedSplitFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_split_src")
-    framedSplitMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_split_src", s"$dir/events.parquet") {
         events(s, dir).select(
             col("event_id"), col("event_type"), col("value"),
             when(col("event_id") % 5 === 0, array().cast("array<bigint>"))
@@ -3579,14 +3491,9 @@ object Scans {
           .write.format("graft.sources.FramedSource")
           .option("indexBlockBytes", (8L * 1024).toString)
           .mode("overwrite").save(out)
-      })
+      }
     out
   }
-
-  /** Once-per-(JVM, source-state) guard for the event_id-SORTED
-    * indexed fixture feeding `source_framed_stats_skip`. */
-  private val framedStatsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Write (once per JVM + source state) the events extract as ONE
     * frame file SORTED by event_id — the layout that gives the v3
@@ -3598,8 +3505,7 @@ object Scans {
     * [[framedFixture]], so the shared extract oracle applies. */
   def framedStatsFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_stats_src")
-    framedStatsMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_stats_src", s"$dir/events.parquet") {
         events(s, dir).select(
             col("event_id"), col("event_type"), col("value"),
             when(col("event_id") % 5 === 0, array().cast("array<bigint>"))
@@ -3610,14 +3516,9 @@ object Scans {
           .write.format("graft.sources.FramedSource")
           .option("indexBlockBytes", (8L * 1024).toString)
           .mode("overwrite").save(out)
-      })
+      }
     out
   }
-
-  /** Once-per-(JVM, source-state) guard for the BARE (sidecar-less)
-    * single-file fixture feeding `source_framed_backfill`. */
-  private val framedBareMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Write (once per JVM + source state) the events extract as ONE
     * bare `.frames` file WITHOUT the DSv2 sink — no sidecar, the
@@ -3626,8 +3527,7 @@ object Scans {
     * shared extract oracle applies. */
   def framedBareFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_bare_src")
-    framedBareMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_bare_src", s"$dir/events.parquet") {
         import graft.sources.FramedFormat._
         val outP = new org.apache.hadoop.fs.Path(out)
         outP.getFileSystem(s.sparkContext.hadoopConfiguration).delete(outP, true)
@@ -3666,14 +3566,9 @@ object Scans {
               }
             }
           }
-      })
+      }
     out
   }
-
-  /** Once-per-(JVM, source-state) guard for the single-large-file
-    * BLOCK-COMPRESSED fixture feeding `source_framed_split_gz`. */
-  private val framedSplitGzMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Write (once per JVM + source state) the events extract as ONE
     * block-compressed gz frame file through the DSv2 writer: each
@@ -3684,8 +3579,7 @@ object Scans {
     * oracle applies. */
   def framedSplitGzFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_split_gz_src")
-    framedSplitGzMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_split_gz_src", s"$dir/events.parquet") {
         events(s, dir).select(
             col("event_id"), col("event_type"), col("value"),
             when(col("event_id") % 5 === 0, array().cast("array<bigint>"))
@@ -3696,14 +3590,9 @@ object Scans {
           .option("compression", "gzip")
           .option("indexBlockBytes", (8L * 1024).toString)
           .mode("overwrite").save(out)
-      })
+      }
     out
   }
-
-  /** Once-per-(JVM, source-state) guard for the pulse-series fixture
-    * feeding `source_framed_pulses`. */
-  private val framedPulsesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Write (once per JVM + source state) the pulse-series fixture: each
     * event's `pulses` is array<struct<t:bigint, q:double>> with the
@@ -3713,8 +3602,7 @@ object Scans {
     * through the DSv2 writer (tag-4 encode), read back by the query. */
   def framedPulsesFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_pulses_src")
-    framedPulsesMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_pulses_src", s"$dir/events.parquet") {
         events(s, dir).select(
             col("event_id"), col("event_type"),
             when(col("event_id") % 5 === 0,
@@ -3726,14 +3614,9 @@ object Scans {
           .repartition(FramedFixtureParts, col("event_id"))
           .write.format("graft.sources.FramedSource")
           .mode("overwrite").save(out)
-      })
+      }
     out
   }
-
-  /** Once-per-(JVM, source-state) guard for the event-header fixture
-    * feeding `source_framed_header`. */
-  private val framedHeaderMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Write (once per JVM + source state) the event-header fixture:
     * each event carries ONE scalar record
@@ -3744,8 +3627,7 @@ object Scans {
     * encode), read back by the query with `sub` pruned away. */
   def framedHeaderFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_header_src")
-    framedHeaderMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_header_src", s"$dir/events.parquet") {
         events(s, dir).select(
             col("event_id"),
             struct((col("event_id") % 97).as("run"),
@@ -3755,15 +3637,12 @@ object Scans {
           .repartition(FramedFixtureParts, col("event_id"))
           .write.format("graft.sources.FramedSource")
           .mode("overwrite").save(out)
-      })
+      }
     out
   }
 
   /** Once-per-(JVM, source-state) guard for the Q/P sub-event fixture
     * feeding `source_framed_subevents`. */
-  private val framedSubMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** Write (once per JVM + source state) the Q/P hierarchy fixture:
     * each Q-frame event carries `subevents
     * array<struct<sub_id:bigint, q:double>>` — its P frames — with
@@ -3772,8 +3651,7 @@ object Scans {
     * 0.25·i. Written through the DSv2 writer (tag-4 encode). */
   def framedSubeventsFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_sub_src")
-    framedSubMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "framed_sub_src", s"$dir/events.parquet") {
         events(s, dir).select(
             col("event_id"), col("event_type"),
             when(col("event_id") % 3 === 0,
@@ -3785,14 +3663,9 @@ object Scans {
           .repartition(FramedFixtureParts, col("event_id"))
           .write.format("graft.sources.FramedSource")
           .mode("overwrite").save(out)
-      })
+      }
     out
   }
-
-  /** Once-per-(JVM, source-state) guard for the framed DOCUMENTS
-    * fixture feeding `pipeline_framed_e2e`. */
-  private val framedDocsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Write (once per JVM + source state) the documents corpus through
     * the framed DSv2 sink — the R1 extract posture for TEXT: the LLM
@@ -3801,21 +3674,15 @@ object Scans {
     * n_chars) so the e2e plan's parser-level pruning is observable. */
   def framedDocsFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "framed_docs_src")
-    framedDocsMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/documents.parquet")}", {
+    graft.Tables.once(s, "framed_docs_src", s"$dir/documents.parquet") {
         graft.Tables.documents(s, dir)
           .select("doc_id", "lang", "source", "n_chars", "text")
           .repartition(FramedFixtureParts, col("doc_id"))
           .write.format("graft.sources.FramedSource")
           .mode("overwrite").save(out)
-      })
+      }
     out
   }
-
-  /** Once-per-(JVM, source-state) guard for the gz-compressed framed
-    * fixture feeding `source_framed_extract_gz`. */
-  private val framedGzMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Compressed per-file copy of [[framedFixture]] (the `.i3.gz/.bz2/
     * .zst` analog): same frames, whole-file compressed with an
@@ -3833,8 +3700,7 @@ object Scans {
       wrap: java.io.OutputStream => java.io.OutputStream): String = {
     val src = framedFixture(s, dir)
     val out = scratch(dir, s"framed_src_$ext")
-    framedGzMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, s"framed_src_$ext", s"$dir/events.parquet") {
         val conf = s.sparkContext.hadoopConfiguration
         val outP = new org.apache.hadoop.fs.Path(out)
         val fs = outP.getFileSystem(conf)
@@ -3851,7 +3717,7 @@ object Scans {
             while (n >= 0) { if (n > 0) o.write(buf, 0, n); n = in.read(buf) }
           } finally { in.close(); o.close() }
         }
-      })
+      }
     out
   }
 
@@ -3883,12 +3749,6 @@ object Scans {
       o => new org.apache.commons.compress.compressors.bzip2
         .BZip2CompressorOutputStream(o))
 
-  /** Once-per-(JVM, source-state) guard for the category layout +
-    * persisted index feeding `scan_categ_index_persisted` and
-    * `scan_categ_index_stats`. */
-  private val categIndexMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** Build (once per JVM + source state) the category-partitioned
     * events layout plus its persisted `_index` parquet, and return the
     * index path. The layout is range-clustered on (event_type,
@@ -3903,14 +3763,13 @@ object Scans {
   def categIndexBuild(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "categ_layout")
     val idxPath = s"$out/_index"
-    categIndexMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "categ_layout", s"$dir/events.parquet") {
         events(s, dir)
           .select("event_id", "event_type", "value")
           .repartitionByRange(16, col("event_type"), col("event_id"))
           .write.mode("overwrite").partitionBy("event_type").parquet(out)
         categIndexWrite(s, out, idxPath)
-      })
+      }
     idxPath
   }
 
@@ -4069,11 +3928,6 @@ object Scans {
     fresh.map(_._3)
   }
 
-  /** Once-per-(JVM, source-state) guard for the append-cycle layout
-    * feeding `scan_categ_index_append`. */
-  private val categAppendMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** Build (once per JVM + source state) the append-cycle layout: the
     * archived season (event_id % 10 < 8) is written and fully indexed
     * first; then the NEW run (event_id % 10 ≥ 8) lands as an
@@ -4084,8 +3938,7 @@ object Scans {
   def categIndexAppendBuild(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "categ_append_layout")
     val idxPath = s"$out/_index"
-    categAppendMemo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "categ_append_layout", s"$dir/events.parquet") {
         val ev = events(s, dir).select("event_id", "event_type", "value")
         ev.where(col("event_id") % 10 < 8)
           .repartitionByRange(16, col("event_type"), col("event_id"))
@@ -4095,14 +3948,9 @@ object Scans {
           .repartitionByRange(4, col("event_type"), col("event_id"))
           .write.mode("append").partitionBy("event_type").parquet(out)
         categIndexAppend(s, out, idxPath)
-      })
+      }
     idxPath
   }
-
-  /** Once-per-(JVM, source-state) guard for the TWO-LEVEL category
-    * layout + index feeding `scan_categ_index_multilevel`. */
-  private val categIndex2Memo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Build (once per JVM + source state) the two-level category layout
     * — event_type (level 1) nesting user bucket = user_id % 4 (level
@@ -4117,8 +3965,7 @@ object Scans {
   def categIndex2Build(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val out = scratch(dir, "categ2_layout")
     val idxPath = s"$out/_index"
-    categIndex2Memo.getOrElseUpdate(
-      s"$out|${graft.Tables.fsSig(s, s"$dir/events.parquet")}", {
+    graft.Tables.once(s, "categ2_layout", s"$dir/events.parquet") {
         events(s, dir)
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
           .withColumn("bucket", col("user_id") % 4)
@@ -4147,7 +3994,7 @@ object Scans {
         import s.implicits._
         rows.toDF("category", "bucket", "file", "n_rows", "id_min", "id_max")
           .coalesce(1).write.mode("overwrite").parquet(idxPath)
-      })
+      }
     idxPath
   }
 
@@ -4157,11 +4004,15 @@ object Scans {
     * manifest maintained on write would contain; deriving it from
     * footers keeps the demo self-contained while costing metadata, not
     * data. Files whose row groups carry no stats for the key are kept
-    * (can't prove they don't overlap); empty files are skipped. */
+    * (can't prove they don't overlap); empty files are skipped. Built
+    * once per (table path, key column, table state) and consulted by
+    * every later probe — the Delta/Iceberg shape where data-skipping
+    * stats persist WITH the table instead of being recomputed per
+    * query. */
   def footerManifest(s: org.apache.spark.sql.SparkSession, path: String,
                      keyCol: String): Seq[(String, Long, Long)] = {
     val conf = s.sparkContext.hadoopConfiguration
-    manifestMemo.getOrElseUpdate((path, graft.Tables.fsSig(s, path)), {
+    graft.Tables.once(s, s"footer_manifest:$keyCol", path) {
       import scala.jdk.CollectionConverters._
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(conf)
@@ -4185,7 +4036,7 @@ object Scans {
               stats.map(_.genericGetMax.asInstanceOf[Number].longValue).max))
           } finally r.close()
         }
-    })
+    }
   }
 
   /** Files whose [min, max] for `keyCol` overlaps [lo, hi], per the

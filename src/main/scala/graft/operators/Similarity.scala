@@ -136,15 +136,7 @@ object Similarity {
     * instead of running a quadratic join — production swaps in
     * [[knnGraphNnDescent]] (linear candidates per round). The SEARCH
     * side (beam expansion below) is blocking-agnostic. */
-  def knnGraph(emb: DataFrame): DataFrame =
-    // r22: same cap-bounded-build posture as the NND arm — per-block
-    // volumes are gated at KnnBuildGate by the probe below, the block
-    // join's build side is corpus-scan-backed (honest stats, broadcast
-    // by estimate at any gated size), so adaptive replanning has
-    // nothing to decide and only adds its per-exchange stage jobs
-    graft.Tables.withAqeOff(emb.sparkSession) { knnGraphBody(emb) }
-
-  private def knnGraphBody(emb: DataFrame): DataFrame = {
+  def knnGraph(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the gate probe is one tiny aggregate over the build input —
     // build-is-the-op state, paid once under the graph memo. The two
@@ -241,7 +233,7 @@ object Similarity {
     // kept), the scoring joins are broadcast-by-estimate at any SF and
     // key-capped at scale, so adaptive replanning buys nothing here —
     // but it charged one job per exchange: 26 jobs / 3.50 s per build
-    // with AQE on vs 9 jobs / 2.40 s off (Opt22Probe, sf0.1 median).
+    // with AQE on vs 9 jobs / 2.40 s off (OPTIMIZATION_r22.md, sf0.1 median).
     // It also defeats the lazy checkpoints below (execute() under AQE
     // materializes every stage eagerly at checkpoint-call time).
     graft.Tables.withAqeOff(emb.sparkSession) {
@@ -316,7 +308,7 @@ object Similarity {
               fround(cosine(col("va"), col("vb")), 4).as("cos"))
     // EAGER checkpoints kept (r22, measured): the lazy form
     // (eager=false) collapses the build to ~5 jobs but runs ~1.9 s
-    // SLOWER (Opt22Probe 4.26 vs 2.40 s median, AQE off) — the next
+    // SLOWER (OPTIMIZATION_r22.md: 4.26 vs 2.40 s median, AQE off) — the next
     // round's map stages each reference this round's blocks from
     // concurrent stages and serialize on the block-compute locks,
     // where the eager barrier materializes once with full parallelism
@@ -481,20 +473,16 @@ object Similarity {
   /** The append lane's patched graph through the per-(application,
     * fixture) memo: the BASE build (on the pre-append corpus) and the
     * patch are both index state — queries pay search only. */
-  private val nndAppendMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
   def nndAppendGraphCached(s: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame =
-    nndAppendMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId,
-       "nnda:" + graft.Tables.fsSig(s, s"$dir/embeddings.parquet")), {
+    graft.Tables.memo(s, "nnd_append", s"$dir/embeddings.parquet") {
         val all = embeddings(s, dir)
         val base = all.where(col("vec_id") % NndAppendMod =!= NndAppendMod - 1)
         val newV = all.where(col("vec_id") % NndAppendMod === NndAppendMod - 1)
         nndInsertGraph(all, base,
           knnGraphNnDescentScored(base).localCheckpoint(), newV)
           .localCheckpoint()
-      })
+    }
 
   /** Tombstone fraction above which [[compactNndGraph]] agrees to
     * rebuild: below it the lazy-tombstone lane is the right answer
@@ -534,41 +522,25 @@ object Similarity {
   /** The compacted graph through the per-(application, fixture) memo
     * — like every index build, compaction is paid once; queries pay
     * search only. */
-  private val nndCompactMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
   def nndCompactedGraphCached(s: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame =
-    nndCompactMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId,
-       "nndcp:" + graft.Tables.fsSig(s, s"$dir/embeddings.parquet")),
+    graft.Tables.memo(s, "nnd_compact", s"$dir/embeddings.parquet")(
       compactNndGraph(embeddings(s, dir),
         col("vec_id") % NndDeleteMod === 3).localCheckpoint())
 
-  /** [[knnGraphNnDescent]] through the per-fixture memo (the
-    * graphMemo convention — the build is index state, queries pay
-    * search only). */
-  private val nndMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  /** [[knnGraphNnDescent]] through the artifact memo — the build is
+    * index state, queries pay search only. */
   def nndGraphCached(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    nndMemo.getOrElseUpdate(
-      // keyed by (applicationId, sig) like pcaCovCached: a
-      // localCheckpoint's blocks die with the SparkContext, so a
-      // same-JVM later session must not be served the stale handle
-      (s.sparkContext.applicationId,
-       "nnd:" + graft.Tables.fsSig(s, s"$dir/embeddings.parquet")),
+    graft.Tables.memo(s, "nnd", s"$dir/embeddings.parquet")(
       knnGraphNnDescent(embeddings(s, dir)).localCheckpoint())
 
-  /** Built graphs memoized per fixture signature (the ivfMemo
-    * convention): the graph is index BUILD state — queries against it
-    * (sim_ann_graph, the recall report) pay the search, not a
-    * rebuild. localCheckpoint keeps the edge list (≤ 2M per vector —
-    * metadata-scale next to the embeddings) off the iterative plan. */
-  private val graphMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  /** Built graphs through the artifact memo: the graph is index BUILD
+    * state — queries against it (sim_ann_graph, the recall report) pay
+    * the search, not a rebuild. localCheckpoint keeps the edge list
+    * (≤ 2M per vector — metadata-scale next to the embeddings) off the
+    * iterative plan. */
   def knnGraphCached(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    graphMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId,
-       graft.Tables.fsSig(s, s"$dir/embeddings.parquet")),
+    graft.Tables.memo(s, "knn_graph", s"$dir/embeddings.parquet")(
       knnGraph(embeddings(s, dir)).localCheckpoint())
 
   /** HNSW-CLASS BEAM SEARCH over the neighbor graph (VERDICT r16
@@ -594,23 +566,16 @@ object Similarity {
     * sim_ann_graph_nnd_recall — and a production system certifies the
     * SAME answer it serves, so the walk is session state exactly like
     * the index builds above (the lpaLabelsCached convention; ≤ k rows
-    * retained). Keyed by (applicationId, fixture sig, k); the delete/
-    * pq/batch lanes run different walks and stay un-memoized. */
-  private val beamMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
+    * retained). `k` is part of the artifact name; the delete/pq/batch
+    * lanes run different walks and stay un-memoized. */
   def graphBeamTopKCached(s: org.apache.spark.sql.SparkSession, dir: String,
                           k: Int): DataFrame =
-    beamMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId,
-       s"beam:$k:" + graft.Tables.fsSig(s, s"$dir/embeddings.parquet")),
+    graft.Tables.memo(s, s"beam:$k", s"$dir/embeddings.parquet")(
       graphBeamTopK(s, dir, k).localCheckpoint())
 
   def nndBeamTopKCached(s: org.apache.spark.sql.SparkSession, dir: String,
                         k: Int): DataFrame =
-    beamMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId,
-       s"nndbeam:$k:" + graft.Tables.fsSig(s, s"$dir/embeddings.parquet")),
+    graft.Tables.memo(s, s"nndbeam:$k", s"$dir/embeddings.parquet")(
       graphBeamSearch(embeddings(s, dir), nndGraphCached(s, dir), k)
         .localCheckpoint())
 
@@ -629,7 +594,7 @@ object Similarity {
     // rows, frontier ≤ beam·degree, every join broadcast-hinted) — AQE
     // charged ~5 stage-jobs per round for replanning it can never
     // improve; off, each round is its collect plus the one frontier
-    // broadcast build (Opt22Probe: build+walk 35 jobs → measured below)
+    // broadcast build (OPTIMIZATION_r22.md: build+walk 35 jobs → measured below)
     graft.Tables.withAqeOff(e.sparkSession) {
       graphBeamSearchBody(e, graph, k, queryVecId, earlyExit, tombstoned)
     }

@@ -275,25 +275,18 @@ object TextOps {
            fround(dsum6(col("lp")) / count(lit(1)), 4).as("avg_logprob"))
   }
 
-  /** [[lmScores]] on the fixture through the per-(application,
-    * fixture) memo — r21, the pairsMemo convention: text_lm_score
-    * (the dump), text_quality_buckets (the CCNet triage — which also
+  /** [[lmScores]] on the fixture through the artifact memo — r21:
+    * text_lm_score (the dump), text_quality_buckets (the CCNet triage
+    * — which also
     * reads the table twice, for cuts and bucketing) and
     * sample_curriculum (difficulty ranking) all consume the SAME
     * per-doc unigram-LM score table; a production pipeline scores the
     * corpus once and feeds every consumer off the artifact.
     * Entity-scale retention (one narrow row per doc). */
-  private val lmScoresMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   def lmScoresCached(s: org.apache.spark.sql.SparkSession,
-                     dir: String): DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/documents.parquet")
-    graft.Tables.memoArtifact(lmScoresMemo,
-        s.sparkContext.applicationId, s"lmscores:$dir|", sig)(
-        graft.Tables.freeCheckpoints)(
+                     dir: String): DataFrame =
+    graft.Tables.memo(s, "lmscores", s"$dir/documents.parquet")(
       lmScores(documents(s, dir)).localCheckpoint())
-  }
 
   /** Winnowing selection over a (doc_id, text) frame → per doc the
     * sorted distinct selected keys (md5(gram) ‖ zero-padded inverted
@@ -365,7 +358,7 @@ object TextOps {
     // winnowFps already ends in a distinct. Dropped (one less
     // Exchange; filtered A/B flat within jitter). ALSO PROBED AND
     // REJECTED: creating the checkpoint inside an AQE-off scope DOES
-    // carry hash(fp) to every consumer (Opt22Probe: agg 1 → 0
+    // carry hash(fp) to every consumer (OPTIMIZATION_r22.md: agg 1 → 0
     // exchanges, self-join 2 → 1) but measured flat-to-worse — the
     // un-coalesced 32-partition materialization eats the saved
     // exchanges at fixture scale. At cluster scale the
@@ -386,26 +379,16 @@ object TextOps {
   }
 
   /** [[winnowPairs]] at the declared (MinWinnowShared, MaxWinnowFpDf)
-    * knobs through the per-(application, fixture) memo — r21, the
-    * pairsMemo/lpaLabelsCached convention: text_winnow_pairs and
+    * knobs through the artifact memo — r21: text_winnow_pairs and
     * text_winnow_clusters read the SAME pair list, and a production
     * pipeline computes it once and clusters the checkpoint (two
     * queries, one winnow+posting-index pass; family-sum attribution).
     * The retained frame is the qualifying PAIR list — sparse-graph
-    * scale, a few KB — keyed by applicationId + the documents
-    * fixture's content fingerprint (regenerated fixtures and restarted
-    * contexts rebuild instead of serving stale checkpoints). */
-  private val winnowPairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  def winnowPairsCached(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/documents.parquet")
-    graft.Tables.memoArtifact(winnowPairsMemo,
-        s.sparkContext.applicationId, s"winnow:$dir|", sig)(
-        graft.Tables.freeCheckpoints)(
+    * scale, a few KB. */
+  def winnowPairsCached(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.Tables.memo(s, "winnow", s"$dir/documents.parquet")(
       winnowPairs(documents(s, dir), MinWinnowShared, MaxWinnowFpDf)
         .localCheckpoint())
-  }
 
   /** Oracle mirror of [[winnowPairs]] — the full winnow-selection +
     * posting-index CTE chain ending in `sizes` (per-doc kept-fp
@@ -535,26 +518,18 @@ object TextOps {
   def bpeTrainOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     bpeTrainStates(docs)._1
 
-  /** [[bpeTrainStates]] on the fixture through the per-(application,
-    * fixture) memo — r21: text_bpe_train (the merge table) and
+  /** [[bpeTrainStates]] on the fixture through the artifact memo —
+    * r21: text_bpe_train (the merge table) and
     * text_bpe_pipeline (the train→apply compression readout) both run
     * the identical training rounds; one session evaluation serves
     * both (a production pipeline trains the tokenizer once). All
     * three frames are vocabulary-scale or smaller. */
-  private val bpeStatesMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (DataFrame, DataFrame, DataFrame)]
-
   def bpeTrainStatesCached(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val sig = graft.Tables.fsSig(s, s"$dir/documents.parquet")
-    graft.Tables.memoArtifact(bpeStatesMemo,
-        s.sparkContext.applicationId, s"bpe:$dir|", sig)(
-        t => { graft.Tables.freeCheckpoints(t._1)
-               graft.Tables.freeCheckpoints(t._3) }) {
+      : (DataFrame, DataFrame, DataFrame) =
+    graft.Tables.memo(s, "bpe", s"$dir/documents.parquet") {
         val (rounds, wc0, wcN) = bpeTrainStates(documents(s, dir))
         (rounds.localCheckpoint(), wc0, wcN.localCheckpoint())
-      }
-  }
+    }
 
   /** text_kneser_ney's whole pipeline on any (doc_id, lang, text)
     * frame — factored out so KneserNeySpec can plant a hand-computable
@@ -703,24 +678,17 @@ object TextOps {
   /** Per-(lang, word) corpus counts — the tokenizer-training artifact
     * text_wordpiece and text_unigram both start from (a real pipeline
     * materializes the word-count table once and trains every
-    * tokenizer off it), through the per-(application, fixture) memo —
-    * r21, the pairsMemo convention (one tokenize+aggregate per
-    * session, family-sum attribution). Retained frame: one row per
-    * (lang, word) — VOCABULARY-scale, never corpus-scale. */
-  private val wordCountsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
+    * tokenizer off it), through the artifact memo — r21 (one
+    * tokenize+aggregate per session, family-sum attribution).
+    * Retained frame: one row per (lang, word) — VOCABULARY-scale,
+    * never corpus-scale. */
   def wordCountsByLangCached(s: org.apache.spark.sql.SparkSession,
-                             dir: String): DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/documents.parquet")
-    graft.Tables.memoArtifact(wordCountsMemo,
-        s.sparkContext.applicationId, s"wcl:$dir|", sig)(
-        graft.Tables.freeCheckpoints)(
+                             dir: String): DataFrame =
+    graft.Tables.memo(s, "wcl", s"$dir/documents.parquet")(
       documents(s, dir)
         .select(col("lang"), explode(split(lower(trim(col("text"))), " ")).as("w"))
         .groupBy("lang", "w").agg(count(lit(1)).as("cnt"))
         .localCheckpoint())
-  }
 
   val queries: Map[String, Q] = Map(
     // Stopword scrubbing (the cleaning pass before tokenizer training):
@@ -1394,8 +1362,8 @@ object TextOps {
     }),
 
     // r21: the pair graph comes through winnowPairsCached — shared
-    // artifact state with text_winnow_pairs (pairsMemo convention),
-    // identical pair set and results.
+    // artifact state with text_winnow_pairs, identical pair set and
+    // results.
     "text_winnow_clusters" -> ((s, dir) =>
       graft.operators.Dedup.connectedComponents(
           winnowPairsCached(s, dir)

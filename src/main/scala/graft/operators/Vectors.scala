@@ -1067,23 +1067,14 @@ object Vectors {
       .limit(PcaSampleK)
       .select("vec_id", "embedding")
 
-  private val pcaMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.DataFrame]
-
   /** The PCA fit memoized per (application, fixture) — the
     * cooccurEdgesCached discipline: vec_pca_power IS the fit and
     * vec_pca_project consumes it, so the corpus covariance pass and
     * the 8-round iteration run once per session, whichever query
-    * lands first (family-sum attribution applies in BENCH). Keyed by
-    * applicationId (never reused, lifetime = the block manager's, so
-    * the localCheckpoint blocks it guards cannot outlive it) and the
-    * fixture's fsSig (driver regeneration self-invalidates). */
-  def pcaFitCached(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/embeddings.parquet")
-    pcaMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, s"$dir|$sig"),
+    * lands first (family-sum attribution applies in BENCH). */
+  def pcaFitCached(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    graft.Tables.memo(s, "pca_fit", s"$dir/embeddings.parquet")(
       pcaPowerOnCov(pcaCovCached(s, dir)).localCheckpoint())
-  }
 
   /** vec_outliers' whole computation on any (label, vec_id, embedding)
     * frame — factored out so PcaSpec can plant a cluster with a
@@ -1386,20 +1377,14 @@ object Vectors {
       .orderBy("dim")
   }
 
-  private val pcaCovMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.DataFrame]
-
   /** The corpus covariance memoized per (application, fixture) — the
     * ONE corpus pass every PCA query (top-1 fit, deflation fit,
     * explained variance) shares; everything downstream is d²-table
     * metadata work. */
   def pcaCovCached(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/embeddings.parquet")
-    pcaCovMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, s"$dir|$sig"),
+      : org.apache.spark.sql.DataFrame =
+    graft.Tables.memo(s, "pca_cov", s"$dir/embeddings.parquet")(
       pcaCovOf(embeddings(s, dir)).localCheckpoint())
-  }
 
   /** Components for the multi-component fit (VERDICT r17 Missing #4)
     * — a fixed contract like [[PcaIters]]; the oracle unrolls one
@@ -1487,19 +1472,13 @@ object Vectors {
       .orderBy("component", "dim")
   }
 
-  private val pcaTopKMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.DataFrame]
-
   /** The multi-component fit memoized per (application, fixture) —
     * the pcaFitCached discipline; vec_pca_topk IS the fit,
     * vec_pca_project_basis consumes it. */
   def pcaTopKCached(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    val sig = graft.Tables.fsSig(s, s"$dir/embeddings.parquet")
-    pcaTopKMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, s"$dir|$sig"),
+      : org.apache.spark.sql.DataFrame =
+    graft.Tables.memo(s, "pca_topk", s"$dir/embeddings.parquet")(
       pcaTopKOnCov(pcaCovCached(s, dir), PcaComponents).localCheckpoint())
-  }
 
   /** Johnson-Lindenstrauss geometry (vec_random_projection): 64 dims
     * → RpDim via a ±1 sign matrix seeded from md5("rp:j:k") hex-digit
@@ -1630,22 +1609,14 @@ object Vectors {
     }
   }
 
-  /** Per-(JVM, source-state) memo of the trained PQ codebooks + query
-    * subvectors — training is an index build, shared across runs. */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Array[Array[(Long, Array[Double])]], Array[Array[Double]])]
-
   /** Trained PQ codebooks (one per subspace; seeded init = the
     * PqCodes lowest vec_ids' subvectors, PqIters k-means rounds) and
-    * the query vector's subvectors. Only codebook-sized artifacts are
-    * ever collected. */
+    * the query vector's subvectors, through the artifact memo —
+    * training is an index build, shared across queries. Only
+    * codebook-sized artifacts are ever collected. */
   def pqPrelude(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Array[Array[(Long, Array[Double])]], Array[Array[Double]]) =
-    // (applicationId, sig) per the repo-wide memo convention (r19
-    // VERDICT #4); the held values are driver arrays, so this is
-    // consistency, not a checkpoint-liveness fix
-    pqMemo.getOrElseUpdate((s.sparkContext.applicationId,
-        graft.Tables.fsSig(s, s"$dir/embeddings.parquet")), {
+    graft.Tables.memo(s, "pq", s"$dir/embeddings.parquet") {
       val e = embeddings(s, dir)
       val initRows = e.where(col("vec_id") < PqCodes)
         .select(col("vec_id"), col("embedding"))
@@ -1664,17 +1635,7 @@ object Vectors {
       val qsubs = (0 until PqSubspaces)
         .map(j => qv.slice(j * PqSubDim, (j + 1) * PqSubDim)).toArray
       (books, qsubs)
-    })
-
-  /** OPQ-lite dimension permutation + codebooks (vec_opq): rank the 64
-    * dimensions by corpus variance and DEAL them round-robin across
-    * the PqSubspaces — the cheap structured stand-in for OPQ's learned
-    * rotation (Ge et al. 2013 §structured; balancing per-subspace
-    * variance is the rotation's main win on axis-skewed data). Returns
-    * the 1-based source index per output slot plus codebooks trained
-    * on the permuted vectors with the standard seeded-init Lloyd. */
-  private val opqMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Array[Int], Array[Array[(Long, Array[Double])]])]
+    }
 
   /** The permuted view of the corpus: `embedding` re-ordered by the
     * variance-balanced layout (already double-typed). */
@@ -1687,10 +1648,16 @@ object Vectors {
           i => element_at(col("ev"), element_at(permLit, i))).as("embedding"))
   }
 
+  /** OPQ-lite dimension permutation + codebooks (vec_opq): rank the 64
+    * dimensions by corpus variance and DEAL them round-robin across
+    * the PqSubspaces — the cheap structured stand-in for OPQ's learned
+    * rotation (Ge et al. 2013 §structured; balancing per-subspace
+    * variance is the rotation's main win on axis-skewed data). Returns
+    * the 1-based source index per output slot plus codebooks trained
+    * on the permuted vectors with the standard seeded-init Lloyd. */
   def opqPrelude(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Array[Int], Array[Array[(Long, Array[Double])]]) =
-    opqMemo.getOrElseUpdate((s.sparkContext.applicationId,
-        graft.Tables.fsSig(s, s"$dir/embeddings.parquet")), {
+    graft.Tables.memo(s, "opq", s"$dir/embeddings.parquet") {
       val e = embeddings(s, dir)
       // per-dimension variance numerator (n·var — ranking-equivalent),
       // fround6-pinned so both engines rank identically
@@ -1720,7 +1687,7 @@ object Vectors {
         }.toArray
       val books = (1 to PqIters).foldLeft(initBooks)((b, _) => pqLloydStepAll(pe, b))
       (perm, books)
-    })
+    }
 
   /** Per-row PQ reconstruction error Σ_j (min codeword distance)² —
     * the sqrt-then-square convention of [[pqAdist]] so the doubles
@@ -1733,46 +1700,35 @@ object Vectors {
       d * d
     }.reduce(_ + _)
 
-  /** Per-(JVM, source-state) memo of the trained centroids: training
-    * is an index-build (offline in production), so the two IVF queries
-    * share one trained artifact instead of re-running Lloyd. */
-  private val ivfMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Array[(Long, Array[Double])], Array[Float], Array[Long])]
-
   /** Shared IVF prelude: centroids Lloyd-trained from the seeded init
     * (the 8 lowest vec_ids), the query vector, and the 2 probe cells
     * nearest the query — all driver-side scalars (a #centroids×dim
     * collect per round, tiny at any corpus scale since nlist ≪
-    * corpus; the corpus itself never leaves the executors). */
+    * corpus; the corpus itself never leaves the executors). Training
+    * is an index build (offline in production), so the two IVF
+    * queries share one trained artifact through the artifact memo. */
   private def ivfPrelude(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Array[(Long, Array[Double])], Array[Float], Array[Long]) =
-    ivfMemo.getOrElseUpdate((s.sparkContext.applicationId,
-        graft.Tables.fsSig(s, s"$dir/embeddings.parquet")),
+    graft.Tables.memo(s, "ivf", s"$dir/embeddings.parquet")(
       ivfTrainProbe(embeddings(s, dir)))
 
-  /** The append-lane memo: centroids trained on the PRE-append corpus
+  /** The append lane's centroids: trained on the PRE-append corpus
     * only. Public so the spec can pin byte-identity against a manual
     * base-only training run. */
-  private val ivfAppendMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Array[(Long, Array[Double])], Array[Float], Array[Long])]
   def ivfAppendPrelude(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Array[(Long, Array[Double])], Array[Float], Array[Long]) =
-    ivfAppendMemo.getOrElseUpdate((s.sparkContext.applicationId,
-        graft.Tables.fsSig(s, s"$dir/embeddings.parquet")),
+    graft.Tables.memo(s, "ivf_append", s"$dir/embeddings.parquet")(
       ivfTrainProbe(embeddings(s, dir)
         .where(col("vec_id") % IvfAppendBatchMod =!= IvfAppendBatchMod - 1)))
 
-  /** SemDeDup centroid memo: the SemDedupK-means artifact, trained
-    * once per (JVM, source state) with the IVF recipe (seeded init =
-    * the SemDedupK lowest vec_ids, IvfLloydIters deterministic Lloyd
+  /** SemDeDup centroids: the SemDedupK-means artifact, trained once
+    * per source state with the IVF recipe (seeded init = the
+    * SemDedupK lowest vec_ids, IvfLloydIters deterministic Lloyd
     * rounds) — the clustering is infrastructure shared with the ANN
     * family, not a second algorithm. */
-  private val semMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Array[(Long, Array[Double])]]
   def semCentroids(s: org.apache.spark.sql.SparkSession, dir: String)
       : Array[(Long, Array[Double])] =
-    semMemo.getOrElseUpdate((s.sparkContext.applicationId,
-        graft.Tables.fsSig(s, s"$dir/embeddings.parquet")), {
+    graft.Tables.memo(s, "sem", s"$dir/embeddings.parquet") {
       val e = embeddings(s, dir)
       val init: Array[(Long, Array[Double])] = e.where(col("vec_id") < SemDedupK)
         .select(col("vec_id"), col("embedding"))
@@ -1780,7 +1736,7 @@ object Vectors {
         .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
         .sortBy(_._1)
       (1 to IvfLloydIters).foldLeft(init)((c, _) => lloydStep(e, c))
-    })
+    }
 
   /** Train + probe-select against whatever corpus view `e` is — the
     * body both memos share (full corpus for the base IVF family,

@@ -1011,7 +1011,7 @@ object Streams {
         .map("%02x".format(_)).mkString.take(12)
       val sink = graft.Tables.scratch(dir, s"framed_stream_sink_$sig")
       val ckpt = graft.Tables.scratch(dir, s"framed_stream_ckpt_$sig")
-      framedStreamMemo.getOrElseUpdate(sink, {
+      graft.Tables.once(s, "framed_stream", s"$dir/events.parquet") {
         // maxFilesPerTrigger bounds each micro-batch to 4 files; with
         // the source's native SupportsTriggerAvailableNow the 8-file
         // fixture drains in 2 bounded batches — the production cadence
@@ -1033,7 +1033,7 @@ object Streams {
             "stream_framed_extract: AvailableNow landing did not finish in 120s")
         }
         true
-      })
+      }
       s.read.parquet(sink)
         .groupBy("event_type")
         .agg(big(count(lit(1))).as("n"),
@@ -1064,7 +1064,7 @@ object Streams {
       val stage = graft.Tables.scratch(dir, s"wap_stream_src_$sig")
       val root = graft.Tables.scratch(dir, s"wap_stream_tbl_$sig")
       val ckpt = graft.Tables.scratch(dir, s"wap_stream_ckpt_$sig")
-      branchStreamMemo.getOrElseUpdate(root, {
+      graft.Tables.once(s, "wap_stream", s"$dir/orders.parquet") {
         orders(s, dir)
           .select("o_orderkey", "o_orderdate", "o_totalprice", "o_orderstatus")
           .repartition(4).write.mode("overwrite").parquet(stage)
@@ -1090,7 +1090,7 @@ object Streams {
         Scans.writeTag(root, "prepublish", Scans.resolveBranch(root, "main"))
         Scans.publishBranch(root, "staging", "main")
         true
-      })
+      }
       Scans.snapshotRead(s, root, Scans.resolveBranch(root, "main"))
         .groupBy("o_orderstatus")
         .agg(big(count(lit(1))).as("n_orders"),
@@ -1099,16 +1099,6 @@ object Streams {
         .orderBy("o_orderstatus")
     })
   )
-
-  /** Once-per-(JVM, source-state) guard for the streaming-extract
-    * landing job. */
-  private val framedStreamMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
-  /** Once-per-(JVM, source-state) guard for the streaming
-    * branch-commit + publish job. */
-  private val branchStreamMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
 
   /** stream_avro_tail's container count — each staged container holds
     * the orders residue class o_orderkey % AvroTailBatches == b, so
@@ -1119,12 +1109,9 @@ object Streams {
     * container per residue class, mtimes strictly increasing so the
     * file-source's batch order is deterministic. Memoized per (JVM,
     * fixture state) — the containers are pure functions of orders. */
-  private val avroTailMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
   def stageAvroTail(s: SparkSession, dir: String): String = {
     val src = scratch(dir, "stream_avro_src")
-    avroTailMemo.getOrElseUpdate(
-      s"$src|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "stream_avro_src", s"$dir/orders.parquet") {
         val A = graft.sources.AvroContainer
         val fields = Seq(A.Field("o_orderkey", A.ALong),
                          A.Field("o_totalprice", A.ADouble))
@@ -1142,7 +1129,7 @@ object Streams {
             A.encode("order_tail", fields, recs, s"avrotail:$b"))
           f.toFile.setLastModified(1700000000000L + b * 60000L)
         }
-      })
+      }
     src
   }
 
@@ -1150,12 +1137,9 @@ object Streams {
     * mtime ladder, containers deflate-coded (distinct sync seeds so
     * the two stage dirs never share bytes). Memoized per (JVM,
     * fixture state). */
-  private val avroTailDeflateMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Unit]
   def stageAvroTailDeflate(s: SparkSession, dir: String): String = {
     val src = scratch(dir, "stream_avro_deflate_src")
-    avroTailDeflateMemo.getOrElseUpdate(
-      s"$src|${graft.Tables.fsSig(s, s"$dir/orders.parquet")}", {
+    graft.Tables.once(s, "stream_avro_deflate_src", s"$dir/orders.parquet") {
         val A = graft.sources.AvroContainer
         val fields = Seq(A.Field("o_orderkey", A.ALong),
                          A.Field("o_totalprice", A.ADouble))
@@ -1174,7 +1158,7 @@ object Streams {
                      codec = "deflate"))
           f.toFile.setLastModified(1700000000000L + b * 60000L)
         }
-      })
+      }
     src
   }
 

@@ -170,4 +170,41 @@ class IcebergDeleteManifestSpec extends SparkSpec {
       java.nio.file.Paths.get(again))
     assert(b1.sameElements(b2))
   }
+
+  test("a listed data file rewritten in place re-exports the positional " +
+       "deletes, and a removed output dir re-exports too") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.functions.col
+    // a private copy of the merge-on-read table: rewriting the shared
+    // fixture's files would leak into the other tests
+    val own = Files.createTempDirectory("graft_iceberg_del").toString
+    Scans.evolutionBase(spark, sf001, own)
+    Files.copy(Paths.get(own, "_manifests", "v2.txt"), Paths.get(own, "_manifests", "v3.txt"))
+    Tables.orders(spark, sf001).where(col("o_orderkey") % 7 === 0)
+      .select("o_orderkey").write.parquet(s"$own/_deletes/v3")
+    def positions(list: String): Map[String, Seq[Long]] =
+      AvroManifest.readContentFilePaths(list).collect { case (1, p) => p }
+        .flatMap(p => AvroManifest.decodePositionalDeletes(Files.readAllBytes(Paths.get(p))))
+        .groupBy(_._1).map { case (fp, ds) => fp -> ds.map(_._2).sorted }
+    def truth(fp: String): Seq[Long] = spark.read.parquet(fp)
+      .select(col("_metadata.row_index"), col("o_orderkey"))
+      .where(col("o_orderkey") % 7 === 0).collect().map(_.getLong(0)).toSeq.sorted
+    val first = Scans.exportIcebergDeleteSnapshot(spark, own)
+    val fp = positions(first).keys.min
+    val before = positions(first)(fp)
+    // same rows in reverse order at the same path: the listing is
+    // unchanged, every ordinal moves
+    val mtime = new java.io.File(fp).lastModified
+    val staged = s"$own/rewrite"
+    spark.read.parquet(fp).orderBy(col("o_orderkey").desc).coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(part.toPath, Paths.get(fp), StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(fp).setLastModified(mtime + 60000L)
+    val second = Scans.exportIcebergDeleteSnapshot(spark, own)
+    assert(positions(second)(fp) == truth(fp), "stale positional deletes served")
+    assert(positions(second)(fp) != before)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$own/_iceberg_del"))
+    val third = Scans.exportIcebergDeleteSnapshot(spark, own)
+    assert(Files.exists(Paths.get(third)), "a removed export must be redone")
+  }
 }
