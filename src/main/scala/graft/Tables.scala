@@ -83,20 +83,30 @@ object Tables {
   }
 
   /** Run `f` with adaptive query execution disabled, restoring the
-    * previous value after (r22, guide §1.2 step 1). For CAP-BOUNDED
-    * iterative operators (NND descent, beam walks, HITS/score loops)
-    * AQE buys nothing — per-round volumes are bounded by construction
-    * (degree caps, beam width, node cardinality), the joins are
-    * explicitly broadcast-hinted or key-bounded, and skew is capped by
-    * the same constants — while its per-stage materialize-and-replan
-    * turns every exchange into its own job: one NND build measured 26
-    * jobs with AQE on vs 9 off, 3.50 s vs 2.40 s median (OPTIMIZATION_r22.md).
-    * Disabling it ALSO makes the loop's lazy localCheckpoints truly
-    * lazy (with AQE on, execute() materializes every shuffle stage at
-    * checkpoint-call time), so a whole build collapses into the
-    * consumer's job instead of a driver barrier per round. Scoped to
-    * the operator: fleet queries keep AQE (coalescing/skew handling
-    * matter for unbounded scans and joins at 100 TB). */
+    * previous value after (r22, guide §1.2 step 1). Four callers
+    * remain, all cap-bounded iterative builds whose rounds still carry
+    * exchanges: the NN-descent build (`knnGraphNnDescentScored`), the
+    * DiskANN insert patch (`nndInsertGraph`), HITS
+    * (`hitsRoundsOnCheckpointed`) and label propagation
+    * (`labelPropagate`). Per-round volumes there are bounded by
+    * construction (degree caps, node cardinality), while AQE's
+    * per-stage materialize-and-replan turns every exchange into its
+    * own job: one NND build measured 26 jobs with AQE on vs 9 off,
+    * 3.50 s vs 2.40 s median at 4 cpus (OPTIMIZATION_r22.md) — but at
+    * 32 shuffle partitions the uncoalesced exchanges multiply tasks
+    * 5–8×, so the trade is not a win at every width. Disabling it ALSO
+    * makes the loop's lazy localCheckpoints truly lazy (with AQE on,
+    * execute() materializes every shuffle stage at checkpoint-call
+    * time).
+    *
+    * HAZARD: the toggle writes SESSION-GLOBAL conf. Any other thread
+    * planning a query on the same session while `f` runs plans it
+    * with AQE off, and two overlapping scopes can restore each
+    * other's value out of order. The graph walks (beam, batched beam,
+    * ADC) no longer need it — their rounds are exchange-free
+    * [[graft.operators.Similarity.GraphWalk]] fetches — so the public
+    * `Corpus` ANN path never flips it. The other four go once their
+    * loops take their partitioning from the plan. */
   def withAqeOff[T](spark: SparkSession)(f: => T): T = {
     val k = "spark.sql.adaptive.enabled"
     val prev = spark.conf.getOption(k)

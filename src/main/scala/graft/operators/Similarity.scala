@@ -546,16 +546,15 @@ object Similarity {
   /** HNSW-CLASS BEAM SEARCH over the neighbor graph (VERDICT r16
     * Missing #3 — the industry-default high-recall ANN regime): seed
     * with one entry point per label, then GraphRounds rounds of
-    * expand-score-prune — frontier = out-neighbors of the beam
-    * (an equi-join of the ≤ beam-row broadcast against the edge
-    * list), score = pinned cosine to the query, prune = global top-
+    * expand-score-prune — frontier = out-neighbors of the beam,
+    * score = pinned cosine to the query, prune = global top-
     * GraphBeam. Fully deterministic (fround4 + vec_id tie-breaks), so
     * the DuckDB oracle replays it move for move. Scale shape: the
-    * beam is constant-size, each round touches ≤ beam·degree edge
-    * rows + as many embeddings — at 100 TB the graph lives
-    * partitioned by vec_id and each round is a pruned lookup join,
-    * never a corpus scan; localCheckpoint bounds the iterative plan
-    * (the PageRank hatch). */
+    * beam is constant-size, each round fetches ≤ beam·degree new ids
+    * (their embeddings' scores and their edge rows) in one
+    * exchange-free job — at 100 TB the graph lives partitioned by
+    * vec_id and each round is a pruned `vec_id IN` lookup, never a
+    * shuffle ([[GraphWalk]]). */
   def graphBeamTopK(s: org.apache.spark.sql.SparkSession, dir: String,
                     k: Int): DataFrame =
     graphBeamSearch(embeddings(s, dir), knnGraphCached(s, dir), k)
@@ -579,81 +578,183 @@ object Similarity {
       graphBeamSearch(embeddings(s, dir), nndGraphCached(s, dir), k)
         .localCheckpoint())
 
+  /** The shared round shape of the three graph walks —
+    * [[graphBeamSearch]], [[graphBeamBatch]] and
+    * [[Vectors.graphPqWalk]]. The driver holds the whole walk state:
+    * the scores and the adjacency list of every id fetched so far.
+    * [[fetch]] pays ONE job for the ids not fetched yet: a
+    * `vec_id IN (ids)` filter over the scored corpus, unioned with the
+    * same filter over the edge list, collected. That plan has no
+    * broadcast build and no exchange, so its shape is the plan's, not
+    * the session conf's (AQE has nothing to replan), and a round whose
+    * ids were all fetched launches no job. The walks' merge, beam cut,
+    * visited set and fixpoint exit run on the driver over these rows,
+    * op for op the Spark algebra they replace ([[GraphWalk.scoreDesc]]
+    * and [[GraphWalk.scoreAsc]] are Spark's sort orders, [[GraphWalk.maxScore]]
+    * and [[GraphWalk.minScore]] its max/min aggregates), so results
+    * are bit-identical and the DuckDB oracles replay them unchanged.
+    *
+    * `scores` are the per-query-row score expressions over the corpus
+    * `e` (cosine to each query row, or the ADC distance): one fetch
+    * scores an id for every query row, so duplicate query rows and
+    * batched lanes ride the same job. */
+  private[graft] final class GraphWalk(e: DataFrame, graph: DataFrame,
+                                       scores: Seq[Column]) {
+    private val scored = e.select(col("vec_id"), array(scores: _*).as("s"))
+    private val scoreRows = scala.collection.mutable.HashMap
+      .empty[Long, Vector[scala.collection.Seq[java.lang.Double]]]
+    private val adjacency = scala.collection.mutable.HashMap.empty[Long, Vector[Long]]
+    private val fetched = scala.collection.mutable.HashSet.empty[Long]
+
+    /** Fetch the scores and out-edges of every id in `ids` not fetched
+      * yet — one job, none when all were. Collects ≤ |new ids|·(corpus
+      * rows per id + out-degree) rows; each walk names the constant
+      * that bounds its ids where it calls this. */
+    def fetch(ids: Iterable[Long]): Unit = {
+      val fresh = ids.iterator.filterNot(fetched).toSeq.distinct
+      if (fresh.nonEmpty) {
+        val in = col("vec_id").isin(fresh: _*)
+        scored.where(in)
+          .select(col("vec_id"), col("s"), lit(null).cast("long").as("nbr_id"))
+          .unionByName(graph.where(in).select(col("vec_id"),
+            lit(null).cast(scored.schema("s").dataType).as("s"), col("nbr_id")))
+          .collect()
+          .foreach { r =>
+            val id = r.getLong(0)
+            if (!r.isNullAt(1))
+              scoreRows(id) = scoreRows.getOrElse(id, Vector.empty) :+
+                r.getSeq[java.lang.Double](1)
+            else if (!r.isNullAt(2))
+              adjacency(id) = adjacency.getOrElse(id, Vector.empty) :+ r.getLong(2)
+          }
+        fetched ++= fresh
+      }
+    }
+
+    /** Per corpus row of a fetched `id`, its scores (one per query
+      * row); empty when `id` is absent from the corpus. */
+    def scoresOf(id: Long): Seq[scala.collection.Seq[java.lang.Double]] =
+      scoreRows.getOrElse(id, Vector.empty)
+
+    /** Every score of a fetched `id`, as (id, score) rows. */
+    def scoredRows(id: Long): Seq[GraphWalk.Scored] =
+      scoresOf(id).flatMap(_.map(id -> _))
+
+    /** Out-neighbors of a fetched `id`, one per edge row. */
+    def neighbors(id: Long): Seq[Long] = adjacency.getOrElse(id, Vector.empty)
+  }
+
+  private[graft] object GraphWalk {
+    /** A (vec_id, score) row; the score is null where Spark's is. */
+    type Scored = (Long, java.lang.Double)
+
+    /** Spark's ascending order on a nullable double: nulls first, then
+      * `SQLOrderingUtil.compareDoubles` — equal values tie (so -0.0
+      * ties 0.0), otherwise `java.lang.Double.compare` (NaN largest).
+      * Negating scores would not reproduce it. */
+    def compareScores(a: java.lang.Double, b: java.lang.Double): Int =
+      if (a == null) { if (b == null) 0 else -1 }
+      else if (b == null) 1
+      else {
+        val (x, y) = (a.doubleValue, b.doubleValue)
+        if (x == y) 0 else java.lang.Double.compare(x, y)
+      }
+
+    /** ORDER BY score DESC (NULLS LAST), vec_id */
+    val scoreDesc: Ordering[Scored] = (a, b) => {
+      val c = compareScores(b._2, a._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+    }
+
+    /** ORDER BY score ASC (NULLS FIRST), vec_id */
+    val scoreAsc: Ordering[Scored] = (a, b) => {
+      val c = compareScores(a._2, b._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+    }
+
+    /** Spark's max / min aggregates: nulls ignored, null when all are. */
+    def maxScore(xs: Seq[java.lang.Double]): java.lang.Double =
+      xs.filter(_ != null).reduceOption((a, b) => if (compareScores(b, a) > 0) b else a).orNull
+    def minScore(xs: Seq[java.lang.Double]): java.lang.Double =
+      xs.filter(_ != null).reduceOption((a, b) => if (compareScores(b, a) < 0) b else a).orNull
+
+    /** The round's merge and cut: group the candidate rows by vec_id,
+      * keep the `best` score of each, and return the first `width` in
+      * `ord` — `groupBy(vec_id).agg(max|min)` then
+      * `orderBy(score, vec_id).limit(width)`. */
+    def cut(cands: Seq[Scored], best: Seq[java.lang.Double] => java.lang.Double,
+            ord: Ordering[Scored], width: Int): Seq[Scored] =
+      cands.groupBy(_._1).iterator.map { case (id, xs) => (id, best(xs.map(_._2))) }
+        .toSeq.sorted(ord).take(width)
+
+    /** The walks' entry points: the least vec_id of each label, one row
+      * per label (an id that is the least of two labels seeds twice,
+      * as in the join it replaces). Collects ≤ one row per label. */
+    def entryPoints(e: DataFrame): Seq[Long] =
+      e.groupBy("label").agg(min(col("vec_id"))).collect().toSeq
+        .filterNot(_.isNullAt(1)).map(_.getLong(1))
+
+    /** A query row's vector as a literal of the corpus's embedding type. */
+    def literal(v: Any, e: DataFrame): Column =
+      org.apache.spark.sql.graftx.shims.column(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(
+          v, e.schema("embedding").dataType))
+
+    /** The (vec_id, cos) fields of a beam over `e` — the schema the
+      * replaced plan gave its beam. Analysis only, no job. */
+    def beamFields(e: DataFrame): Seq[org.apache.spark.sql.types.StructField] =
+      e.select(col("vec_id"),
+        fround(cosine(col("embedding"), col("embedding")), 4).as("cos")).schema.fields.toSeq
+
+    def localDf(e: DataFrame, rows: Seq[org.apache.spark.sql.Row],
+                fields: Seq[org.apache.spark.sql.types.StructField]): DataFrame =
+      e.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        org.apache.spark.sql.types.StructType(fields))
+  }
+
   /** The search itself on any (vec_id, embedding, label) frame + edge
     * list — factored out so GraphAnnSpec can plant a navigable corpus
     * and drive recall properties independent of the fixture.
     * `queryVecId` selects the query vector (the shipped queries use 0,
     * the sim_topk convention); `earlyExit = false` forces the full
     * fixed-round unroll (the oracle's shape) so the spec can prove the
-    * fixpoint exit returns the identical result. */
+    * fixpoint exit returns the identical result. Each round is one
+    * [[GraphWalk]] fetch: at most one exchange-free job. */
   def graphBeamSearch(e: DataFrame, graph: DataFrame, k: Int,
                       queryVecId: Long = 0L,
                       earlyExit: Boolean = true,
-                      tombstoned: Option[Column] = None): DataFrame =
-    // r22: the walk is the canonical cap-bounded loop (beam ≤ GraphBeam
-    // rows, frontier ≤ beam·degree, every join broadcast-hinted) — AQE
-    // charged ~5 stage-jobs per round for replanning it can never
-    // improve; off, each round is its collect plus the one frontier
-    // broadcast build (OPTIMIZATION_r22.md: build+walk 35 jobs → measured below)
-    graft.Tables.withAqeOff(e.sparkSession) {
-      graphBeamSearchBody(e, graph, k, queryVecId, earlyExit, tombstoned)
-    }
-
-  private def graphBeamSearchBody(e: DataFrame, graph: DataFrame, k: Int,
-                      queryVecId: Long,
-                      earlyExit: Boolean,
-                      tombstoned: Option[Column]): DataFrame = {
+                      tombstoned: Option[Column] = None): DataFrame = {
+    import GraphWalk._
     import org.apache.spark.sql.expressions.Window
-    val sp = e.sparkSession
-    // r21 (guide §1.2 step 1 — fewer jobs, not faster tasks): the
-    // beam is ≤ GraphBeam rows BY CONSTRUCTION, and the fixpoint
-    // probe already collected exactly these ids every round. Holding
-    // the beam as a collected LOCAL RELATION between rounds makes
-    // each round ONE job (the old shape paid two: the localCheckpoint
-    // materialization plus the id probe) and turns the per-round
-    // beam/query-vector re-scans into literals. Values are identical
-    // — doubles round-trip exactly through collect/createDataFrame.
-    def localDf(rows: Array[org.apache.spark.sql.Row],
-                schema: org.apache.spark.sql.types.StructType): DataFrame =
-      sp.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    val q0 = e.where(col("vec_id") === queryVecId).select(col("embedding").as("qv"))
-    val q = localDf(q0.collect(), q0.schema)
-    // the id set is ≤ beam·degree rows at ANY corpus size — broadcast
-    // it explicitly so the corpus side is never shuffled by the join
-    // (r21; without the hint the planner could fall back to a
-    // sort-merge join that exchanges the corpus every round)
-    def scored(ids: DataFrame): DataFrame =
-      e.join(broadcast(ids), Seq("vec_id")).crossJoin(broadcast(q))
-        .select(col("vec_id"),
-                fround(cosine(col("embedding"), col("qv")), 4).as("cos"))
-    val entries = e.groupBy("label").agg(min(col("vec_id")).as("vec_id"))
-      .select("vec_id")
-    val beam0 = scored(entries)
-      .orderBy(col("cos").desc, col("vec_id")).limit(GraphBeam)
-    val beamSchema = beam0.schema
-    var beamRows = beam0.collect()
+    // the query rows: the corpus rows carrying queryVecId — normally
+    // one; none for an absent id, which gives an empty result
+    val qvs = e.where(col("vec_id") === queryVecId).select("embedding")
+      .collect().map(_.get(0))
+    val walk = new GraphWalk(e, graph,
+      qvs.toSeq.map(qv => fround(cosine(col("embedding"), literal(qv, e)), 4)))
+    var beam: Seq[Scored] = Nil
+    if (qvs.nonEmpty) {
+      val entries = entryPoints(e)
+      walk.fetch(entries)
+      beam = entries.flatMap(walk.scoredRows).sorted(scoreDesc).take(GraphBeam)
+    }
     // FIXPOINT EARLY-EXIT: once a round leaves the beam's id set
     // unchanged, every further round is the identity (the frontier and
     // scores are pure functions of the beam) — stopping early returns
-    // EXACTLY what the oracle's fixed GraphRounds unroll returns, for
-    // fewer jobs.
-    var prevIds: Set[Long] = beamRows.map(_.getLong(0)).toSet
+    // EXACTLY what the oracle's fixed GraphRounds unroll returns. Past
+    // the fixpoint a round's frontier is all fetched, so even the
+    // unrolled rounds (earlyExit = false) launch no job.
+    var prevIds: Set[Long] = beam.map(_._1).toSet
     var round = 0
     var converged = false
     while (round < GraphRounds && !converged) {
-      val beam = localDf(beamRows, beamSchema)
-      // no distinct on the frontier (r21): duplicate proposals carry
-      // one pinned cosine each, and the groupBy(vec_id).max below is
-      // already the dedup — the old distinct was one more exchange
-      // per round for nothing (frontier stays ≤ beam·degree rows)
-      val frontier = graph
-        .join(broadcast(beam.select("vec_id")), Seq("vec_id"))
-        .select(col("nbr_id").as("vec_id"))
-      beamRows = scored(frontier).unionByName(beam)
-        .groupBy("vec_id").agg(max(col("cos")).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id")).limit(GraphBeam)
-        .collect()
-      val ids = beamRows.map(_.getLong(0)).toSet
+      // ≤ GraphBeam·degree ids (degree ≤ GraphM on NN-descent graphs,
+      // 2·GraphM on the blocked build)
+      val frontier = beam.map(_._1).distinct.flatMap(walk.neighbors).distinct
+      walk.fetch(frontier)
+      // scored frontier ∪ beam, groupBy(vec_id).max, (cos desc, vec_id) cut
+      beam = cut(frontier.flatMap(walk.scoredRows) ++ beam, maxScore, scoreDesc, GraphBeam)
+      val ids = beam.map(_._1).toSet
       converged = earlyExit && ids == prevIds
       prevIds = ids
       round += 1
@@ -663,7 +764,7 @@ object Similarity {
     // (the beam routes through them — removing them from the graph
     // would orphan their neighborhoods until compaction) but are
     // FILTERED from the served results here, at the bounded cut
-    localDf(beamRows, beamSchema)
+    localDf(e, beam.map { case (id, c) => org.apache.spark.sql.Row(id, c) }, beamFields(e))
       .where(col("vec_id") =!= queryVecId &&
              !tombstoned.getOrElse(lit(false)))
       .withColumn("rnk",
@@ -680,70 +781,60 @@ object Similarity {
 
   /** BATCHED beam search — the production shape (queries arrive in
     * batches, not one at a time): every query's beam advances in THE
-    * SAME dataframe program, keyed by q_id — frontier expansion is one
-    * equi-join of all beams against the edge list, scoring one join
-    * against the query-vector broadcast, pruning one per-q_id rank
-    * window (WindowGroupLimit bounds each partition map-side). Per
-    * round the plan touches ≤ queries·beam·degree rows regardless of
-    * corpus size; adding queries widens the constant, never the scan.
-    * Move-for-move deterministic like the single-query form, so the
-    * oracle replays all lanes at once with q_id-partitioned windows. */
-  def graphBeamBatch(e: DataFrame, graph: DataFrame, k: Int): DataFrame =
-    // cap-bounded loop — same AQE-off posture as graphBeamSearch (r22)
-    graft.Tables.withAqeOff(e.sparkSession) { graphBeamBatchBody(e, graph, k) }
-
-  private def graphBeamBatchBody(e: DataFrame, graph: DataFrame, k: Int): DataFrame = {
+    * SAME round — one [[GraphWalk]] fetch scores each new id against
+    * all query vectors at once, and each lane (q_id) then merges and
+    * cuts its own beam on the driver. Per round the fetch touches
+    * ≤ queries·beam·degree ids regardless of corpus size; adding
+    * queries widens the constant, never the scan. Move-for-move
+    * deterministic like the single-query form, so the oracle replays
+    * all lanes at once with q_id-partitioned windows. */
+  def graphBeamBatch(e: DataFrame, graph: DataFrame, k: Int): DataFrame = {
+    import GraphWalk._
     import org.apache.spark.sql.expressions.Window
-    val sp = e.sparkSession
-    // r21: same local-relation beam as graphBeamSearch — all lanes'
-    // beams are ≤ queries·GraphBeam rows by construction, and the
-    // fixpoint probe already collected them every round. One job per
-    // round instead of two; the query-vector batch collects once
-    // instead of re-scanning the corpus parquet every round.
-    def localDf(rows: Array[org.apache.spark.sql.Row],
-                schema: org.apache.spark.sql.types.StructType): DataFrame =
-      sp.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    val qs0 = e.where(col("vec_id") < GraphBatchQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val qs = localDf(qs0.collect(), qs0.schema)
-    // bounded id set broadcast against the corpus (see graphBeamSearch)
-    def scored(ids: DataFrame): DataFrame =
-      e.select(col("vec_id"), col("embedding"))
-        .join(broadcast(ids), Seq("vec_id"))
-        .join(broadcast(qs), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"),
-                fround(cosine(col("embedding"), col("qv")), 4).as("cos"))
-    val entries = e.groupBy("label").agg(min(col("vec_id")).as("vec_id"))
-      .select("vec_id")
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    def prune(sc: DataFrame): DataFrame = sc
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= GraphBeam).drop("rn")
-    val beam0 = prune(scored(qs.select("q_id").crossJoin(entries)))
-    val beamSchema = beam0.schema
-    var beamRows = beam0.collect()
+    // the query rows, ≤ GraphBatchQueries (more only for duplicate
+    // ids); query row i belongs to lane(i)
+    val qrows = e.where(col("vec_id") < GraphBatchQueries)
+      .select("vec_id", "embedding").collect()
+    val lane = qrows.map(_.getLong(0))
+    val walk = new GraphWalk(e, graph,
+      qrows.toSeq.map(r => fround(cosine(col("embedding"), literal(r.get(1), e)), 4)))
+    // lane q's rows for `id`: each corpus row of id against each query row of q
+    def laneRows(q: Long)(id: Long): Seq[Scored] =
+      walk.scoresOf(id).flatMap(s => lane.indices.filter(lane(_) == q).map(i => (id, s(i))))
+    var beams: Map[Long, Seq[Scored]] = Map.empty
+    if (qrows.nonEmpty) {
+      val entries = entryPoints(e)
+      walk.fetch(entries)
+      // the replaced plan crossed every query ROW with the entries, so
+      // a lane with m query rows seeds each entry m times
+      beams = lane.distinct.map { q =>
+        q -> Seq.fill(lane.count(_ == q))(entries.flatMap(laneRows(q))).flatten
+          .sorted(scoreDesc).take(GraphBeam)
+      }.toMap
+    }
+    def pairs = beams.toSeq.flatMap { case (q, b) => b.map(q -> _._1) }.toSet
     // fixpoint early-exit across ALL lanes (see graphBeamSearch)
-    var prevIds: Set[(Long, Long)] = beamRows
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    var prevIds = pairs
     var round = 0
     var converged = false
     while (round < GraphRounds && !converged) {
-      val beam = localDf(beamRows, beamSchema)
-      // no distinct (r21): the groupBy(q_id, vec_id).max below is the
-      // dedup — see graphBeamSearch
-      val frontier = graph
-        .join(broadcast(beam.select("q_id", "vec_id")), Seq("vec_id"))
-        .select(col("q_id"), col("nbr_id").as("vec_id"))
-      beamRows = prune(
-        scored(frontier).unionByName(beam)
-          .groupBy("q_id", "vec_id").agg(max(col("cos")).as("cos")))
-        .collect()
-      val ids = beamRows.map(r => (r.getLong(0), r.getLong(1))).toSet
+      val frontiers = beams.map { case (q, b) =>
+        q -> b.map(_._1).distinct.flatMap(walk.neighbors).distinct }
+      // ≤ GraphBatchQueries·GraphBeam·degree ids (degree ≤ GraphM on
+      // NN-descent graphs, 2·GraphM on the blocked build)
+      walk.fetch(frontiers.values.flatten)
+      beams = beams.map { case (q, b) =>
+        q -> cut(frontiers(q).flatMap(laneRows(q)) ++ b, maxScore, scoreDesc, GraphBeam) }
+      val ids = pairs
       converged = ids == prevIds
       prevIds = ids
       round += 1
     }
-    localDf(beamRows, beamSchema)
+    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
+    val fields = beamFields(e)
+    localDf(e, beams.toSeq.flatMap { case (q, b) =>
+        b.map { case (id, c) => org.apache.spark.sql.Row(q, id, c) } },
+      fields.head.copy(name = "q_id") +: fields)
       .where(col("vec_id") =!= col("q_id"))
       .withColumn("rnk", big(row_number().over(w)))
       .where(col("rnk") <= k)

@@ -20,49 +20,50 @@ object Vectors {
     * out so the blocked-build arm (sim_ann_graph_pq) and the
     * NN-descent arm (sim_ann_graph_nnd_pq) run the IDENTICAL walk;
     * the graph argument is the only difference, exactly as in the
-    * oracle where only the structure CTEs swap. */
+    * oracle where only the structure CTEs swap. The walk
+    * ([[adcWalkVisited]]) runs on the shared [[Similarity.GraphWalk]]
+    * rounds — one exchange-free job per round, none once the frontier
+    * is all fetched. */
   def graphPqWalk(s: org.apache.spark.sql.SparkSession, dir: String,
                   graph: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    // cap-bounded loop — the r22 AQE-off posture of the plain beam
-    graft.Tables.withAqeOff(s) { graphPqWalkBody(s, dir, graph) }
-
-  private def graphPqWalkBody(s: org.apache.spark.sql.SparkSession,
-                              dir: String,
-                              graph: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val (books, qsubs) = pqPrelude(s, dir)
     val e = embeddings(s, dir)
-    // r22 (the r21 graphBeamSearch restructure, finally applied to the
-    // ADC walk it was copied from): the beam is ≤ GraphPqBeam=48 rows
-    // and the per-round frontier ≤ beam·GraphM ADC-scored rows BY
-    // CONSTRUCTION, so the walk state lives as collected local
-    // relations instead of three localCheckpoints per round — each
-    // round is ONE job (score the frontier, collect), with the
-    // min-merge + top-beam cut and the visited-set union running
-    // driver-side on those bounded rows. JobProf measured the old
-    // shape at 58-64 jobs per query (sim_ann_graph_pq /_nnd_pq);
-    // values are identical — fround4 adist doubles round-trip exactly
-    // through collect, the driver merge mirrors the old
-    // groupBy(vec_id).min / orderBy(adist, vec_id) / limit algebra
-    // op for op, and deriving visited from the SCORED frontier equals
-    // the old pre-score union because every neighbor id exists in the
-    // corpus (the rerank inner-join dropped absentees anyway).
-    def idsDf(ids: Iterable[Long]): org.apache.spark.sql.DataFrame =
-      s.createDataFrame(
-        java.util.Arrays.asList(
-          ids.toSeq.sorted.map(org.apache.spark.sql.Row(_)): _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "vec_id", org.apache.spark.sql.types.LongType, false))))
-    def scored(ids: org.apache.spark.sql.DataFrame) =
-      e.join(broadcast(ids), Seq("vec_id"))
-        .select(col("vec_id"), fround(pqAdist(books, qsubs), 4).as("adist"))
-    val entries = e.groupBy("label").agg(min(col("vec_id")).as("vec_id"))
-      .select("vec_id")
-    var beam: Seq[(Long, Double)] = scored(entries)
-      .orderBy(col("adist").asc, col("vec_id")).limit(GraphPqBeam)
-      .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+    val visited = adcWalkVisited(e, graph, fround(pqAdist(books, qsubs), 4))
+    val qv = qsubs.flatten
+    // ≤ rounds·GraphPqBeam·degree visited ids, broadcast into the rerank
+    val visitedDf = s.createDataFrame(
+      java.util.Arrays.asList(
+        visited.toSeq.sorted.map(org.apache.spark.sql.Row(_)): _*),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(
+          "vec_id", org.apache.spark.sql.types.LongType, false))))
+    visitedDf.where(col("vec_id") =!= 0)
+      .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+      .select(col("vec_id"),
+        fround(Similarity.cosine(col("embedding"), typedLit(qv)), 4).as("cos"))
+      .withColumn("rnk", big(row_number().over(
+        Window.orderBy(col("cos").desc, col("vec_id")))))
+      .where(col("rnk") <= 10)
+      .select("rnk", "vec_id", "cos")
+      .orderBy("rnk")
+  }
+
+  /** The ADC walk itself: entry points, then up to GraphRounds rounds
+    * of frontier fetch, `groupBy(vec_id).min(adist)` merge and
+    * (adist asc, vec_id) cut to GraphPqBeam, stopping at the fixpoint.
+    * Returns the VISITED set — the entry points plus every scored
+    * frontier id — which DiskANN reranks exactly. `adist` is any
+    * per-row distance over `e`; the shipped walk passes fround4 ADC. */
+  private[graft] def adcWalkVisited(e: org.apache.spark.sql.DataFrame,
+                                    graph: org.apache.spark.sql.DataFrame,
+                                    adist: Column): Set[Long] = {
+    import Similarity.GraphWalk._
+    val walk = new Similarity.GraphWalk(e, graph, Seq(adist))
+    val entries = entryPoints(e)
+    walk.fetch(entries)
+    var beam: Seq[Scored] = entries.flatMap(walk.scoredRows)
+      .sorted(scoreAsc).take(GraphPqBeam)
     // DiskANN reranks the full VISITED list, not the final beam —
     // ADC is deliberately coarse (4 codes/vector), so the true
     // nearest neighbors pass THROUGH the walk without necessarily
@@ -73,32 +74,22 @@ object Vectors {
     var round = 0
     var converged = false
     while (round < Similarity.GraphRounds && !converged) {
-      val frontierScored = scored(
-        graph.join(broadcast(idsDf(beam.map(_._1))), Seq("vec_id"))
-          .select(col("nbr_id").as("vec_id")))
-        .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
+      // ≤ GraphPqBeam·degree ids (degree ≤ GraphM on NN-descent
+      // graphs, 2·GraphM on the blocked build)
+      val frontier = beam.map(_._1).distinct.flatMap(walk.neighbors).distinct
+      walk.fetch(frontier)
+      val frontierScored = frontier.flatMap(walk.scoredRows)
+      // visited gains the frontier ids the corpus holds (the rerank
+      // join would drop the others anyway)
       visited ++= frontierScored.map(_._1)
-      // min-merge revisits, then the (adist asc, vec_id) top-beam cut —
-      // the exact algebra of the old groupBy/orderBy/limit plan
-      beam = (beam ++ frontierScored)
-        .groupBy(_._1).view.mapValues(_.map(_._2).min).toSeq
-        .sortBy { case (id, d) => (d, id) }
-        .take(GraphPqBeam)
+      // scored frontier ∪ beam, groupBy(vec_id).min, (adist, vec_id) cut
+      beam = cut(frontierScored ++ beam, minScore, scoreAsc, GraphPqBeam)
       val ids = beam.map(_._1).toSet
       converged = ids == prevIds
       prevIds = ids
       round += 1
     }
-    val qv = qsubs.flatten
-    idsDf(visited).where(col("vec_id") =!= 0)
-      .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("vec_id"),
-        fround(Similarity.cosine(col("embedding"), typedLit(qv)), 4).as("cos"))
-      .withColumn("rnk", big(row_number().over(
-        Window.orderBy(col("cos").desc, col("vec_id")))))
-      .where(col("rnk") <= 10)
-      .select("rnk", "vec_id", "cos")
-      .orderBy("rnk")
+    visited
   }
 
 

@@ -15,7 +15,7 @@ class GraphAnnSpec extends SparkSpec {
     * orthogonal anchors, so cosine falls off monotonically with |i−j|
     * — neighbor edges follow the chain and beam search must WALK from
     * the far entry points to the query's end. */
-  private def chainCorpus(n: Int) = {
+  private def chainRows(n: Int): Seq[(Long, Array[Float], Int)] = {
     val dim = 64
     (0L until n.toLong).map { i =>
       val t = i.toDouble / (n - 1)
@@ -25,8 +25,48 @@ class GraphAnnSpec extends SparkSpec {
          else 0.02 * math.sin(0.7 * d + 0.3 * i)).toFloat
       }
       (i, v, (i % 5).toInt)  // 5 labels interleaved along the chain
-    }.toDF("vec_id", "embedding", "label")
+    }
   }
+
+  private def chainCorpus(n: Int) = chainRows(n).toDF("vec_id", "embedding", "label")
+
+  /** The 80-vector chain plus what no fixture holds:
+    *  - duplicate vec_id rows: 17 twice with different vectors, 29
+    *    twice with the same vector, 5 twice (a batch lane with two
+    *    query rows), and 3 once more under label 7, so id 3 is the
+    *    entry point of two labels;
+    *  - exact score ties: 45..79 all carry vector 20's embedding —
+    *    more ids than a beam holds, so the beam cut falls inside the
+    *    tie and its vec_id tie-break decides who stays.
+    * `lane5Dup = false` leaves out the second row of 5, which would
+    * give the PQ codebook two codewords under one code. */
+  private def plantedCorpus(lane5Dup: Boolean = true) = {
+    val chain = chainRows(80)
+    val base = chain.map { case (i, v, l) =>
+      (i, if (i >= 45) chain(20)._2 else v, l) }
+    def vec(i: Int) = base(i)._2
+    val extra = Seq(
+      (17L, vec(17).zipWithIndex.map { case (x, d) => if (d == 2) x + 0.3f else x }, 2),
+      (29L, vec(29), 4),
+      (3L, vec(3), 7)) ++
+      (if (lane5Dup) Seq((5L, vec(5).map(_ * 0.5f).updated(3, 0.2f), 0)) else Nil)
+    (base ++ extra).toDF("vec_id", "embedding", "label")
+  }
+
+  /** Edges of the planted corpus: chain steps, long jumps, duplicate
+    * edges, and neighbours 1000..1002 the corpus lacks (one of which
+    * has out-edges of its own). */
+  private def plantedGraph = {
+    val n = 80L
+    val edges = (0L until n).flatMap { i =>
+      Seq((i + 1) % n, (i + n - 1) % n, (i + 2) % n, (i * 7 + 3) % n,
+          (i * 11 + 5) % n, 1000 + i % 3).map(i -> _) ++
+        (if (i % 4 == 0) Seq(i -> (i + 1) % n) else Nil)
+    } :+ (1000L -> 5L)
+    edges.toDF("vec_id", "nbr_id").localCheckpoint()
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) = (df.schema, df.collect().toSeq)
 
   test("planted navigable chain: beam search finds the exact top-10 (recall 1.0)") {
     val e = chainCorpus(120)
@@ -319,5 +359,66 @@ class GraphAnnSpec extends SparkSpec {
     val maxDeg = g.groupBy("vec_id").count().agg(max("count")).as[Long].head()
     assert(maxDeg <= 2L * Similarity.GraphM, s"max out-degree $maxDeg")
     assert(g.where(col("vec_id") === col("nbr_id")).count() == 0)
+  }
+
+  test("the driver-side beam walk equals the plan algebra row for row on a " +
+       "planted corpus: duplicate ids, absent neighbours, ties, absent query") {
+    val e = plantedCorpus()
+    val g = plantedGraph
+    for (q <- Seq(0L, 17L, 29L, 20L, 3L, 9999L); early <- Seq(true, false)) {
+      val got = rowsOf(Similarity.graphBeamSearch(e, g, 10, q, earlyExit = early))
+      val want = rowsOf(GraphWalkReference.beamSearch(e, g, 10, q, earlyExit = early))
+      assert(got == want, s"query $q earlyExit=$early:\n got $got\nwant $want")
+      if (q == 9999L) assert(got._2.isEmpty, "an absent query id serves nothing")
+      else assert(got._2.size == 10, s"query $q: ${got._2}")
+    }
+    // the tie group scores 1.0 against vector 20: the beam keeps its
+    // lowest ids, the rank serves the first ten of them
+    val tied = Similarity.graphBeamSearch(e, g, 10, 20L).collect()
+      .map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    assert(tied == (45L to 54L).map(_ -> 1.0), s"tie order: $tied")
+    val dead = Some(col("vec_id") % 3 === 0)
+    assert(rowsOf(Similarity.graphBeamSearch(e, g, 10, tombstoned = dead)) ==
+           rowsOf(GraphWalkReference.beamSearch(e, g, 10, tombstoned = dead)))
+  }
+
+  test("the driver-side batched walk equals the plan algebra row for row on " +
+       "the planted corpus (lane 5 has two query rows)") {
+    val e = plantedCorpus()
+    val g = plantedGraph
+    val got = rowsOf(Similarity.graphBeamBatch(e, g, 10))
+    assert(got == rowsOf(GraphWalkReference.beamBatch(e, g, 10)), got.toString)
+    assert(got._2.map(_.getLong(0)).distinct.size == Similarity.GraphBatchQueries)
+  }
+
+  test("the driver-side ADC walk's min-merge and visited set equal the plan " +
+       "algebra row for row on the planted corpus") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_walk").toString
+    plantedCorpus(lane5Dup = false).write.parquet(s"$dir/embeddings.parquet")
+    val g = plantedGraph
+    val got = rowsOf(graft.operators.Vectors.graphPqWalk(spark, dir, g))
+    assert(got == rowsOf(GraphWalkReference.pqWalk(spark, dir, g)), got.toString)
+    assert(got._2.size == 10)
+  }
+
+  test("the ADC walk's min-merge, tie cut and visited set equal the plan " +
+       "algebra on a coarse planted distance") {
+    // 400 ids; the distance to id 300 floored to steps of 8, so exact
+    // ties are wide and the (adist, vec_id) cut decides what the beam
+    // expands. 60 labels give 61 entry points for a 48-wide beam, so
+    // the first cut bites: every tenth id has a second row 3.0 farther
+    // (the min-merge), and 55 also heads label 99, so it seeds twice
+    val n = 400L
+    val e = ((0L until n).map(i => (i, (i % 60).toInt, 0.0)) ++
+             (0L until n by 10).map(i => (i, (i % 60).toInt, 3.0)) :+
+             ((55L, 99, 0.0))).toDF("vec_id", "label", "far")
+    val adist = floor(abs(col("vec_id") - 300) / 8).cast("double") + col("far")
+    val g = (0L until n).flatMap { i =>
+      Seq((i + 1) % n, (i + n - 1) % n, (i + 2) % n, (i * 37 + 11) % n, 5000 + i % 3)
+        .map(i -> _)
+    }.toDF("vec_id", "nbr_id").localCheckpoint()
+    val got = graft.operators.Vectors.adcWalkVisited(e, g, adist)
+    assert(got == GraphWalkReference.adcVisited(e, g, adist))
+    assert(got.size < n, s"the walk visited the whole corpus (${got.size})")
   }
 }
