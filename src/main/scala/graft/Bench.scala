@@ -91,7 +91,7 @@ object Bench {
         operators.TextOps.dsirSelect(
           spark.read.parquet(s"$warmDir/documents.parquet")).count()
       }
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => System.err.println(s"[bench] warm-up failed: $e") }
     // DETERMINISTIC execution order (sorted keys): Map iteration order
     // reshuffles whenever keys are added, silently moving JIT-warmup
     // and memo-attribution costs between queries and confounding every
@@ -102,35 +102,62 @@ object Bench {
     // measured protocol is untouched
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val (results, failed) = timeQueries(SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
+      .map { case (name, fn) => name -> (() => fn(spark, sfDir).count()) },
       // per-query cache scope: a query's persist() must not leak storage
       // (or an unfair warm read) into the next query's measurement
-      spark.sharedState.cacheManager.clearCache()
-      name -> dt
-    }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    def js(rs: Iterable[(String, Double)]): String =
-      rs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    // Full per-query detail goes to BENCH_LOCAL.json (committed to the
-    // repo). stdout gets a COMPACT line: the driver keeps only the last
-    // ~2000 chars of output and JSON-parses from there — the full
-    // 115-query map is ~2.6 KB and was truncated mid-line in rounds 1–2
-    // (BENCH_r01/r02 recorded parsed:null). Slowest 25 queries cover
-    // everything perf-attributable; the rest are sub-second.
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(results)},"sf":"$sfDir"}"""
-    val slowest = results.toSeq.sortBy(-_._2).take(25)
-    val compact =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_queries":${results.size},""" +
-      s""""queries":${js(slowest)},"queries_note":"slowest 25 of ${results.size}; full map in repo BENCH_LOCAL.json","sf":"$sfDir"}"""
+      () => spark.sharedState.cacheManager.clearCache())
+    val (compact, full) = report(results, failed, sfDir)
     println(compact)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"), full + "\n")
     catch { case _: Throwable => }
     spark.stop()
+  }
+
+  /** Runs each query in order and times it. A query that throws is
+    * reported on stderr and returned under `failed`, untimed: its
+    * elapsed time up to the throw measures nothing, so it never enters
+    * the total. `after` runs after every query, failed or not. */
+  def timeQueries(queries: Seq[(String, () => Any)], after: () => Unit = () => ())
+      : (Seq[(String, Double)], Seq[String]) = {
+    val outcomes = queries.map { case (name, run) =>
+      val t0 = System.nanoTime()
+      val out = try { run(); Right((System.nanoTime() - t0) / 1e9) } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          Left(name)
+      }
+      after()
+      name -> out
+    }
+    (outcomes.collect { case (name, Right(dt)) => name -> dt },
+     outcomes.collect { case (_, Left(name)) => name })
+  }
+
+  /** The compact stdout line and the full BENCH_LOCAL.json line. The
+    * total sums the timed queries only; `failed` lists the rest, and
+    * `n_queries` counts both.
+    * Full per-query detail goes to BENCH_LOCAL.json (committed to the
+    * repo). stdout gets a COMPACT line: the driver keeps only the last
+    * ~2000 chars of output and JSON-parses from there — the full
+    * 115-query map is ~2.6 KB and was truncated mid-line in rounds 1–2
+    * (BENCH_r01/r02 recorded parsed:null). Slowest 25 queries cover
+    * everything perf-attributable; the rest are sub-second. */
+  def report(results: Seq[(String, Double)], failed: Seq[String], sfDir: String)
+      : (String, String) = {
+    val total = results.map(_._2).sum
+    def js(rs: Iterable[(String, Double)]): String =
+      rs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    def names(ns: Seq[String]): String = ns.map(n => s""""$n"""").mkString("[", ",", "]")
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(results)},""" +
+      s""""failed":${names(failed)},"sf":"$sfDir"}"""
+    val slowest = results.sortBy(-_._2).take(25)
+    val compact =
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_queries":${results.size + failed.size},""" +
+      s""""queries":${js(slowest)},"queries_note":"slowest 25 of ${results.size} timed; full map in repo BENCH_LOCAL.json",""" +
+      s""""n_failed":${failed.size},"failed":${names(failed.take(25))},"sf":"$sfDir"}"""
+    (compact, full)
   }
 }

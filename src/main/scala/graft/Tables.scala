@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central catalog for the driver-provided parquet tables.
   *
@@ -10,13 +11,38 @@ import org.apache.spark.sql.functions._
   * predicate-pushed Parquet scans. At 100 TB these reads become
   * multi-executor file splits with row-group skipping; nothing here
   * collects to the driver.
+  *
+  * A table's schema is index state, like the i3cols layout that is
+  * fixed when the data is extracted: it is inferred once per JVM
+  * ([[once]]) and every later scan reads under it, so opening a table
+  * launches no footer job. The memo key folds in the session confs
+  * that schema inference reads ([[SchemaConfs]]), so a schema inferred
+  * under one setting is never served under another, and the entry is
+  * stamped by [[fsSig]], so a table rewritten at the same path is
+  * inferred again.
   */
 object Tables {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Lazy parquet scan of one driver table. */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session confs Spark's Parquet schema inference reads. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema", "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.caseSensitive")
+
+  /** The inferred schema of one parquet table, memoized per JVM under
+    * the session's inference confs and the table's [[fsSig]]. */
+  def tableSchema(spark: SparkSession, path: String): StructType = {
+    val confs = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
+    once(spark, s"schema:$confs", path)(spark.read.parquet(path).schema)
+  }
+
+  /** Lazy parquet scan of one driver table under its memoized schema. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(tableSchema(spark, path)).parquet(path)
+  }
 
   /** events.ts arrives in whatever parquet timestamp flavor the driver
     * generated this round, so the load is TYPE-ADAPTIVE; downstream
@@ -29,7 +55,9 @@ object Tables {
     *    TIMESTAMP_NTZ, cast to TIMESTAMP — with the session TZ pinned
     *    to UTC the micros value is unchanged, matching DuckDB's naive
     *    read bit-for-bit.
-    * Both shapes agree with the oracle exactly (FIXTURES.md).
+    * Both shapes agree with the oracle exactly (FIXTURES.md). The
+    * dispatch reads the memoized schema ([[tableSchema]], keyed under
+    * `nanosAsLong = true`), so it launches no job.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

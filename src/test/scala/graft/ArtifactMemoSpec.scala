@@ -1,11 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, Executors}
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
 
 import graft.operators.{Analytics, Dedup, Similarity}
 import org.apache.hadoop.fs.{Path => HPath}
@@ -16,29 +12,9 @@ import org.apache.spark.sql.Row
   * per-key lock, superseded entries dropped but never unpersisted. */
 class ArtifactMemoSpec extends SparkSpec {
 
-  private def tempDir(): Path = Files.createTempDirectory("graft_memo_spec")
-
-  /** Copy one sf0.001 table file into `dir` under its usual name. */
-  private def copyTable(name: String, dir: Path): String = {
-    val dst = dir.resolve(s"$name.parquet")
-    Files.copy(Paths.get(sf001, s"$name.parquet"), dst, StandardCopyOption.REPLACE_EXISTING)
-    dst.toString
-  }
-
   private def setMtime(path: String, mtime: Long): Unit = {
     val p = new HPath(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).setTimes(p, mtime, -1)
-  }
-
-  private def inParallel[T](n: Int)(f: => T): Seq[T] = {
-    val pool = Executors.newFixedThreadPool(n)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val go = new CountDownLatch(1)
-      val fs = Seq.fill(n)(Future { go.await(); f })
-      go.countDown()
-      Await.result(Future.sequence(fs), 10.minutes)
-    } finally pool.shutdown()
   }
 
   test("two threads requesting one key build it exactly once") {

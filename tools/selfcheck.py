@@ -4,8 +4,13 @@
 Usage: selfcheck.py <sfDir> <verifyOutDir> [query ...]
 Compares each <name> parquet under verifyOutDir against the oracle SQL in
 verifyOutDir/oracle_sql.json run by DuckDB over the sfDir parquet tables.
+
+DuckDB runs under a memory limit (a quarter of physical RAM, at most 4 GB),
+at most four threads and a scratch spill directory, so an oracle query too
+big for the host spills or fails fast with an error instead of starving
+the host (and any JVM sharing it) of memory.
 """
-import sys, json, glob, os
+import sys, json, glob, os, shutil, tempfile
 import duckdb
 import pandas as pd
 import numpy as np
@@ -16,10 +21,25 @@ def norm(df):
     df = df.reindex(sorted(df.columns), axis=1)
     return df.reset_index(drop=True)
 
+def connect(spill_dir):
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    limit_mb = max(1024, min(4096, ram // 4 // (1 << 20)))
+    return duckdb.connect(config={
+        "memory_limit": f"{limit_mb}MB",
+        "threads": min(4, os.cpu_count() or 1),
+        "temp_directory": spill_dir,
+    })
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
+    spill_dir = tempfile.mkdtemp(prefix="selfcheck_duckdb_")
+    try:
+        compare(connect(spill_dir), sf_dir, out_dir, only)
+    finally:
+        shutil.rmtree(spill_dir, ignore_errors=True)
+
+def compare(con, sf_dir, out_dir, only):
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
