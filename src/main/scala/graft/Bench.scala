@@ -2,50 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    // Silence log4j2 BEFORE the session starts: the harness JSON-parses
-    // the tail of combined output, and Spark's INFO startup/shutdown
-    // spew on stderr can flush after stdout's JSON line and evict it
-    // from the captured tail (BENCH_r03 recorded parsed:null with a
-    // log-noise tail). With the root logger at ERROR the entire stderr
-    // stream stays a few lines, so the JSON line always survives.
-    try org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r21 (guide §2.1/§9): never use the bypass-merge shuffle writer.
-      // It opens (reduce partitions) files PER MAP TASK — a 32-map ×
-      // 32-reduce shuffle creates ~1024 temp files + merges, and on
-      // this host's high-latency virtualized disk file creation
-      // dominates: measured 0.53 s → 0.16 s for one 2-stage shuffle
-      // of 4000 rows (OPTIMIZATION_r21.md). The sort-based writer streams one
-      // file + index per map task. Scale posture: at production
-      // shuffle.partitions (≫ 200) the bypass writer never engages
-      // regardless of this threshold, so the setting only affects
-      // small-reduce-count shuffles, where the sort writer is the
-      // right choice on any storage. Override via env if a deployment
-      // wants the stock default back.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      // r21: the generated-class cache defaults to 100 entries; a
-      // 443-query session cycles through far more codegen shapes and
-      // thrashes it, recompiling (janino, ~0.1-0.3 s each) shapes it
-      // already compiled. Scale-neutral server tuning — memory cost
-      // is a few thousand small compiled classes.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN (r21, VERDICT r20 wrong #3): the recurring
-    // WindowExec bounded-table warnings and the _delta_log
-    // all-paths-ignored WARN are adjudicated cosmetic (PlanAuditSpec
-    // pins every unpartitioned window to a bounded table), but
-    // multi-line stderr spew near the end of the run risks evicting
-    // the stdout JSON line from the harness's captured tail
-    // (BASELINE.md protocol note 5).
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.cpus)
     // session warmup outside the timed region: scheduler + codegen +
     // parquet-footer machinery; otherwise the first query's number is
     // ~4s of JVM warmup, not query cost.
@@ -102,29 +60,33 @@ object Bench {
     // measured protocol is untouched
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val (results, failed) = timeQueries(SparkEntry.queries.toSeq.sortBy(_._1)
+    val (results, failed) = timeQueries(spark, SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) => name -> (() => fn(spark, sfDir).count()) },
       // per-query cache scope: a query's persist() must not leak storage
       // (or an unfair warm read) into the next query's measurement
       () => spark.sharedState.cacheManager.clearCache())
-    val (compact, full) = report(results, failed, sfDir)
+    val (compact, full) = report(results, failed, sfDir, config(spark))
     println(compact)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"), full + "\n")
-    catch { case _: Throwable => }
+    catch { case e: Throwable => System.err.println(s"[bench] BENCH_LOCAL.json not written: $e") }
     spark.stop()
   }
 
-  /** Runs each query in order and times it. A query that throws is
-    * reported on stderr and returned under `failed`, untimed: its
-    * elapsed time up to the throw measures nothing, so it never enters
-    * the total. `after` runs after every query, failed or not. */
-  def timeQueries(queries: Seq[(String, () => Any)], after: () => Unit = () => ())
-      : (Seq[(String, Double)], Seq[String]) = {
+  /** Runs each query in order and times it, counting the jobs it
+    * launched (the listener drains stay off the clock). A query that
+    * throws is reported on stderr and returned under `failed`, untimed:
+    * its elapsed time up to the throw measures nothing, so it never
+    * enters the total. `after` runs after every query, failed or not. */
+  def timeQueries(spark: SparkSession, queries: Seq[(String, () => Any)],
+      after: () => Unit = () => ()): (Seq[(String, Double, Int)], Seq[String]) = {
     val outcomes = queries.map { case (name, run) =>
-      val t0 = System.nanoTime()
-      val out = try { run(); Right((System.nanoTime() - t0) / 1e9) } catch {
+      val out = try Right(JobCounter.jobsOf(spark) {
+        val t0 = System.nanoTime()
+        run()
+        (System.nanoTime() - t0) / 1e9
+      }) catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e")
           Left(name)
@@ -132,32 +94,40 @@ object Bench {
       after()
       name -> out
     }
-    (outcomes.collect { case (name, Right(dt)) => name -> dt },
+    (outcomes.collect { case (name, Right((dt, jobs))) => (name, dt, jobs) },
      outcomes.collect { case (_, Left(name)) => name })
   }
 
+  /** The session config a run was measured under, as JSON members. */
+  def config(spark: SparkSession): String =
+    s""""cpus":${spark.sparkContext.defaultParallelism},"master":"${spark.sparkContext.master}",""" +
+    s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+    s""""aqe":${spark.conf.get("spark.sql.adaptive.enabled")}"""
+
   /** The compact stdout line and the full BENCH_LOCAL.json line. The
     * total sums the timed queries only; `failed` lists the rest, and
-    * `n_queries` counts both.
-    * Full per-query detail goes to BENCH_LOCAL.json (committed to the
-    * repo). stdout gets a COMPACT line: the driver keeps only the last
-    * ~2000 chars of output and JSON-parses from there — the full
-    * 115-query map is ~2.6 KB and was truncated mid-line in rounds 1–2
-    * (BENCH_r01/r02 recorded parsed:null). Slowest 25 queries cover
-    * everything perf-attributable; the rest are sub-second. */
-  def report(results: Seq[(String, Double)], failed: Seq[String], sfDir: String)
-      : (String, String) = {
+    * `n_queries` counts both. Both lines carry the session `config`.
+    * Full per-query detail (seconds and jobs) goes to BENCH_LOCAL.json
+    * (committed to the repo). stdout gets a COMPACT line: the driver
+    * keeps only the last ~2000 chars of output and JSON-parses from
+    * there — the full 115-query map is ~2.6 KB and was truncated
+    * mid-line in rounds 1–2 (BENCH_r01/r02 recorded parsed:null).
+    * Slowest 25 queries cover everything perf-attributable; the rest
+    * are sub-second. */
+  def report(results: Seq[(String, Double, Int)], failed: Seq[String], sfDir: String,
+      config: String): (String, String) = {
     val total = results.map(_._2).sum
-    def js(rs: Iterable[(String, Double)]): String =
-      rs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    def js(rs: Iterable[(String, Double, Int)]): String =
+      rs.map { case (k, v, _) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     def names(ns: Seq[String]): String = ns.map(n => s""""$n"""").mkString("[", ",", "]")
+    val jobs = results.map { case (k, _, n) => s""""$k":$n""" }.mkString("{", ",", "}")
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(results)},""" +
-      s""""failed":${names(failed)},"sf":"$sfDir"}"""
+      s""""jobs":$jobs,"failed":${names(failed)},$config,"sf":"$sfDir"}"""
     val slowest = results.sortBy(-_._2).take(25)
     val compact =
       f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_queries":${results.size + failed.size},""" +
       s""""queries":${js(slowest)},"queries_note":"slowest 25 of ${results.size} timed; full map in repo BENCH_LOCAL.json",""" +
-      s""""n_failed":${failed.size},"failed":${names(failed.take(25))},"sf":"$sfDir"}"""
+      s""""n_failed":${failed.size},"failed":${names(failed.take(25))},$config,"sf":"$sfDir"}"""
     (compact, full)
   }
 }

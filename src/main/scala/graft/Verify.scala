@@ -1,29 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // keep Spark's log spew out of the harness-captured output (same
-    // rationale as Bench); [verify] failure lines print to stderr
-    // directly and are unaffected
-    try org.apache.logging.log4j.core.config.Configurator.setRootLevel(
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => }
     val sfDir = args(0)
     val outDir = args(1)
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cpus)
     new java.io.File(outDir).mkdirs()
     // ADVICE r5: the MaxShingleDf stop-shingle cap is exactness-critical
     // for the pair family — the DuckDB oracles compute UNCAPPED stats,

@@ -3,7 +3,7 @@ package graft
 import graft.operators.{Similarity, Vectors}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.graftx.testShims
+import org.apache.spark.sql.graftx.shims
 import scala.collection.mutable
 
 /** The graph walks' job shape, counted by a listener: a walk round is
@@ -35,12 +35,12 @@ class GraphWalkShapeSpec extends SparkSpec {
   }
 
   private def recorded[T](f: => T): (T, Recorder) = {
-    testShims.drainListeners(spark)
+    shims.drainListeners(spark)
     val r = new Recorder
     spark.sparkContext.addSparkListener(r)
     try {
       val out = f
-      testShims.drainListeners(spark)
+      shims.drainListeners(spark)
       (out, r)
     } finally spark.sparkContext.removeSparkListener(r)
   }

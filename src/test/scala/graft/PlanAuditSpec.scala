@@ -1125,7 +1125,7 @@ class PlanAuditSpec extends SparkSpec {
     // InferFiltersFromGenerate synthesizes size(x) > 0 over an explode
     // child, predicate pushdown substitutes the projection in, and the
     // whole tokenize/shingle/hash kernel re-evaluates per input row
-    // below the Generate. GenFilterSweep.offendingFilters detects both
+    // below the Generate. Dev.offendingFilters detects both
     // signatures (a HOF lambda inside a Filter condition, or
     // size(<non-attribute>)); this walk keeps the entire query surface
     // clean. dq_expectations is allowlisted: its hit is size() over an
@@ -1133,7 +1133,7 @@ class PlanAuditSpec extends SparkSpec {
     // one-row frame, not a corpus-scale kernel.
     val allow = Set("dq_expectations")
     val bad = SparkEntry.queries.keys.toSeq.sorted.filterNot(allow).flatMap { n =>
-      GenFilterSweep.offendingFilters(
+      Dev.offendingFilters(
         SparkEntry.queries(n)(spark, sf001).queryExecution.optimizedPlan)
         .map { case (kind, cond) => s"$n [$kind] $cond" }
     }

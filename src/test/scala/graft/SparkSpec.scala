@@ -9,18 +9,11 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole suite (forked test JVM). */
+/** One shared local session for the whole suite (forked test JVM),
+  * from the mains' factory. Four cores, whatever `SPARK_GRAFT_CPUS`
+  * says: the plan-shape specs assume 4 shuffle partitions. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.build(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -47,6 +40,16 @@ trait SparkSpec extends AnyFunSuite {
       go.countDown()
       Await.result(Future.sequence(fs), 10.minutes)
     } finally pool.shutdown()
+  }
+
+  /** Run `f` with session confs set, restoring the previous values. */
+  def withConfs[T](spark: SparkSession, kvs: (String, String)*)(f: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Set equality of two DataFrames with identical schemas. */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.JobCounter.{jobsOf, withConfs}
+import graft.JobCounter.jobsOf
 import graft.operators.{Aggregations, Joins, Ragged, SortSetOps, Windows}
 
 /** Job budget of the engine-side `ragged_analytics` benchmark queries,

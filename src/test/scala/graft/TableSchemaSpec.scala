@@ -1,6 +1,6 @@
 package graft
 
-import graft.JobCounter.{jobsOf, withConfs}
+import graft.JobCounter.jobsOf
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
