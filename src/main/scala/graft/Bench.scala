@@ -74,28 +74,35 @@ object Bench {
     spark.stop()
   }
 
-  /** Runs each query in order and times it, counting the jobs it
-    * launched (the listener drains stay off the clock). A query that
-    * throws is reported on stderr and returned under `failed`, untimed:
-    * its elapsed time up to the throw measures nothing, so it never
-    * enters the total. `after` runs after every query, failed or not. */
+  /** One timed query: wall seconds and the jobs, stages and tasks it
+    * launched. */
+  final case class Timed(name: String, secs: Double, jobs: Int, stages: Int, tasks: Int)
+
+  /** Runs each query in order and times it, counting the jobs, stages
+    * and tasks it launched (the listener drains stay off the clock). A
+    * query that throws is reported on stderr and returned under
+    * `failed`, untimed: its elapsed time up to the throw measures
+    * nothing, so it never enters the total. `after` runs after every
+    * query, failed or not. */
   def timeQueries(spark: SparkSession, queries: Seq[(String, () => Any)],
-      after: () => Unit = () => ()): (Seq[(String, Double, Int)], Seq[String]) = {
+      after: () => Unit = () => ()): (Seq[Timed], Seq[String]) = {
     val outcomes = queries.map { case (name, run) =>
-      val out = try Right(JobCounter.jobsOf(spark) {
-        val t0 = System.nanoTime()
-        run()
-        (System.nanoTime() - t0) / 1e9
-      }) catch {
+      val out = try {
+        val (dt, c) = JobCounter.countsOf(spark) {
+          val t0 = System.nanoTime()
+          run()
+          (System.nanoTime() - t0) / 1e9
+        }
+        Right(Timed(name, dt, c.jobs, c.stages, c.tasks))
+      } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e")
           Left(name)
       }
       after()
-      name -> out
+      out
     }
-    (outcomes.collect { case (name, Right((dt, jobs))) => (name, dt, jobs) },
-     outcomes.collect { case (_, Left(name)) => name })
+    (outcomes.collect { case Right(t) => t }, outcomes.collect { case Left(name) => name })
   }
 
   /** The session config a run was measured under, as JSON members. */
@@ -107,23 +114,25 @@ object Bench {
   /** The compact stdout line and the full BENCH_LOCAL.json line. The
     * total sums the timed queries only; `failed` lists the rest, and
     * `n_queries` counts both. Both lines carry the session `config`.
-    * Full per-query detail (seconds and jobs) goes to BENCH_LOCAL.json
+    * Full per-query detail (seconds, jobs, stages, tasks) goes to BENCH_LOCAL.json
     * (committed to the repo). stdout gets a COMPACT line: the driver
     * keeps only the last ~2000 chars of output and JSON-parses from
     * there — the full 115-query map is ~2.6 KB and was truncated
     * mid-line in rounds 1–2 (BENCH_r01/r02 recorded parsed:null).
     * Slowest 25 queries cover everything perf-attributable; the rest
     * are sub-second. */
-  def report(results: Seq[(String, Double, Int)], failed: Seq[String], sfDir: String,
+  def report(results: Seq[Timed], failed: Seq[String], sfDir: String,
       config: String): (String, String) = {
-    val total = results.map(_._2).sum
-    def js(rs: Iterable[(String, Double, Int)]): String =
-      rs.map { case (k, v, _) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    val total = results.map(_.secs).sum
+    def js(rs: Iterable[Timed]): String =
+      rs.map(t => f""""${t.name}":${t.secs}%.3f""").mkString("{", ",", "}")
     def names(ns: Seq[String]): String = ns.map(n => s""""$n"""").mkString("[", ",", "]")
-    val jobs = results.map { case (k, _, n) => s""""$k":$n""" }.mkString("{", ",", "}")
+    def counts(n: Timed => Int): String =
+      results.map(t => s""""${t.name}":${n(t)}""").mkString("{", ",", "}")
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(results)},""" +
-      s""""jobs":$jobs,"failed":${names(failed)},$config,"sf":"$sfDir"}"""
-    val slowest = results.sortBy(-_._2).take(25)
+      s""""jobs":${counts(_.jobs)},"stages":${counts(_.stages)},"tasks":${counts(_.tasks)},""" +
+      s""""failed":${names(failed)},$config,"sf":"$sfDir"}"""
+    val slowest = results.sortBy(-_.secs).take(25)
     val compact =
       f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_queries":${results.size + failed.size},""" +
       s""""queries":${js(slowest)},"queries_note":"slowest 25 of ${results.size} timed; full map in repo BENCH_LOCAL.json",""" +

@@ -134,7 +134,15 @@ object Tables {
     * ADC) no longer need it — their rounds are exchange-free
     * [[graft.operators.Similarity.GraphWalk]] fetches — so the public
     * `Corpus` ANN path never flips it. The other four go once their
-    * loops take their partitioning from the plan. */
+    * loops take their partitioning from the plan.
+    *
+    * HAZARD 2: AQE off also drops AQE's stage cache, which runs a
+    * subtree planned twice in one query only once. Static exchange
+    * reuse is no substitute: it missed the NND round's two projections
+    * of one scored-pair pipeline (5 hash exchanges where 3 were
+    * needed; only the broadcast was reused). A scope body must plan
+    * each subtree once — one generator emitting both edge directions,
+    * not a union of two projections (`NndRoundShapeSpec` pins it). */
   def withAqeOff[T](spark: SparkSession)(f: => T): T = {
     val k = "spark.sql.adaptive.enabled"
     val prev = spark.conf.getOption(k)

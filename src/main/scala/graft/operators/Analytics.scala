@@ -169,8 +169,7 @@ object Analytics {
     // by count — cheap on the checkpoint, and the over-budget path
     // never pays a wasted driver collect (the sf0.1 fixture's 591k
     // part→supplier edges land on the distributed arm)
-    val e = e0.select(col("src").cast("long").as("src"),
-                      col("dst").cast("long").as("dst"))
+    val e = longEdges(e0)
       .localCheckpoint(false) // r22: materialized by the budget count
     if (e.count() <= HitsLocalMaxEdges) {
       val edges = e.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -215,9 +214,13 @@ object Analytics {
     top(a, "auth") ++ top(h, "hub")
   }
 
+  /** The edge list both arms run on: src/dst as bigint node ids. */
+  private def longEdges(e0: DataFrame): DataFrame =
+    e0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+
   /** The distributed rounds — the >[[HitsLocalMaxEdges]] arm. */
   private[graft] def hitsRoundsDistributed(e0: DataFrame, iters: Int): DataFrame =
-    hitsRoundsOnCheckpointed(e0.localCheckpoint(), iters)
+    hitsRoundsOnCheckpointed(longEdges(e0).localCheckpoint(), iters)
 
   /** Node budget for the distributed arm's per-round broadcast hint:
     * score frames are (node, double) rows, ~16 B each plus overhead —

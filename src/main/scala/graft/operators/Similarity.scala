@@ -240,6 +240,17 @@ object Similarity {
       knnGraphNnDescentScoredBody(emb, m, rounds)
     }
 
+  /** (vec_id, nbr_id, cos) edges src→dst AND dst→src for every row of
+    * `df`, emitted by one generator so `df`'s plan is evaluated once:
+    * the NND bodies run with AQE off, where a union of two projections
+    * plans `df` twice (over a pipeline, every exchange twice; over a
+    * checkpoint, two scans and twice the map tasks). */
+  private def bothWays(df: DataFrame, src: String, dst: String): DataFrame =
+    df.select(explode(array(
+        struct(col(src).as("vec_id"), col(dst).as("nbr_id"), col("cos")),
+        struct(col(dst).as("vec_id"), col(src).as("nbr_id"), col("cos")))).as("d"))
+      .select("d.vec_id", "d.nbr_id", "d.cos")
+
   private def knnGraphNnDescentScoredBody(
       emb: DataFrame, m: Int, rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -331,9 +342,7 @@ object Similarity {
       // ascending order restores the window's relative order — the
       // slice is the same ≤ NndUndCap cut, and i<j over the id-sorted
       // capped array is the same a<b pair predicate.
-      val cand = e
-        .unionByName(e.select(col("nbr_id").as("vec_id"),
-                              col("vec_id").as("nbr_id"), col("cos")))
+      val cand = bothWays(e, "vec_id", "nbr_id")
         .repartition(col("vec_id"))
         .groupBy("vec_id", "nbr_id").agg(max(col("cos")).as("cos"))
         .groupBy("vec_id")
@@ -357,10 +366,10 @@ object Similarity {
         .join(v.select(col("vec_id").as("b"), col("embedding").as("vb")), Seq("b"))
         .select(col("a"), col("b"),
                 fround(cosine(col("va"), col("vb")), 4).as("cos"))
-      val newDir = scoredPairs
-        .select(col("a").as("vec_id"), col("b").as("nbr_id"), col("cos"))
-        .unionByName(scoredPairs
-          .select(col("b").as("vec_id"), col("a").as("nbr_id"), col("cos")))
+      // one pass over scoredPairs: with AQE off, static exchange reuse
+      // would dedupe only the `v` broadcast of a second projection —
+      // the candidate pipeline and its two exchanges would run twice
+      val newDir = bothWays(scoredPairs, "a", "b")
       e = topM(e.unionByName(newDir)).localCheckpoint()
     }
     e
@@ -443,9 +452,7 @@ object Similarity {
       .where(col("rnk") <= GraphM)
       .select("vec_id", "nbr_id", "cos")
     val seedTop = topM(armCand).localCheckpoint()
-    val und = gc
-      .unionByName(gc.select(col("nbr_id").as("vec_id"),
-                             col("vec_id").as("nbr_id"), col("cos")))
+    val und = bothWays(gc, "vec_id", "nbr_id")
       .repartition(col("vec_id"))
       .groupBy("vec_id", "nbr_id").agg(max(col("cos")).as("cos"))
       .withColumn("rn", row_number().over(
@@ -464,9 +471,7 @@ object Similarity {
       .select(col("vec_id"), col("nbr_id"),
               fround(cosine(col("va"), col("vb")), 4).as("cos"))
     val newEdges = topM(seedTop.unionByName(expandScored)).localCheckpoint()
-    topM(gc.unionByName(newEdges)
-           .unionByName(newEdges.select(col("nbr_id").as("vec_id"),
-                                        col("vec_id").as("nbr_id"), col("cos"))))
+    topM(gc.unionByName(bothWays(newEdges, "vec_id", "nbr_id")))
       .select("vec_id", "nbr_id")
   }
 

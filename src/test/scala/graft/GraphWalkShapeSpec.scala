@@ -1,69 +1,27 @@
 package graft
 
 import graft.operators.{Similarity, Vectors}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.graftx.shims
-import scala.collection.mutable
 
 /** The graph walks' job shape, counted by a listener: a walk round is
   * at most one job and that job's plan has no exchange, a round whose
   * frontier was already fetched launches no job, and no walk writes
   * `spark.sql.adaptive.enabled` (session-global conf). */
 class GraphWalkShapeSpec extends SparkSpec {
-  import spark.implicits._
+  /** The walk rounds: the only plans the walks build with a Union. */
+  private def fetches(r: SqlRecorder): Seq[(String, Int)] =
+    r.plans.filter(_._1.contains("Union"))
 
-  /** SQL executions (plan, modified confs) and their job counts. */
-  private final class Recorder extends SparkListener {
-    val executions = mutable.LinkedHashMap.empty[Long, SparkListenerSQLExecutionStart]
-    val jobs = mutable.HashMap.empty[Long, Int].withDefaultValue(0)
-    var allJobs = 0
-    override def onOtherEvent(ev: SparkListenerEvent): Unit = ev match {
-      case s: SparkListenerSQLExecutionStart => synchronized(executions(s.executionId) = s)
-      case _ =>
-    }
-    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-      allJobs += 1
-      Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-        .foreach(id => jobs(id.toLong) += 1)
-    }
-    /** The walk rounds: the only plans the walks build with a Union. */
-    def fetches: Seq[(String, Int)] = synchronized {
-      executions.values.toSeq.filter(_.physicalPlanDescription.contains("Union"))
-        .map(s => (s.physicalPlanDescription, jobs(s.executionId)))
-    }
-  }
+  private def recorded[T](f: => T): (T, SqlRecorder) = SqlRecorder.recorded(spark)(f)
 
-  private def recorded[T](f: => T): (T, Recorder) = {
-    shims.drainListeners(spark)
-    val r = new Recorder
-    spark.sparkContext.addSparkListener(r)
-    try {
-      val out = f
-      shims.drainListeners(spark)
-      (out, r)
-    } finally spark.sparkContext.removeSparkListener(r)
-  }
-
-  private def assertRoundShape(r: Recorder, what: String): Unit = {
-    assert(r.fetches.nonEmpty, s"$what: no walk round was recorded")
-    for ((plan, jobs) <- r.fetches) {
+  private def assertRoundShape(r: SqlRecorder, what: String): Unit = {
+    assert(fetches(r).nonEmpty, s"$what: no walk round was recorded")
+    for ((plan, jobs) <- fetches(r)) {
       assert(jobs <= 1, s"$what: a round ran $jobs jobs\n$plan")
       assert(!plan.contains("Exchange"), s"$what: a round plans an exchange\n$plan")
     }
     val aqeWrites = r.executions.values.flatMap(_.modifiedConfigs.get("spark.sql.adaptive.enabled"))
     assert(!aqeWrites.exists(_ == "false"), s"$what: ran a query with AQE switched off")
   }
-
-  private def chain(n: Int) = (0L until n.toLong).map { i =>
-    val t = i.toDouble / (n - 1)
-    val v = Array.tabulate(64) { d =>
-      (if (d == 0) math.cos(t * math.Pi / 2)
-       else if (d == 1) math.sin(t * math.Pi / 2)
-       else 0.02 * math.sin(0.7 * d + 0.3 * i)).toFloat
-    }
-    (i, v, (i % 5).toInt)
-  }.toDF("vec_id", "embedding", "label")
 
   test("a beam round is one exchange-free job; rounds past the fixpoint launch none") {
     val e = chain(120)
@@ -76,9 +34,9 @@ class GraphWalkShapeSpec extends SparkSpec {
     assertRoundShape(rFull, "beam, earlyExit = false")
     // the chain converges before GraphRounds: the unrolled rounds after
     // the fixpoint find their frontier fetched and launch nothing
-    assert(rFull.fetches.size == rFast.fetches.size &&
-           rFull.fetches.size < Similarity.GraphRounds + 1,
-      s"fetch jobs: earlyExit ${rFast.fetches.size}, unrolled ${rFull.fetches.size}")
+    assert(fetches(rFull).size == fetches(rFast).size &&
+           fetches(rFull).size < Similarity.GraphRounds + 1,
+      s"fetch jobs: earlyExit ${fetches(rFast).size}, unrolled ${fetches(rFull).size}")
     // the entry-point aggregate still plans adaptively: AQE stayed on
     assert(rFull.executions.values.exists(
       _.physicalPlanDescription.contains("AdaptiveSparkPlan")))
@@ -89,11 +47,11 @@ class GraphWalkShapeSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf001)
     val (_, rBatch) = recorded(Similarity.graphBeamBatch(e, g, 10).collect())
     assertRoundShape(rBatch, "batch")
-    assert(rBatch.fetches.size <= Similarity.GraphRounds + 1)
+    assert(fetches(rBatch).size <= Similarity.GraphRounds + 1)
     Vectors.pqPrelude(spark, sf001) // the codebook is index state, built outside
     val (_, rPq) = recorded(Vectors.graphPqWalk(spark, sf001, g).collect())
     assertRoundShape(rPq, "ADC walk")
-    assert(rPq.fetches.size <= Similarity.GraphRounds + 1)
+    assert(fetches(rPq).size <= Similarity.GraphRounds + 1)
   }
 
   test("a fetch of ids already fetched launches no job") {

@@ -68,6 +68,22 @@ class HitsSpec extends SparkSpec {
            rows(Analytics.hitsRoundsDistributed(e, Analytics.HitsIters)))
   }
 
+  test("both arms read a non-bigint edge list as bigint node ids: " +
+       "string ids \"1\" and \"01\" are one node on either arm") {
+    val e = Seq(("1", "200"), ("01", "200"), ("2", "200"), ("2", "201"))
+      .toDF("src", "dst")
+    val local = Analytics.hitsRounds(e, Analytics.HitsIters)
+    val dist = Analytics.hitsRoundsDistributed(e, Analytics.HitsIters)
+    def types(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(types(dist) == types(local))
+    assert(dist.schema("node").dataType == org.apache.spark.sql.types.LongType)
+    assert(dist.collect().toSeq == local.collect().toSeq)
+    // node 1 links 200 twice (a(200) = 3 after round one), node 2
+    // links 200 and 201: hub 1 leads, and no hub "01" exists
+    assert(dist.where(col("side") === "hub").select("node").as[Long].collect().toSeq ==
+           Seq(1L, 2L))
+  }
+
   test("fixture query: both sides present, scores in (0, 1], non-increasing") {
     val out = SparkEntry.queries("graph_hits")(spark, sf001).collect()
     val sides = out.map(_.getString(0)).distinct.toSet

@@ -52,6 +52,23 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** A navigable chain of `n` vectors in 64 dims, (vec_id, embedding,
+    * label): vector i interpolates between two orthogonal anchors, so
+    * cosine falls off monotonically with |i − j|; 5 labels interleave. */
+  def chain(n: Int): DataFrame = {
+    val s = spark
+    import s.implicits._
+    (0L until n.toLong).map { i =>
+      val t = i.toDouble / (n - 1)
+      val v = Array.tabulate(64) { d =>
+        (if (d == 0) math.cos(t * math.Pi / 2)
+         else if (d == 1) math.sin(t * math.Pi / 2)
+         else 0.02 * math.sin(0.7 * d + 0.3 * i)).toFloat
+      }
+      (i, v, (i % 5).toInt)
+    }.toDF("vec_id", "embedding", "label")
+  }
+
   /** Set equality of two DataFrames with identical schemas. */
   def assertSameRows(a: DataFrame, b: DataFrame, hint: String = ""): Unit = {
     val extraA = a.exceptAll(b).count()
