@@ -79,7 +79,8 @@ object Bench {
   final case class Timed(name: String, secs: Double, jobs: Int, stages: Int, tasks: Int)
 
   /** Runs each query in order and times it, counting the jobs, stages
-    * and tasks it launched (the listener drains stay off the clock). A
+    * and tasks it launched, which carry the query's name as their call
+    * site (the drains and the call-site set stay off the clock). A
     * query that throws is reported on stderr and returned under
     * `failed`, untimed: its elapsed time up to the throw measures
     * nothing, so it never enters the total. `after` runs after every
@@ -88,11 +89,11 @@ object Bench {
       after: () => Unit = () => ()): (Seq[Timed], Seq[String]) = {
     val outcomes = queries.map { case (name, run) =>
       val out = try {
-        val (dt, c) = JobCounter.countsOf(spark) {
+        val (dt, c) = JobCounter.countsOf(spark)(JobCounter.named(spark, name) {
           val t0 = System.nanoTime()
           run()
           (System.nanoTime() - t0) / 1e9
-        }
+        })
         Right(Timed(name, dt, c.jobs, c.stages, c.tasks))
       } catch {
         case e: Throwable =>

@@ -10,8 +10,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
   * `cpus=N`, so every number printed carries its core count.
   *  - `time`: wall time, rows, and the jobs/stages/tasks each query
   *    launched (each job is a driver-synchronized barrier), with its
-  *    slowest stages. Bench's measurement shape: warm-up outside the
-  *    clock, `count()` once, cache cleared per query.
+  *    slowest stages, each named after the query (its call site).
+  *    Bench's measurement shape: warm-up outside the clock, `count()`
+  *    once, cache cleared per query.
   *  - `plan`: the formatted plan of each query, to eyeball pushdown,
   *    broadcast and shuffle shape (PlanAuditSpec pins the load-bearing
   *    properties).
@@ -33,11 +34,11 @@ object Dev {
       spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
     } catch { case _: Throwable => }
     for (n <- names) {
-      val ((rows, dt), c) = JobCounter.countsOf(spark) {
+      val ((rows, dt), c) = JobCounter.countsOf(spark)(JobCounter.named(spark, n) {
         val t0 = System.nanoTime()
         val rows = SparkEntry.queries(n)(spark, sfDir).count()
         (rows, (System.nanoTime() - t0) / 1e9)
-      }
+      })
       println(f"$n%-28s $dt%8.2f s  rows=$rows  jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
       c.stageRows.sortBy(-_._3).take(10).foreach { case (id, nt, ms, nm) =>
         println(f"    stage $id%5d  $ms%6d ms  $nt%4d tasks  $nm")

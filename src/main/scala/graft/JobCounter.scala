@@ -36,6 +36,14 @@ object JobCounter {
     } finally spark.sparkContext.removeSparkListener(c)
   }
 
+  /** Runs `f` with `name` as the Spark call site, so every job and
+    * stage it launches (AQE's stage threads inherit the property) is
+    * named after it instead of after the JVM frame that submitted it. */
+  def named[T](spark: SparkSession, name: String)(f: => T): T = {
+    spark.sparkContext.setCallSite(name)
+    try f finally spark.sparkContext.clearCallSite()
+  }
+
   def jobsOf[T](spark: SparkSession)(f: => T): (T, Int) = {
     val (out, c) = countsOf(spark)(f)
     (out, c.jobs)

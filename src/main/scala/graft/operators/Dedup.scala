@@ -592,12 +592,6 @@ object Dedup {
     col("inter").cast("double") /
       (col("nsh_a") + col("nsh_b") - col("inter")).cast("double")
 
-  /** Connected components of an undirected pair graph (cols `a`, `b`)
-    * by Pregel-style min-label propagation: each round is one join +
-    * one min-aggregate, labels only decrease, and Σlabel is strictly
-    * monotone — an unchanged sum IS the fixpoint. Converges in
-    * O(diameter) rounds; near-dup graphs are clique-ish so diameters
-    * are tiny. Returns (node, cluster = min node of its component). */
   /** [[blockedJaccardPairs]] through the artifact memo: triage
     * (`graph_degree`), clustering (`dedup_cluster`) and reachability
     * (`graph_bfs`) all read the SAME pair graph, and a production
@@ -659,6 +653,11 @@ object Dedup {
   private def forceDistributed: Boolean =
     sys.props.get("graft.cc.forceDistributed").contains("true")
 
+  /** Connected components of an undirected pair graph (cols `a`, `b`):
+    * returns (node, cluster = min node of its component). Edge lists
+    * up to `localMaxEdges` are solved by union-find on the driver
+    * ([[localComponents]]), larger ones by distributed large/small-star
+    * rounds ([[largeSmallStarComponents]]). */
   def connectedComponents(pairs: DataFrame,
                           localMaxEdges: Long = LocalCcMaxEdges): DataFrame = {
     // The pair-generation join upstream is the expensive part; the

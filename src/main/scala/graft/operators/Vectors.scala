@@ -2171,21 +2171,6 @@ object Vectors {
     Map("sim_ivf_layout" -> oracleIvfBase)
   }
 
-  /** The full trained-IVF oracle: [[IvfLloydIters]] Lloyd rounds
-    * unrolled as CTE pairs (aK = max-cosine assignment against c(K-1),
-    * ties to the smallest cid; mK/cK = 6-decimal-rounded decimal(24,6)
-    * member means with empty-cluster fallback to the previous round),
-    * mirroring [[lloydStep]] exactly, then assignment + 2-probe top-10
-    * against the FINAL centroids. `def`, not `val`: `oracle` above
-    * initializes first (declaration order). */
-  /** PQ CTE prelude with a NAME PREFIX so it can coexist with the IVF
-    * prelude in one WITH clause (empty prefix for the standalone PQ
-    * oracle; the composed IVF+PQ oracle uses "s"). Unrolls the SAME
-    * per-subspace k-means rounds the engine trains (seeded init,
-    * argmin-L2 with ties to the smallest code, decimal(24,6)+fround6
-    * means), ending in `{p}enc` (per-vector codes) and `{p}dt` (the
-    * squared LIST_DISTANCE ADC table). References `v`, which the
-    * caller's WITH must define first. */
   /** The OPQ permuted-view prelude shared by vec_opq and sim_ann_opq:
     * `v` (double view), per-dim 6-dp-pinned variance numerators, the
     * rank → round-robin deal, and `w` — the corpus rebuilt in
@@ -2204,6 +2189,14 @@ object Vectors {
     "(SELECT pe0.vec_id, pm.outp, pe0.x FROM pe0 JOIN pm ON pe0.pos = pm.pos) " +
     "GROUP BY vec_id)"
 
+  /** PQ CTE prelude with a NAME PREFIX so it can coexist with the IVF
+    * prelude in one WITH clause (empty prefix for the standalone PQ
+    * oracle; the composed IVF+PQ oracle uses "s"). Unrolls the SAME
+    * per-subspace k-means rounds the engine trains (seeded init,
+    * argmin-L2 with ties to the smallest code, decimal(24,6)+fround6
+    * means), ending in `{p}enc` (per-vector codes) and `{p}dt` (the
+    * squared LIST_DISTANCE ADC table). References `v`, which the
+    * caller's WITH must define first. */
   private def pqCtes(p: String, src: String = "v"): String = {
     val rounds = (1 to PqIters).map { k =>
       val prev = s"${p}c${k - 1}"
@@ -2379,10 +2372,6 @@ object Vectors {
     "FROM m LEFT JOIN exact10 e USING (vec_id) " +
     "GROUP BY m.method ORDER BY m.method"
 
-  /** IVF CTE prelude (v, pe, c0..cN, assign, q, probes) — the trained
-    * coarse index unrolled; reused verbatim by the composed IVF+PQ
-    * oracle. Defines `v`, so a caller combining it with [[pqCtes]]
-    * puts it FIRST in the WITH clause. */
   /** The IVF training/assignment CTE chain, parameterized by the
     * TRAINING corpus predicate: `tv`/`pe`/`c0` (init, Lloyd rounds)
     * see only rows matching `trainWhere`, while the final `assign` and
@@ -2419,8 +2408,19 @@ object Vectors {
     s"ORDER BY LIST_COSINE_SIMILARITY($cf.cv, q.qv) DESC, cid LIMIT 2)"
   }
 
+  /** IVF CTE prelude (v, pe, c0..cN, assign, q, probes) — the trained
+    * coarse index unrolled; reused verbatim by the composed IVF+PQ
+    * oracle. Defines `v`, so a caller combining it with [[pqCtes]]
+    * puts it FIRST in the WITH clause. */
   private[operators] def ivfCtes: String = ivfCtesWith("TRUE")
 
+  /** The full trained-IVF oracle: [[IvfLloydIters]] Lloyd rounds
+    * unrolled as CTE pairs (aK = max-cosine assignment against c(K-1),
+    * ties to the smallest cid; mK/cK = 6-decimal-rounded decimal(24,6)
+    * member means with empty-cluster fallback to the previous round),
+    * mirroring [[lloydStep]] exactly, then assignment + 2-probe top-10
+    * against the FINAL centroids. `def`, not `val`: `oracle` above
+    * initializes first (declaration order). */
   private def oracleIvfBase: String =
     "WITH " + ivfCtes + " " +
     "SELECT v.vec_id, " +

@@ -284,8 +284,8 @@ object AvroManifest {
     * PLUS `manifest-del-v.avro` (one manifest_entry per positional-
     * delete file, the nested data_file struct carrying content = 1 —
     * the spec's POSITION_DELETES marker) and a SECOND manifest_file
-    * record in the list with content = 1 and the delete-file/row
-    * counts in the deleted_* slots. This is the `content=deletes`
+    * record in the list with content = 1, its file/row counts taken by
+    * entry status like the data record's. This is the `content=deletes`
     * half of the format matrix the Delta side already had
     * (scan_delete_vectors). Returns the list path. */
   def writeSnapshotManifestsWithDeletes(
@@ -343,19 +343,13 @@ object AvroManifest {
                 fs: Seq[DataFileMeta]): Seq[Any] = {
       val added = fs.filter(_.addedSnapshotId == v)
       val existing = fs.filterNot(_.addedSnapshotId == v)
-      // a DELETES manifest accounts its files/rows in the deleted_*
-      // slots (they are rows REMOVED from the table's logical state)
-      if (content == 1)
-        Seq[Any](mp.toString, java.nio.file.Files.size(mp), 0, 1, v,
-                 if (fs.isEmpty) v else fs.map(_.addedSnapshotId).min,
-                 v, 0, 0, fs.size, 0L, 0L, fs.map(_.recordCount).sum,
-                 null, null)
-      else
-        Seq[Any](mp.toString, java.nio.file.Files.size(mp), 0, 0, v,
-                 if (fs.isEmpty) v else fs.map(_.addedSnapshotId).min,
-                 v, added.size, existing.size, 0,
-                 added.map(_.recordCount).sum,
-                 existing.map(_.recordCount).sum, 0L, null, null)
+      // counts by entry status (the spec's rule for both manifest
+      // kinds): [[entryRows]] writes every entry ADDED or EXISTING
+      Seq[Any](mp.toString, java.nio.file.Files.size(mp), 0, content, v,
+               if (fs.isEmpty) v else fs.map(_.addedSnapshotId).min,
+               v, added.size, existing.size, 0,
+               added.map(_.recordCount).sum,
+               existing.map(_.recordCount).sum, 0L, null, null)
     }
     val listPath = outDir.resolve(s"snap-$v.avro")
     writeAtomic(listPath, AvroContainer.encode(

@@ -47,11 +47,6 @@ object Streams {
       .agg(big(count(lit(1))).as("n"))
       .select(col("w.start").as("wstart"), col("bin"), col("n"))
 
-  /** Streaming-freshness stage 1 (the streaming-native mergeable
-    * grid): per (event_type, hour window) arrival count + newest
-    * event µs — exactly the state a live freshness monitor keeps
-    * (lanes × hours, never per-event). Shared verbatim by the batch
-    * declaration and StreamBatchSpec's live drive. */
   /** Streaming media-decode stage (the live half of the multimodal
     * lane): per incoming document, encode→decode a REAL PNG (the
     * planted-parameter round-trip of multimodal_image_decode) and fold
@@ -105,6 +100,11 @@ object Streams {
       .orderBy("version")
   }
 
+  /** Streaming-freshness stage 1 (the streaming-native mergeable
+    * grid): per (event_type, hour window) arrival count + newest
+    * event µs — exactly the state a live freshness monitor keeps
+    * (lanes × hours, never per-event). Shared verbatim by the batch
+    * declaration and StreamBatchSpec's live drive. */
   def freshnessCells(ev: DataFrame): DataFrame =
     ev.groupBy(col("event_type"), window(col("ts"), "1 hour").as("w"))
       .agg(big(count(lit(1))).as("n"), max(unix_micros(col("ts"))).as("tmax"))
@@ -617,11 +617,6 @@ object Streams {
     * never the snapshot size. */
   val CdcSnapshotBuckets = 8L
 
-  /** Normalize an orders change feed into CDC rows: key = o_custkey,
-    * version order = (o_orderdate, o_orderkey) — a TOTAL order, so
-    * latest-wins is well-defined under any arrival order — and op =
-    * 'd' (tombstone) for '5-LOW' priority rows, 'u' otherwise (the
-    * merge_cdc_delete stand-in rule, shared with the oracle). */
   /** STATEFUL STREAMING EWMA — the live "current trend per user"
     * feature view as a flatMapGroupsWithState job: state is the user's
     * last ≤ 19 (tsUs, eventId, cents) observations, each arriving
@@ -690,6 +685,11 @@ object Streams {
       .orderBy("user_id")
   }
 
+  /** Normalize an orders change feed into CDC rows: key = o_custkey,
+    * version order = (o_orderdate, o_orderkey) — a TOTAL order, so
+    * latest-wins is well-defined under any arrival order — and op =
+    * 'd' (tombstone) for '5-LOW' priority rows, 'u' otherwise (the
+    * merge_cdc_delete stand-in rule, shared with the oracle). */
   def cdcDelta(orders: DataFrame): DataFrame =
     orders.select(
       col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("o_orderdate"),

@@ -20,15 +20,28 @@ class IcebergDeleteManifestSpec extends SparkSpec {
     // field 3 = content (0 data, 1 deletes) per the spec's field-ids
     val byContent = recs.map(r => r(3).asInstanceOf[Number].intValue -> r).toMap
     assert(byContent.keySet == Set(0, 1))
-    val del = byContent(1)
-    // the deletes record accounts its files/rows in the deleted_* slots
-    assert(del(9).asInstanceOf[Number].intValue > 0,
-      "deleted_files_count must be positive")
-    assert(del(12).asInstanceOf[Number].longValue > 0,
-      "deleted_rows_count must be positive")
-    // and its add/existing slots stay zero — deletes are not data
-    assert(del(7).asInstanceOf[Number].intValue == 0 &&
-           del(10).asInstanceOf[Number].longValue == 0L)
+    // every record's counts follow its own entries' status (the
+    // spec's rule for data and deletes manifests alike): added /
+    // existing / deleted files and rows from status 1 / 0 / 2 and
+    // each data_file's record_count — here and in the equality and
+    // mixed snapshots' lists
+    val allRecs = recs ++ Seq(Scans.exportIcebergEqualityDeleteSnapshot(spark, root),
+                              Scans.exportIcebergMixedDeleteSnapshot(spark, root))
+      .flatMap(l => AvroContainer.decodeRows(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(l))))
+    allRecs.foreach { r =>
+      val entries = AvroContainer.decodeRows(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(r.head.asInstanceOf[String])))
+      assert(entries.nonEmpty)
+      def byStatus(st: Int) = entries.filter(_(0).asInstanceOf[Number].intValue == st)
+        .map(_(4).asInstanceOf[Array[Any]](4).asInstanceOf[Number].longValue)
+      val want = Seq(1, 0, 2).map(byStatus)
+      val files = Seq(7, 8, 9).map(r(_).asInstanceOf[Number].intValue)
+      val rows = Seq(10, 11, 12).map(r(_).asInstanceOf[Number].longValue)
+      assert(files == want.map(_.size) && rows == want.map(_.sum),
+        s"content ${r(3)}: files $files rows $rows, entries say " +
+        s"${want.map(_.size)} / ${want.map(_.sum)}")
+    }
   }
 
   test("delete manifest entries carry data_file.content = 1 (the " +

@@ -46,4 +46,14 @@ class SessionSpec extends SparkSpec {
     assert(text.contains("===== agg_hash_groupby =====") && text.contains("Physical Plan"), text)
     assert(text.contains("SWEEP DONE: 0 offending filters across 1 queries"), text)
   }
+
+  test("Dev time names every stage it lists after the query, and clears the name after") {
+    val out = new ByteArrayOutputStream
+    Console.withOut(out)(Dev.time(spark, sf001, Seq("agg_hash_groupby")))
+    val stages = out.toString.linesIterator.filter(_.trim.startsWith("stage ")).toSeq
+    assert(stages.nonEmpty && stages.forall(_.endsWith("  agg_hash_groupby")), out.toString)
+    val (_, c) = JobCounter.countsOf(spark)(spark.range(10).selectExpr("sum(id)").collect())
+    assert(c.stageRows.nonEmpty && !c.stageRows.exists(_._4.contains("agg_hash_groupby")),
+      c.stageRows)
+  }
 }
