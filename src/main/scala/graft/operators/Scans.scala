@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scan / source / sink operators (reference analog: i3cols save/load of
@@ -227,7 +228,7 @@ object Scans {
         // exactly DuckDB's epoch_us of the naive value
         .select(col("o_orderkey"),
                 unix_micros(col("o_orderdate").cast("timestamp")).as("ts"),
-                floor(col("o_totalprice") * 100).cast("long").as("cents"))
+                TotalCents.as("cents"))
         .collect()
       val d = java.nio.file.Paths.get(stage)
       java.nio.file.Files.createDirectories(d)
@@ -588,7 +589,7 @@ object Scans {
         .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
           .cast("long").as("ym"))
         .agg(big(count(lit(1))).as("n_orders"),
-             big(sum(floor(col("o_totalprice") * 100).cast("long"))).as("total_cents"))
+             big(sum(TotalCents)).as("total_cents"))
         .orderBy("ym")
     }),
 
@@ -762,18 +763,14 @@ object Scans {
     // forever at zero storage cost beyond the manifest. The query
     // reads BOTH snapshots and aggregates each — the oracle derives
     // the same two states from the cutoff predicate, so CORRECTNESS
-    // proves snapshot isolation end-to-end. TimeTravelSpec pins the
-    // physical claims (both commits' files share the directory; v2's
-    // manifest is a superset; v1 files untouched by the append).
+    // proves snapshot isolation end-to-end. NonOracleOpsSpec's
+    // "scan_time_travel: snapshots isolate through manifests, not
+    // directory state" pins the physical claims (both commits' files
+    // share the directory; v2's manifest is a superset; v1 files
+    // untouched by the append).
     "scan_time_travel" -> ((s, dir) => {
       val root = timeTravelFixture(s, dir)
-      Seq(1, 2).map { v =>
-        snapshotRead(s, root, v)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("version")
+      versionRows(s, root, 1, 2)
     }),
 
     // TIMESTAMP time travel — "the table AS OF <ts>" resolved over the
@@ -785,15 +782,10 @@ object Scans {
     // is O(1) metadata; the reads are the snapshot scans.
     "scan_time_travel_ts" -> ((s, dir) => {
       val root = timeTravelFixture(s, dir)
-      Seq(AsOfMid, AsOfLate).map { ts =>
+      summaryRows("as_of", Seq(AsOfMid, AsOfLate).map { ts =>
         val v = resolveAsOf(root, ts)
-        snapshotRead(s, root, v)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(ts).as("as_of"), lit(v).as("version"),
-                  col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("as_of")
+        Seq(lit(ts).as("as_of"), lit(v).as("version")) -> snapshotRead(s, root, v)
+      })
     }),
 
     // CATALOG INTEROP (VERDICT r16 Missing #4): export the homegrown
@@ -839,12 +831,7 @@ object Scans {
     // remove accounting. File counts/sizes stay out of the output
     // (write parallelism owns them); row stats are the invariant.
     "scan_delta_export" -> ((s, dir) => {
-      val root = deltaFixture(s, dir)
-      val logDir = deltaLogDir(root)
-      val acts = s.read.option("pathGlobFilter", "*.json").json(logDir)
-        .withColumn("version",
-          regexp_extract(col("_metadata.file_path"), "(\\d+)\\.json$", 1)
-            .cast("long"))
+      val acts = deltaActions(s, deltaFixture(s, dir))
       val commits = acts.where(col("commitInfo").isNotNull)
         .select(col("version"), col("commitInfo.timestamp").as("committed_at_ms"),
                 col("commitInfo.operation").as("operation"))
@@ -882,14 +869,8 @@ object Scans {
     // slice) from the fixture predicate — a file misattributed to the
     // wrong snapshot, or a re-listed base file, would hash-mismatch.
     "scan_iceberg_cdc" -> ((s, dir) => {
-      val root = timeTravelFixture(s, dir)
-      val metaPath = exportIcebergMetadata(root)
-      val m = s.read.option("multiLine", true).json(metaPath)
-      val snaps = m.select(explode(col("snapshots")).as("sn"))
-        .select(col("sn.`snapshot-id`").cast("long").as("sid"),
-                col("sn.`manifest-list`").as("mlist"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val fileSets = snaps.toIndexedSeq.map { case (sid, ml) =>
+      val metaPath = exportIcebergMetadata(timeTravelFixture(s, dir))
+      val fileSets = icebergSnapshots(s, metaPath).map { case (sid, ml) =>
         // the Avro manifest list, decoded by the OFFICIAL Avro reader
         // (metadata-sized; see AvroManifest's conformance argument)
         sid -> graft.sources.AvroManifest.readFilePaths(ml).toSet
@@ -902,15 +883,11 @@ object Scans {
       require(fileSets.size >= 2,
         s"scan_iceberg_cdc needs >=2 exported snapshots to diff, " +
         s"got ${fileSets.size} at $metaPath")
-      fileSets.sliding(2).collect { case Seq((a, fa), (b, fb)) =>
-        val appended = (fb -- fa).toSeq.sorted
-        s.read.parquet(appended.toIndexedSeq: _*)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(a).as("from_snapshot"), lit(b).as("to_snapshot"),
-                  col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("to_snapshot")
+      summaryRows("to_snapshot", fileSets.sliding(2).collect {
+        case Seq((a, fa), (b, fb)) =>
+          Seq(lit(a).as("from_snapshot"), lit(b).as("to_snapshot")) ->
+            s.read.parquet((fb -- fa).toSeq.sorted: _*)
+      }.toSeq)
     }),
 
     // CHANGE-DATA FEED through the Delta log (the table_changes()
@@ -924,24 +901,15 @@ object Scans {
     // oracle predicts both change batches from the cutoff predicate —
     // a double-count through the OPTIMIZE commit would hash-mismatch.
     "scan_delta_cdc" -> ((s, dir) => {
-      val root = deltaFixture(s, dir)
-      val logDir = deltaLogDir(root)
-      val acts = s.read.option("pathGlobFilter", "*.json").json(logDir)
-        .withColumn("version",
-          regexp_extract(col("_metadata.file_path"), "(\\d+)\\.json$", 1)
-            .cast("long"))
-      val changeFiles = acts
+      val changeFiles = deltaActions(s, deltaFixture(s, dir))
         .where(col("add").isNotNull && col("add.dataChange"))
         .select(col("version"), col("add.path").as("path"))
         .collect().map(r => (r.getLong(0), r.getString(1)))
-      changeFiles.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, vf) =>
-        s.read.parquet(vf.map(_._2).sorted.toIndexedSeq: _*)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(v).as("version"), lit("insert").as("change_type"),
-                  col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("version")
+      summaryRows("version", changeFiles.groupBy(_._1).toSeq.sortBy(_._1).map {
+        case (v, vf) =>
+          Seq(lit(v).as("version"), lit("insert").as("change_type")) ->
+            s.read.parquet(vf.map(_._2).sorted.toIndexedSeq: _*)
+      })
     }),
 
     // CATALOG IMPORT, ICEBERG SHAPE — data served through the
@@ -953,21 +921,11 @@ object Scans {
     // history is proven navigable, not just its head. Manifest-list
     // reads are metadata-sized; the data scans are plain parquet.
     "scan_iceberg_import" -> ((s, dir) => {
-      val root = timeTravelFixture(s, dir)
-      val metaPath = exportIcebergMetadata(root)
-      val m = s.read.option("multiLine", true).json(metaPath)
-      val snaps = m.select(explode(col("snapshots")).as("sn"))
-        .select(col("sn.`snapshot-id`").cast("long").as("sid"),
-                col("sn.`manifest-list`").as("mlist"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      snaps.toIndexedSeq.map { case (sid, mlist) =>
-        val files = graft.sources.AvroManifest.readFilePaths(mlist).sorted
-        s.read.parquet(files.toIndexedSeq: _*)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(sid).as("snapshot_id"), col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("snapshot_id")
+      val metaPath = exportIcebergMetadata(timeTravelFixture(s, dir))
+      summaryRows("snapshot_id", icebergSnapshots(s, metaPath).map { case (sid, mlist) =>
+        Seq(lit(sid).as("snapshot_id")) -> s.read.parquet(
+          graft.sources.AvroManifest.readFilePaths(mlist).sorted: _*)
+      })
     }),
 
     // MANIFEST STATS THROUGH THE SPEC-COMPLETE RECORDS (r19 — the
@@ -1018,36 +976,9 @@ object Scans {
     // per-file-local after a partition by fp; manifest walks stay
     // metadata-class.
     "scan_iceberg_delete_files" -> ((s, dir) => {
-      import s.implicits._
-      val root = deleteVectorFixture(s, dir)
-      val listPath = exportIcebergDeleteSnapshot(s, root)
-      val byContent =
-        graft.sources.AvroManifest.readContentFilePaths(listPath)
-      val dataPaths = byContent.collect { case (0, p) => p }.sorted
-      val delPaths = byContent.collect { case (1, p) => p }.sorted
-      val data = s.read.parquet(dataPaths: _*)
-        .select(
-          regexp_replace(col("_metadata.file_path"), "^file:(//)?", "")
-            .as("fp"),
-          col("_metadata.row_index").as("pos"), col("o_totalprice"))
-      val dels = s.read.format("binaryFile")
-        .load(delPaths: _*)
-        .select(col("content")).as[Array[Byte]]
-        .flatMap(graft.sources.AvroManifest.decodePositionalDeletes(_))
-        .toDF("fp", "pos").withColumn("del", lit(1L))
-      val cents = floor(col("o_totalprice") * 100).cast("long")
-      val v2 = data
-        .agg(big(count(lit(1))).as("n_rows"),
-             big(sum(cents)).as("total_cents"))
-        .select(big(lit(2L)).as("version"), col("n_rows"),
-                col("total_cents"), big(lit(0L)).as("n_deleted"))
-      val v3 = data.join(dels, Seq("fp", "pos"), "left")
-        .agg(big(count(when(col("del").isNull, 1))).as("n_rows"),
-             big(sum(when(col("del").isNull, cents))).as("total_cents"),
-             big(count(col("del"))).as("n_deleted"))
-        .select(big(lit(3L)).as("version"), col("n_rows"),
-                col("total_cents"), col("n_deleted"))
-      v2.unionByName(v3).orderBy("version")
+      val read = new IcebergDeleteRead(s,
+        exportIcebergDeleteSnapshot(s, deleteVectorFixture(s, dir)))
+      deleteApply(read.data, read.posDeletes, Seq("fp", "pos"), "pdel")
     }),
 
     // EQUALITY-DELETE MANIFESTS (the spec's OTHER delete-file kind —
@@ -1060,36 +991,12 @@ object Scans {
     // rewrites. Same oracle shape as the positional lane: both
     // encodings must reproduce the sidecar's exact effect.
     "scan_iceberg_delete_equality" -> ((s, dir) => {
-      import s.implicits._
-      val root = deleteVectorFixture(s, dir)
-      val listPath = exportIcebergEqualityDeleteSnapshot(s, root)
-      val byContent =
-        graft.sources.AvroManifest.readContentFilePaths(listPath)
-      val dataPaths = byContent.collect { case (0, p) => p }.sorted
-      val delPaths = byContent.collect { case (1, p) => p }.sorted
-      val data = s.read.parquet(dataPaths: _*)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val keys = s.read.format("binaryFile")
-        .load(delPaths: _*)
-        .select(col("content")).as[Array[Byte]]
-        .flatMap(graft.sources.AvroManifest.decodeEqualityDeletes(_))
-        .toDF("o_orderkey").withColumn("del", lit(1L))
-      val cents = floor(col("o_totalprice") * 100).cast("long")
-      val v2 = data
-        .agg(big(count(lit(1))).as("n_rows"),
-             big(sum(cents)).as("total_cents"))
-        .select(big(lit(2L)).as("version"), col("n_rows"),
-                col("total_cents"), big(lit(0L)).as("n_deleted"))
+      val read = new IcebergDeleteRead(s,
+        exportIcebergEqualityDeleteSnapshot(s, deleteVectorFixture(s, dir)))
       // the key list is compact — broadcast it; the apply is then a
       // map-side anti-join at any corpus size (a delete list larger
       // than a broadcast would drop the hint and shuffle on the key)
-      val v3 = data.join(broadcast(keys), Seq("o_orderkey"), "left")
-        .agg(big(count(when(col("del").isNull, 1))).as("n_rows"),
-             big(sum(when(col("del").isNull, cents))).as("total_cents"),
-             big(count(col("del"))).as("n_deleted"))
-        .select(big(lit(3L)).as("version"), col("n_rows"),
-                col("total_cents"), col("n_deleted"))
-      v2.unionByName(v3).orderBy("version")
+      deleteApply(read.data, broadcast(read.eqKeys), Seq("o_orderkey"), "edel")
     }),
 
     // MIXED DELETE APPLY — the full v2 read path: ONE snapshot whose
@@ -1101,38 +1008,15 @@ object Scans {
     // the deletes in and hash-mismatches. The per-kind deleted counts
     // ship as columns, so the split itself is oracle-checked.
     "scan_iceberg_delete_mixed" -> ((s, dir) => {
-      import s.implicits._
-      val root = deleteVectorFixture(s, dir)
-      val listPath = exportIcebergMixedDeleteSnapshot(s, root)
-      val dataPaths = graft.sources.AvroManifest
-        .readFilePaths(listPath).sorted
-      val delFiles = graft.sources.AvroManifest.readDeleteFiles(listPath)
-      val posPaths = delFiles.collect { case (1, p) => p }.sorted
-      val eqPaths = delFiles.collect { case (2, p) => p }.sorted
-      val data = s.read.parquet(dataPaths: _*)
-        .select(
-          regexp_replace(col("_metadata.file_path"), "^file:(//)?", "")
-            .as("fp"),
-          col("_metadata.row_index").as("pos"),
-          col("o_orderkey"), col("o_totalprice"))
-      val posDels = s.read.format("binaryFile").load(posPaths: _*)
-        .select(col("content")).as[Array[Byte]]
-        .flatMap(graft.sources.AvroManifest.decodePositionalDeletes(_))
-        .toDF("fp", "pos").withColumn("pdel", lit(1L))
-      val eqKeys = s.read.format("binaryFile").load(eqPaths: _*)
-        .select(col("content")).as[Array[Byte]]
-        .flatMap(graft.sources.AvroManifest.decodeEqualityDeletes(_))
-        .toDF("o_orderkey").withColumn("edel", lit(1L))
-      val cents = floor(col("o_totalprice") * 100).cast("long")
-      data.join(posDels, Seq("fp", "pos"), "left")
-        .join(broadcast(eqKeys), Seq("o_orderkey"), "left")
-        .agg(
-          big(count(when(col("pdel").isNull && col("edel").isNull, 1)))
-            .as("n_rows"),
-          big(sum(when(col("pdel").isNull && col("edel").isNull, cents)))
-            .as("total_cents"),
-          big(count(col("pdel"))).as("n_pos_deleted"),
-          big(count(col("edel"))).as("n_eq_deleted"))
+      val read = new IcebergDeleteRead(s,
+        exportIcebergMixedDeleteSnapshot(s, deleteVectorFixture(s, dir)))
+      val applied = read.data
+        .join(read.posDeletes, Seq("fp", "pos"), "left")
+        .join(broadcast(read.eqKeys), Seq("o_orderkey"), "left")
+      centsSummary(applied,
+          Seq(big(count(col("pdel"))).as("n_pos_deleted"),
+              big(count(col("edel"))).as("n_eq_deleted")),
+          live = Some(col("pdel").isNull && col("edel").isNull))
         .select(big(lit(3L)).as("version"), col("n_rows"),
                 col("total_cents"), col("n_pos_deleted"),
                 col("n_eq_deleted"))
@@ -1148,29 +1032,10 @@ object Scans {
     // predicts the batch from the key predicate — a wrong ordinal
     // surfaces as a wrong retracted row here, not just a wrong count.
     "scan_iceberg_cdc_deletes" -> ((s, dir) => {
-      import s.implicits._
-      val root = deleteVectorFixture(s, dir)
-      val listPath = exportIcebergDeleteSnapshot(s, root)
-      val byContent =
-        graft.sources.AvroManifest.readContentFilePaths(listPath)
-      val dataPaths = byContent.collect { case (0, p) => p }.sorted
-      val delPaths = byContent.collect { case (1, p) => p }.sorted
-      val data = s.read.parquet(dataPaths: _*)
-        .select(
-          regexp_replace(col("_metadata.file_path"), "^file:(//)?", "")
-            .as("fp"),
-          col("_metadata.row_index").as("pos"),
-          col("o_orderkey"), col("o_totalprice"))
-      val dels = s.read.format("binaryFile")
-        .load(delPaths: _*)
-        .select(col("content")).as[Array[Byte]]
-        .flatMap(graft.sources.AvroManifest.decodePositionalDeletes(_))
-        .toDF("fp", "pos")
-      data.join(dels, Seq("fp", "pos"))
-        .agg(big(count(lit(1))).as("n_rows"),
-             big(sum(floor(col("o_totalprice") * 100).cast("long")))
-               .as("total_cents"),
-             big(sum(col("o_orderkey") % 7)).as("key_residue_sig"))
+      val read = new IcebergDeleteRead(s,
+        exportIcebergDeleteSnapshot(s, deleteVectorFixture(s, dir)))
+      centsSummary(read.data.join(read.posDeletes, Seq("fp", "pos")),
+          Seq(big(sum(col("o_orderkey") % 7)).as("key_residue_sig")))
         .select(big(lit(2L)).as("from_snapshot"),
                 big(lit(3L)).as("to_snapshot"),
                 lit("delete").as("change_type"),
@@ -1188,19 +1053,14 @@ object Scans {
     // The path collect is manifest-sized metadata (the snapshotRead
     // convention); the data scan is a plain pruned parquet read.
     "scan_delta_import" -> ((s, dir) => {
-      val root = deltaFixture(s, dir)
-      val logDir = deltaLogDir(root)
-      val acts = s.read.option("pathGlobFilter", "*.json").json(logDir)
+      val acts = deltaActions(s, deltaFixture(s, dir))
       val adds = acts.where(col("add").isNotNull)
         .select(col("add.path").as("path"))
       val removes = acts.where(col("remove").isNotNull)
         .select(col("remove.path").as("path"))
       val live = adds.join(removes, Seq("path"), "left_anti")
         .collect().map(_.getString(0)).sorted
-      s.read.parquet(live.toIndexedSeq: _*)
-        .agg(big(count(lit(1))).as("n_rows"),
-             big(sum(floor(col("o_totalprice") * 100).cast("long")))
-               .as("total_cents"))
+      centsSummary(s.read.parquet(live.toIndexedSeq: _*))
     }),
 
     // RETENTION / VACUUM — the snapshot-lifecycle half of time travel
@@ -1211,18 +1071,14 @@ object Scans {
     // surviving v3 snapshot — which must still be the complete table,
     // proving expiry touched only exclusive files; the oracle derives
     // the same state (all orders + the pre-cutoff split) straight
-    // from the source table. RetentionSpec pins the physical claims:
-    // survivors byte-identical across the vacuum, expired files gone,
-    // expired reads fail loudly naming the version.
-    "scan_retention_vacuum" -> ((s, dir) => {
-      val root = retentionFixture(s, dir)
-      val cutoff = lit(TimeTravelCutoff).cast("timestamp")
-      snapshotRead(s, root, 3)
-        .agg(big(count(lit(1))).as("n_rows"),
-             big(sum(floor(col("o_totalprice") * 100).cast("long")))
-               .as("total_cents"),
-             big(count(when(col("o_orderdate") < cutoff, 1))).as("n_pre_cutoff"))
-    }),
+    // from the source table. NonOracleOpsSpec's "retention: vacuum
+    // deletes ONLY exclusive files, survivors byte-identical, expired
+    // reads loud" pins the physical claims: survivors byte-identical
+    // across the vacuum, expired files gone, expired reads fail loudly
+    // naming the version.
+    "scan_retention_vacuum" -> ((s, dir) =>
+      centsSummary(snapshotRead(s, retentionFixture(s, dir), 3),
+        Seq(big(count(when(preCutoff, 1))).as("n_pre_cutoff")))),
 
     // MERGE-ON-READ DELETE (equality-delete sidecar — Iceberg v2 /
     // Delta deletion-vector semantics): v3 deletes the o_orderkey%7
@@ -1233,16 +1089,8 @@ object Scans {
     // key predicate, so CORRECTNESS proves the delete bit both ways:
     // applied at v3, invisible at v2. NonOracleOpsSpec pins the
     // physical claim (the delete commit writes zero data files).
-    "scan_delete_vectors" -> ((s, dir) => {
-      val root = deleteVectorFixture(s, dir)
-      Seq(2, 3).map { v =>
-        snapshotRead(s, root, v)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("version")
-    }),
+    "scan_delete_vectors" -> ((s, dir) =>
+      versionRows(s, deleteVectorFixture(s, dir), 2, 3)),
 
     // SNAPSHOT ROLLBACK — the RESTORE half of the lifecycle (Delta
     // RESTORE / Iceberg rollback): undoing a bad commit is a NEW
@@ -1253,16 +1101,8 @@ object Scans {
     // and v3 (the rollback to v1) side by side: proving the restore
     // took effect AND did not disturb the version it rolled past —
     // the oracle derives both states from the cutoff predicate.
-    "scan_snapshot_rollback" -> ((s, dir) => {
-      val root = rollbackFixture(s, dir)
-      Seq(2, 3).map { v =>
-        snapshotRead(s, root, v)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("version")
-    }),
+    "scan_snapshot_rollback" -> ((s, dir) =>
+      versionRows(s, rollbackFixture(s, dir), 2, 3)),
 
     // SNAPSHOT SCHEMA EVOLUTION (VERDICT r12 #5) — the versioned
     // table's v3 commit ADDS a column (`o_flag`), so the v3 snapshot
@@ -1276,15 +1116,10 @@ object Scans {
     // VALUES survived. NonOracleOpsSpec pins the other direction:
     // pre-evolution versions read byte-identically after the v3
     // commit, whose files never touch v1/v2's.
-    "scan_snapshot_evolution" -> ((s, dir) => {
-      val root = evolutionFixture(s, dir)
-      snapshotRead(s, root, 3)
-        .agg(big(count(lit(1))).as("n_rows"),
-             big(sum(floor(col("o_totalprice") * 100).cast("long")))
-               .as("total_cents"),
-             big(count(col("o_flag"))).as("n_flagged"),
-             big(sum(col("o_flag"))).as("flag_sum"))
-    }),
+    "scan_snapshot_evolution" -> ((s, dir) =>
+      centsSummary(snapshotRead(s, evolutionFixture(s, dir), 3),
+        Seq(big(count(col("o_flag"))).as("n_flagged"),
+            big(sum(col("o_flag"))).as("flag_sum")))),
 
     // SNAPSHOT COMPACTION — the "stop paying at read" half of
     // merge-on-read (r13 left the debt documented at
@@ -1297,20 +1132,13 @@ object Scans {
     // reads v3 (sidecar applied at read) and v4 (plain scan) side by
     // side — identical aggregates prove the compaction preserved
     // exactly the surviving rows, and the oracle derives both from
-    // the delete predicate. CompactionSpec pins the physical claims:
-    // v4's manifest lists only c4_* files, no _deletes/v4 exists,
-    // and v1–v3 remain readable bit-identically (compaction is an
-    // append to history, never a rewrite of it).
-    "scan_snapshot_compact" -> ((s, dir) => {
-      val root = compactionFixture(s, dir)
-      Seq(3, 4).map { v =>
-        snapshotRead(s, root, v)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("version")
-    }),
+    // the delete predicate. NonOracleOpsSpec's "compaction: v4 is
+    // fresh files only, sidecar-free, identical to v3's read state"
+    // pins the physical claims: v4's manifest lists only c4_* files,
+    // no _deletes/v4 exists, and v1–v3 remain readable bit-identically
+    // (compaction is an append to history, never a rewrite of it).
+    "scan_snapshot_compact" -> ((s, dir) =>
+      versionRows(s, compactionFixture(s, dir), 3, 4)),
 
     // SNAPSHOT DIFF — incremental consumption between two versions
     // (Delta CDF / Iceberg incremental-scan semantics for append-only
@@ -1325,14 +1153,10 @@ object Scans {
       val root = timeTravelFixture(s, dir)
       val newFiles =
         (readManifest(root, 2).toSet -- readManifest(root, 1).toSet).toSeq.sorted
-      val cutoff = lit(TimeTravelCutoff).cast("timestamp")
       val diff =
         if (newFiles.isEmpty) snapshotRead(s, root, 2).where(lit(false))
         else s.read.parquet(newFiles: _*)
-      diff.agg(
-        big(count(lit(1))).as("n_rows"),
-        big(sum(floor(col("o_totalprice") * 100).cast("long"))).as("total_cents"),
-        big(count(when(col("o_orderdate") < cutoff, 1))).as("n_pre_cutoff"))
+      centsSummary(diff, Seq(big(count(when(preCutoff, 1))).as("n_pre_cutoff")))
     }),
 
     // NAMED TAGS — the human-addressable half of time travel (Iceberg
@@ -1352,13 +1176,7 @@ object Scans {
     // while the data directory's fingerprint stays byte-identical.
     "scan_snapshot_tag" -> ((s, dir) => {
       val root = tagFixture(s, dir)
-      Seq("audit", "prod").map { t =>
-        snapshotRead(s, root, resolveTag(root, t))
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(t).as("tag"), col("n_rows"), col("total_cents"))
-      }.reduce(_ unionByName _).orderBy("tag")
+      snapshotRows(s, root, "tag", Seq("audit", "prod").map(t => t -> resolveTag(root, t)))
     }),
 
     // THE AUDIT READ — write-audit-publish's middle step as its own
@@ -1378,10 +1196,8 @@ object Scans {
         if (staged.isEmpty)
           snapshotRead(s, root, resolveBranch(root, "audit")).where(lit(false))
         else s.read.parquet(staged: _*)
-      diff.agg(
-        big(count(lit(1))).as("n_rows"),
-        big(countDistinct(col("o_orderkey"))).as("n_keys"),
-        big(sum(floor(col("o_totalprice") * 100).cast("long"))).as("total_cents"))
+      centsSummary(diff, Seq(big(countDistinct(col("o_orderkey"))).as("n_keys")))
+        .select("n_rows", "n_keys", "total_cents")
     }),
 
     // WRITE-AUDIT-PUBLISH — branches complete the pointer family
@@ -1402,16 +1218,10 @@ object Scans {
     // byte-identical).
     "scan_branch_wap" -> ((s, dir) => {
       val root = wapFixture(s, dir)
-      def aggOf(v: Int, ref: String) =
-        snapshotRead(s, root, v)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(ref).as("ref"), col("n_rows"), col("total_cents"))
-      Seq(aggOf(resolveBranch(root, "audit"), "audit-head"),
-          aggOf(resolveBranch(root, "main"), "main-head"),
-          aggOf(resolveTag(root, "prepublish"), "main-prepublish"))
-        .reduce(_ unionByName _).orderBy("ref")
+      snapshotRows(s, root, "ref", Seq(
+        "audit-head" -> resolveBranch(root, "audit"),
+        "main-head" -> resolveBranch(root, "main"),
+        "main-prepublish" -> resolveTag(root, "prepublish")))
     }),
 
     // BRANCH-AWARE VACUUM — retention for a branched/tagged table:
@@ -1428,16 +1238,10 @@ object Scans {
     // NonOracleOpsSpec pins.
     "scan_branch_vacuum" -> ((s, dir) => {
       val root = branchVacuumFixture(s, dir)
-      def aggOf(v: Int, ref: String) =
-        snapshotRead(s, root, v)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(ref).as("ref"), col("n_rows"), col("total_cents"))
-      Seq(aggOf(resolveBranch(root, "audit"), "audit-head"),
-          aggOf(resolveBranch(root, "main"), "main-head"),
-          aggOf(resolveTag(root, "release"), "release-tag"))
-        .reduce(_ unionByName _).orderBy("ref")
+      snapshotRows(s, root, "ref", Seq(
+        "audit-head" -> resolveBranch(root, "audit"),
+        "main-head" -> resolveBranch(root, "main"),
+        "release-tag" -> resolveTag(root, "release")))
     }),
 
     // CHERRY-PICK — the non-fast-forward publish: audit staged the
@@ -1454,16 +1258,10 @@ object Scans {
     // double-pick refusal, and metadata-only physics.
     "scan_branch_cherrypick" -> ((s, dir) => {
       val root = cherrypickFixture(s, dir)
-      def aggOf(v: Int, ref: String) =
-        snapshotRead(s, root, v)
-          .agg(big(count(lit(1))).as("n_rows"),
-               big(sum(floor(col("o_totalprice") * 100).cast("long")))
-                 .as("total_cents"))
-          .select(lit(ref).as("ref"), col("n_rows"), col("total_cents"))
-      Seq(aggOf(resolveBranch(root, "main"), "main-head"),
-          aggOf(resolveBranch(root, "audit"), "audit-head"),
-          aggOf(resolveTag(root, "fork"), "fork-tag"))
-        .reduce(_ unionByName _).orderBy("ref")
+      snapshotRows(s, root, "ref", Seq(
+        "main-head" -> resolveBranch(root, "main"),
+        "audit-head" -> resolveBranch(root, "audit"),
+        "fork-tag" -> resolveTag(root, "fork")))
     }),
 
     "scan_manifest_pruned" -> ((s, dir) => {
@@ -2050,6 +1848,196 @@ object Scans {
   val AsOfMid = "1998-07-01T00:00:00Z"
   val AsOfLate = "1999-06-01T00:00:00Z"
 
+  /** scan_delta_export's pinned commit stamps: v1 = the base write,
+    * v2 = the append (both the time-travel stamps), v3 = the compaction
+    * (retentionBuild's shape). Shared verbatim with the oracle. */
+  val DeltaCommitTs: Map[Int, String] =
+    TimeTravelCommitTs + (3 -> "1999-03-01T00:00:00Z")
+
+  // ---- the versioned-table family's snapshot summary ----
+
+  /** An order's price in whole cents (floored), the exact integer the
+    * family sums; the oracles spell it as [[CentsSql]]. */
+  private[graft] val TotalCents: Column = floor(col("o_totalprice") * 100).cast("long")
+
+  /** The rows the v1 commit holds: ordered before [[TimeTravelCutoff]]. */
+  private def preCutoff: Column = col("o_orderdate") < lit(TimeTravelCutoff).cast("timestamp")
+
+  /** The family's snapshot summary: `n_rows` and `total_cents` over the
+    * rows where `live` holds (every row by default; a merge-on-read
+    * apply passes its not-deleted predicate), then the `extra`
+    * aggregates a query adds. */
+  private def centsSummary(df: DataFrame, extra: Seq[Column] = Nil,
+                           live: Option[Column] = None): DataFrame = {
+    def kept(c: Column): Column = live.fold(c)(when(_, c))
+    df.agg(big(count(kept(lit(1)))).as("n_rows"),
+           big(sum(kept(TotalCents))).as("total_cents") +: extra: _*)
+  }
+
+  /** One [[centsSummary]] row per (labels, read) pair, the label
+    * columns first, unioned and ordered by `orderBy`: the shape of every
+    * multi-snapshot query in the family. */
+  private def summaryRows(orderBy: String,
+                          rows: Seq[(Seq[Column], DataFrame)]): DataFrame =
+    rows.map { case (labels, df) =>
+      centsSummary(df).select(labels :+ col("n_rows") :+ col("total_cents"): _*)
+    }.reduce(_ unionByName _).orderBy(orderBy)
+
+  /** [[summaryRows]] over snapshot reads: one row per (label, version),
+    * the label in column `name`. */
+  private def snapshotRows(s: SparkSession, root: String, name: String,
+                           refs: Seq[(Any, Int)]): DataFrame =
+    summaryRows(name, refs.map { case (label, v) =>
+      Seq(lit(label).as(name)) -> snapshotRead(s, root, v) })
+
+  /** [[snapshotRows]] labelled by the version itself. */
+  private def versionRows(s: SparkSession, root: String, versions: Int*): DataFrame =
+    snapshotRows(s, root, "version", versions.map(v => v -> v))
+
+  /** The exported Delta log of a [[deltaFixture]] root, one row per
+    * action, with the Delta `version` its file name carries. */
+  private def deltaActions(s: SparkSession, root: String): DataFrame =
+    s.read.option("pathGlobFilter", "*.json").json(deltaLogDir(root))
+      .withColumn("version",
+        regexp_extract(col("_metadata.file_path"), "(\\d+)\\.json$", 1).cast("long"))
+
+  /** The snapshots of an exported Iceberg TableMetadata document as
+    * (snapshot-id, manifest-list path), ascending by id. */
+  private def icebergSnapshots(s: SparkSession, metaPath: String): Seq[(Long, String)] =
+    s.read.option("multiLine", true).json(metaPath)
+      .select(explode(col("snapshots")).as("sn"))
+      .select(col("sn.`snapshot-id`").cast("long"), col("sn.`manifest-list`"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+
+  /** One Iceberg delete snapshot read through its manifest list alone
+    * (the official Avro decoder at every hop): the data files with
+    * their row ordinals, and the delete files decoded distributed —
+    * positional deletes as (`fp`, `pos`, `pdel`), equality deletes as
+    * (`o_orderkey`, `edel`); the marker column is 1 on every delete
+    * row, so after a left join it is non-null exactly where a row is
+    * deleted. A kind the snapshot does not carry is never loaded. */
+  private final class IcebergDeleteRead(s: SparkSession, listPath: String) {
+    import s.implicits._
+    private val deleteFiles = graft.sources.AvroManifest.readDeleteFiles(listPath)
+    private def decoded[T: org.apache.spark.sql.Encoder](kind: Int)(
+        decode: Array[Byte] => Seq[T]) =
+      s.read.format("binaryFile")
+        .load(deleteFiles.collect { case (`kind`, p) => p }.sorted: _*)
+        .select(col("content")).as[Array[Byte]].flatMap(decode)
+    val data: DataFrame =
+      s.read.parquet(graft.sources.AvroManifest.readFilePaths(listPath).sorted: _*)
+        .select(
+          regexp_replace(col("_metadata.file_path"), "^file:(//)?", "").as("fp"),
+          col("_metadata.row_index").as("pos"),
+          col("o_orderkey"), col("o_totalprice"))
+    lazy val posDeletes: DataFrame =
+      decoded(1)(graft.sources.AvroManifest.decodePositionalDeletes)
+        .toDF("fp", "pos").withColumn("pdel", lit(1L))
+    lazy val eqKeys: DataFrame =
+      decoded(2)(graft.sources.AvroManifest.decodeEqualityDeletes)
+        .toDF("o_orderkey").withColumn("edel", lit(1L))
+  }
+
+  /** A merge-on-read delete served both ways: v2 is the data as
+    * exported (the deletes invisible to it), v3 the data left-joined to
+    * `deletes` on `keys`, with `n_deleted` the rows whose `marker`
+    * matched. */
+  private def deleteApply(data: DataFrame, deletes: DataFrame,
+                          keys: Seq[String], marker: String): DataFrame = {
+    val v2 = centsSummary(data)
+      .select(big(lit(2L)).as("version"), col("n_rows"),
+              col("total_cents"), big(lit(0L)).as("n_deleted"))
+    val v3 = centsSummary(data.join(deletes, keys, "left"),
+        Seq(big(count(col(marker))).as("n_deleted")),
+        live = Some(col(marker).isNull))
+      .select(big(lit(3L)).as("version"), col("n_rows"),
+              col("total_cents"), col("n_deleted"))
+    v2.unionByName(v3).orderBy("version")
+  }
+
+  // ---- versioned-table layout: the ONLY code that names its files ----
+  // (VersionedLayoutSpec fails on the manifest directory or a
+  // version-file name written anywhere else under src/main)
+
+  /** Version N's manifest is `root/_manifests/vN.txt`, the exact file
+    * list of that snapshot, one path per line. Commit stamps
+    * (`_commits/`) and compaction markers (`_compactions/`) key their
+    * files by version the same way. */
+  private val Manifests = "_manifests"
+  private val Commits = "_commits"
+  private val Compactions = "_compactions"
+  private val VersionFile = "v(\\d+)\\.txt".r
+
+  private def versionFile(root: String, dir: String, v: Int): java.nio.file.Path =
+    Paths.get(root, dir, s"v$v.txt")
+
+  /** The versions with a file in `root/<dir>`, ascending; empty when
+    * the directory does not exist. */
+  private def versionsIn(root: String, dir: String): Seq[Int] =
+    Option(new java.io.File(s"$root/$dir").listFiles()).toSeq.flatten
+      .map(_.getName).collect { case VersionFile(v) => v.toInt }.sorted
+
+  private def manifestVersions(root: String): Seq[Int] = versionsIn(root, Manifests)
+
+  /** A committed version that has not been expired. */
+  private def isCommitted(root: String, v: Int): Boolean =
+    Files.exists(versionFile(root, Manifests, v))
+
+  /** The next global version number: one past the newest manifest. */
+  private def nextVersion(root: String): Int =
+    manifestVersions(root).lastOption.getOrElse(0) + 1
+
+  private def readVersionFile(root: String, dir: String, v: Int): String =
+    new String(Files.readAllBytes(versionFile(root, dir, v)), "UTF-8")
+
+  /** temp file + atomic move: a concurrent reader sees the old file or
+    * the new one, never a torn one. */
+  private def writeVersionFile(root: String, dir: String, v: Int, text: String): Unit = {
+    val target = versionFile(root, dir, v)
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+    Files.write(tmp, text.getBytes("UTF-8"))
+    Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Read one version's manifest — the exact file list. With
+    * [[ttWriteManifest]], [[manifestVersions]], [[isCommitted]] and
+    * [[nextVersion]] these helpers are the ONE place the manifest
+    * layout is written down; every reader (snapshotRead, expiry, the
+    * commit builders, the catalog exports) goes through them so the
+    * format cannot fork. */
+  private def readManifest(root: String, v: Int): Seq[String] =
+    readVersionFile(root, Manifests, v).split("\n").toSeq.filter(_.nonEmpty)
+
+  private def ttWriteManifest(root: String, v: Int, files: Seq[String]): Unit =
+    writeVersionFile(root, Manifests, v, files.mkString("\n"))
+
+  /** A fresh, empty table root: its `data/` and manifest directories. */
+  private def ttInitDirs(root: String): Unit = {
+    org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(root).toFile)
+    Files.createDirectories(Paths.get(root, "data"))
+    Files.createDirectories(Paths.get(root, Manifests))
+  }
+
+  // ---- end of the versioned-table layout ----
+
+  /** A JSON string literal: quotes, backslashes and control characters
+    * escaped (the catalog exports' one escaper). */
+  private def js(s: String): String =
+    "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
+                       case c if c < ' ' => f"\\u${c.toInt}%04x"
+                       case c => c.toString } + "\""
+
+  /** A UUID-shaped id derived from the md5 of `seed`, so repeated
+    * exports of one table are byte-stable. */
+  private def md5Uuid(seed: String): String = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(seed.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    s"${d.substring(0, 8)}-${d.substring(8, 12)}-${d.substring(12, 16)}-" +
+    s"${d.substring(16, 20)}-${d.substring(20, 32)}"
+  }
+
   /** CATALOG-INTEROP EXPORT: serialize the commit chain as an
     * Iceberg-shaped TableMetadata JSON (VERDICT r16 Missing #4 — the
     * migration de-risk for a real 100-TB lake whose catalog speaks
@@ -2087,15 +2075,12 @@ object Scans {
     * parquet FOOTERS for the row counts — never data pages; memoized
     * per (JVM, root, chain state) so the four catalog queries that
     * call it per run pay one build. */
-  def exportIcebergMetadata(root: String): String = {
-    val versions = Option(new java.io.File(s"$root/_manifests").listFiles())
-      .getOrElse(Array.empty).filter(_.getName.matches("v\\d+\\.txt"))
-      .map(_.getName.stripPrefix("v").stripSuffix(".txt").toInt).toSeq
+  def exportIcebergMetadata(root: String): String =
     graft.Tables.once("iceberg_export", root,
-        exportStamp(root, Seq("_manifests", "_commits", "_branches", "_tags"), versions),
+        exportStamp(root, Seq(Manifests, Commits, "_branches", "_tags"),
+          manifestVersions(root)),
         exported)(
       exportIcebergMetadataUncached(root))
-  }
 
   /** Staleness stamp of a table export: (name, length, mtime) of every
     * file in the listed metadata dirs, plus (path, length, mtime) of
@@ -2117,21 +2102,11 @@ object Scans {
 
   /** An export's memoized output path is served only while it exists:
     * a same-JVM cleanup of the output dir re-exports (r20 ADVICE). */
-  private def exported(path: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+  private def exported(path: String): Boolean = Files.exists(Paths.get(path))
 
   private def exportIcebergMetadataUncached(root: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption => C}
-    def js(s: String): String =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                         case c if c < ' ' => f"\\u${c.toInt}%04x"
-                         case c => c.toString } + "\""
-    val manDir = new java.io.File(s"$root/_manifests")
-    val commits = new java.io.File(s"$root/_commits")
-    val versions = manDir.listFiles().filter(_.getName.matches("v\\d+\\.txt"))
-      .map(_.getName.stripPrefix("v").stripSuffix(".txt").toInt)
-      .filter(v => Files.exists(Paths.get(commits.getPath, s"v$v.txt")))
-      .sorted
+    val stampedVersions = versionsIn(root, Commits).toSet
+    val versions = manifestVersions(root).filter(stampedVersions)
     require(versions.nonEmpty, s"no stamped committed versions at $root")
     val outDir = Paths.get(root, "_iceberg")
     Files.createDirectories(outDir)
@@ -2141,8 +2116,7 @@ object Scans {
     // self-review); timestamps parsed once and reused for
     // last-updated-ms below
     val stamped: Seq[(Int, Long)] = versions.map { v =>
-      v -> java.time.Instant.parse(new String(Files.readAllBytes(
-        Paths.get(root, "_commits", s"v$v.txt")), "UTF-8").trim).toEpochMilli
+      v -> java.time.Instant.parse(readVersionFile(root, Commits, v).trim).toEpochMilli
     }
     // first stamped version containing each file — the Iceberg
     // added_snapshot_id / inherited sequence number (walked once over
@@ -2156,7 +2130,6 @@ object Scans {
     // the snapshots that list it
     val rowCount = addedAt.keys.map(f => f -> parquetRecordCount(f)).toMap
     val snaps = stamped.zipWithIndex.map { case ((v, ts), i) =>
-      val files = readManifest(root, v)
       // the SPEC-COMPLETE two-level Avro layout per snapshot (the
       // Iceberg manifest-list + manifest-file format, VERDICT r18
       // Missing #3): manifest-v.avro holds one manifest_entry per
@@ -2168,9 +2141,8 @@ object Scans {
       // re-exports stay byte-stable.
       val listPath = graft.sources.AvroManifest.writeSnapshotManifests(
         outDir, v.toLong,
-        files.map(f => graft.sources.AvroManifest.DataFileMeta(
-          f, "PARQUET", rowCount(f), java.nio.file.Files.size(
-            java.nio.file.Paths.get(f)), addedAt(f))),
+        readManifest(root, v).map(f => graft.sources.AvroManifest.DataFileMeta(
+          f, "PARQUET", rowCount(f), Files.size(Paths.get(f)), addedAt(f))),
         s"$root#snap-$v")
       val parent = if (i == 0) ""
                    else s""""parent-snapshot-id": ${stamped(i - 1)._1}, """
@@ -2178,74 +2150,97 @@ object Scans {
       s""""timestamp-ms": $ts, "summary": {"operation": "append"}, """ +
       s""""manifest-list": ${js(listPath.toString)}}"""
     }
-    def pointers(kindDir: String, kind: String): Seq[(String, Int)] = {
-      val d = new java.io.File(s"$root/$kindDir")
-      if (!d.isDirectory) Seq.empty
-      else d.listFiles().filter(_.getName.endsWith(".txt")).toSeq.map { f =>
-        f.getName.stripSuffix(".txt") ->
-          new String(Files.readAllBytes(f.toPath), "UTF-8").trim.toInt
-      }.sortBy(_._1)
-    }
+    def refs(pointers: Map[String, Int], kind: String): Seq[String] =
+      pointers.toSeq.sortBy(_._1).map { case (n, v) =>
+        s"${js(n)}: {\"snapshot-id\": $v, \"type\": \"$kind\"}" }
     val head = versions.max
-    val branches = pointers("_branches", "branch")
+    val branches = listPointers(root, "_branches")
     // an explicit main pointer wins; otherwise main is implied at head
     val impliedMain =
-      if (branches.exists(_._1 == "main")) Seq.empty[String]
+      if (branches.contains("main")) Seq.empty[String]
       else Seq(s""""main": {"snapshot-id": $head, "type": "branch"}""")
-    val refs =
-      branches.map { case (n, v) =>
-        s"${js(n)}: {\"snapshot-id\": $v, \"type\": \"branch\"}" } ++
-      pointers("_tags", "tag").map { case (n, v) =>
-        s"${js(n)}: {\"snapshot-id\": $v, \"type\": \"tag\"}" } ++
-      impliedMain
-    val uuid = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      s"${d.substring(0, 8)}-${d.substring(8, 12)}-${d.substring(12, 16)}-" +
-      s"${d.substring(16, 20)}-${d.substring(20, 32)}"
-    }
+    val allRefs =
+      refs(branches, "branch") ++ refs(listPointers(root, "_tags"), "tag") ++ impliedMain
     val lastMs = stamped.map(_._2).max
     val doc =
-      s"""{"format-version": 2, "table-uuid": ${js(uuid)}, """ +
+      s"""{"format-version": 2, "table-uuid": ${js(md5Uuid(root))}, """ +
       s""""location": ${js(root)}, "last-sequence-number": $head, """ +
       s""""last-updated-ms": $lastMs, "current-snapshot-id": $head, """ +
       s""""snapshots": ${snaps.mkString("[", ", ", "]")}, """ +
-      s""""refs": ${refs.mkString("{", ", ", "}")}}"""
+      s""""refs": ${allRefs.mkString("{", ", ", "}")}}"""
     val metaPath = outDir.resolve(s"v$head.metadata.json")
     val tmp = Files.createTempFile(outDir, ".metadata", ".tmp")
     Files.write(tmp, doc.getBytes("UTF-8"))
-    Files.move(tmp, metaPath, C.ATOMIC_MOVE, C.REPLACE_EXISTING)
+    Files.move(tmp, metaPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     metaPath.toString
   }
 
   /** Export the merge-on-read fixture's v3 as an Iceberg v2 snapshot
     * whose delete state travels as POSITIONAL-DELETE manifests
     * (VERDICT r19 Missing #4 — the `content=deletes` arm the format
-    * matrix lacked; the Delta side has scan_delete_vectors):
+    * matrix lacked; the Delta side has scan_delete_vectors). See
+    * [[exportIcebergDeletes]]. Returns the manifest-list path. */
+  def exportIcebergDeleteSnapshot(s: SparkSession, root: String): String =
+    exportIcebergDeletes(s, root, "iceberg_delete_export", "del",
+      positional = Some(lit(true)), equality = None)
+
+  /** The EQUALITY-delete twin of [[exportIcebergDeleteSnapshot]] (the
+    * spec's other delete-file kind, completing the v2 delete matrix):
+    * the sidecar keys travel as ONE compact equality-delete file. A
+    * reader deletes every data row whose key matches any value —
+    * exactly the sidecar's semantics, now expressed in the public
+    * format. Returns the manifest-list path. */
+  def exportIcebergEqualityDeleteSnapshot(s: SparkSession, root: String): String =
+    exportIcebergDeletes(s, root, "iceberg_eqdelete_export", "eqdel",
+      positional = None, equality = Some(lit(true)))
+
+  /** The MIXED delete snapshot — the state a long-lived v2 table
+    * actually reaches (equality deletes from streaming upserts,
+    * positional from row-level MERGEs, in ONE snapshot): the sidecar
+    * splits by key residue — %14 == 0 travels POSITIONALLY, %14 == 7 as
+    * ONE EQUALITY key file — and the manifest list carries THREE
+    * manifest_file records. A reader must apply the UNION of both
+    * kinds; serving either alone is wrong, which is exactly what the
+    * lane's oracle catches. */
+  def exportIcebergMixedDeleteSnapshot(s: SparkSession, root: String): String =
+    exportIcebergDeletes(s, root, "iceberg_mixdelete_export", "mixdel",
+      positional = Some(col("o_orderkey") % 14 === 0),
+      equality = Some(col("o_orderkey") % 14 === 7))
+
+  /** The one Iceberg delete exporter: v3 of a merge-on-read table with
+    * its equality-delete sidecar (`_deletes/v3`, a key list) split
+    * into the spec's two delete-file kinds by the `positional` and
+    * `equality` key predicates, into `root/_iceberg_<tag>`.
     *
-    *   1. The equality-delete sidecar (`_deletes/v3`, a key list) is
-    *      converted to the spec's positional form — (data-file path,
-    *      0-based row ordinal) — DISTRIBUTED: the data files scan
-    *      with `_metadata.row_index`, join the broadcast key list,
-    *      and each task hand-encodes ONE spec-sorted Avro delete file
-    *      per data file through the Hadoop FS (a delete list is data,
-    *      not driver metadata; file names derive from md5 of the data
-    *      path so re-exports are stable).
-    *   2. The manifests are metadata-class driver work: a data
-    *      manifest (footer-true counts) + a `content=1` deletes
-    *      manifest + a manifest list carrying BOTH records
-    *      ([[graft.sources.AvroManifest.writeSnapshotManifestsWithDeletes]]).
+    *   1. Positional keys are converted to (data-file path, 0-based row
+    *      ordinal) DISTRIBUTED: the data files scan with
+    *      `_metadata.row_index`, join the broadcast key list, and each
+    *      task hand-encodes ONE spec-sorted Avro delete file per data
+    *      file through the Hadoop FS (a delete list is data, not driver
+    *      metadata; file names derive from md5 of the data path so
+    *      re-exports are stable).
+    *   2. Equality keys travel as ONE compact key file — the o_orderkey
+    *      VALUES under the exporter's table field-id 1, data_file.content
+    *      = 2, equality_ids = [1] in the manifest entry — written
+    *      executor-side (single file by design: equality deletes are a
+    *      key list, not per-file positions).
+    *   3. The manifests are metadata-class driver work: a data manifest
+    *      (footer-true counts), one deletes manifest per kind present,
+    *      and a manifest list carrying all their records
+    *      ([[graft.sources.AvroManifest.writeSnapshotManifestsMixed]]).
     *
-    * Memoized per (data files, sidecar state) and re-exported when the
-    * output is gone; the output dir is swept before a re-export so a
-    * shrunk fixture leaves no orphan delete files. Returns the
+    * When both kinds are present their file names carry `pos-`/`eq-`.
+    * Memoized per (artifact, data files, sidecar state) and re-exported
+    * when the output is gone; stale delete files are swept before a
+    * re-export so a shrunk fixture leaves no orphans. Returns the
     * manifest-list path. */
-  def exportIcebergDeleteSnapshot(s: org.apache.spark.sql.SparkSession,
-                                  root: String): String = {
-    graft.Tables.once("iceberg_delete_export", root,
-        exportStamp(root, Seq("_deletes/v3"), Seq(3)), exported) {
-      val outDir = java.nio.file.Paths.get(root, "_iceberg_del")
-      java.nio.file.Files.createDirectories(outDir)
+  private def exportIcebergDeletes(s: SparkSession, root: String, artifact: String,
+      tag: String, positional: Option[Column], equality: Option[Column]): String = {
+    val sidecar = "_deletes/v3"
+    graft.Tables.once(artifact, root, exportStamp(root, Seq(sidecar), Seq(3)), exported) {
+      val outDir = Paths.get(root, s"_iceberg_$tag")
+      Files.createDirectories(outDir)
       val out = outDir.toString
       locally { // sweep stale delete files (the source_image_files rule)
         val outPath = new org.apache.hadoop.fs.Path(out)
@@ -2256,211 +2251,71 @@ object Scans {
             .foreach(st => fs.delete(st.getPath, false))
         }
       }
+      val mixed = positional.isDefined && equality.isDefined
       val dataFiles = readManifest(root, 3).sorted
-      val keys = s.read.parquet(s"$root/_deletes/v3")
-      // positional deletes: scan WITH row ordinals, keep only deleted
-      // rows. The key list broadcasts here (a fixture-sized set); a
-      // 100-TB delete set would ride the plain shuffle join — the
-      // downstream per-file grouping is unchanged either way.
-      val dels = s.read.parquet(dataFiles: _*)
-        .select(
-          regexp_replace(col("_metadata.file_path"), "^file:(//)?", "")
-            .as("fp"),
-          col("_metadata.row_index").as("pos"), col("o_orderkey"))
-        .join(broadcast(keys), Seq("o_orderkey"))
-        .select("fp", "pos")
+      val keys = s.read.parquet(s"$root/$sidecar")
       import s.implicits._
-      // one spec-sorted delete file per data file, written on the
-      // executor; (path, rows) returns driver-side for the manifest —
-      // O(files) metadata, like every exporter in the family
-      val written = dels.repartition(col("fp"))
-        .as[(String, Long)]
-        .mapPartitions { it =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-            new java.net.URI(s"file://$out"), conf)
-          try {
-            fs.setWriteChecksum(false)
-            it.toSeq.groupBy(_._1).iterator.map { case (fp, ps) =>
-              val name = "delete-" + java.security.MessageDigest
-                .getInstance("MD5").digest(fp.getBytes("UTF-8"))
-                .take(8).map("%02x".format(_)).mkString + ".avro"
-              val bytes = graft.sources.AvroManifest
-                .encodePositionalDeletes(ps, s"iceberg-del:$fp")
-              val p = new org.apache.hadoop.fs.Path(s"$out/$name")
-              val os = fs.create(p, true)
-              try os.write(bytes) finally os.close()
-              (s"$out/$name", ps.size.toLong, fs.getFileStatus(p).getLen)
-            }.toSeq.iterator
-          } finally fs.close()
-        }.collect().sortBy(_._1)
-      val dataMetas = dataFiles.map(f =>
-        graft.sources.AvroManifest.DataFileMeta(
-          f, "PARQUET", parquetRecordCount(f),
-          java.nio.file.Files.size(java.nio.file.Paths.get(f)), 3L))
-      val delMetas = written.toSeq.map { case (p, n, sz) =>
-        graft.sources.AvroManifest.DataFileMeta(p, "AVRO", n, sz, 3L) }
-      graft.sources.AvroManifest.writeSnapshotManifestsWithDeletes(
-        outDir, 3L, dataMetas, delMetas, s"$root#delsnap-3").toString
-    }
-  }
-
-  /** The EQUALITY-delete twin of [[exportIcebergDeleteSnapshot]] (the
-    * spec's other delete-file kind, completing the v2 delete matrix):
-    * the sidecar keys travel as ONE compact equality-delete file —
-    * rows carry the o_orderkey VALUES under the exporter's table
-    * field-id 1, data_file.content = 2, equality_ids = [1] in the
-    * manifest entry — written executor-side (single file by design:
-    * equality deletes are a key list, not per-file positions). A
-    * reader deletes every data row whose key matches any value —
-    * exactly the sidecar's semantics, now expressed in the public
-    * format. Returns the manifest-list path. */
-  def exportIcebergEqualityDeleteSnapshot(
-      s: org.apache.spark.sql.SparkSession, root: String): String = {
-    graft.Tables.once("iceberg_eqdelete_export", root,
-        exportStamp(root, Seq("_deletes/v3"), Seq(3)), exported) {
-      val outDir = java.nio.file.Paths.get(root, "_iceberg_eqdel")
-      java.nio.file.Files.createDirectories(outDir)
-      val out = outDir.toString
-      import s.implicits._
-      val written = s.read.parquet(s"$root/_deletes/v3")
-        .select(col("o_orderkey")).repartition(1).as[Long]
-        .mapPartitions { it =>
-          val keys = it.toSeq
-          if (keys.isEmpty) Iterator.empty
-          else {
-            val conf = new org.apache.hadoop.conf.Configuration()
-            val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-              new java.net.URI(s"file://$out"), conf)
-            try {
-              fs.setWriteChecksum(false)
-              val bytes = graft.sources.AvroManifest
-                .encodeEqualityDeletes("o_orderkey", 1, keys,
-                  "iceberg-eqdel:v3")
-              val p = new org.apache.hadoop.fs.Path(s"$out/delete-keys.avro")
-              val os = fs.create(p, true)
-              try os.write(bytes) finally os.close()
-              Iterator((s"$out/delete-keys.avro", keys.size.toLong,
-                        fs.getFileStatus(p).getLen))
-            } finally fs.close()
-          }
-        }.collect()
-      val dataFiles = readManifest(root, 3).sorted
-      val dataMetas = dataFiles.map(f =>
-        graft.sources.AvroManifest.DataFileMeta(
-          f, "PARQUET", parquetRecordCount(f),
-          java.nio.file.Files.size(java.nio.file.Paths.get(f)), 3L))
-      val delMetas = written.toSeq.map { case (p, n, sz) =>
-        graft.sources.AvroManifest.DataFileMeta(p, "AVRO", n, sz, 3L,
-          equalityIds = Seq(1)) }
-      graft.sources.AvroManifest.writeSnapshotManifestsWithDeletes(
-        outDir, 3L, dataMetas, delMetas, s"$root#eqdelsnap-3").toString
-    }
-  }
-
-  /** The MIXED delete snapshot — the state a long-lived v2 table
-    * actually reaches (equality deletes from streaming upserts,
-    * positional from row-level MERGEs, in ONE snapshot): the sidecar
-    * splits by key residue — %14 == 0 travels POSITIONALLY (the
-    * distributed ordinal conversion, one spec-sorted file per data
-    * file), %14 == 7 as ONE EQUALITY key file — and the manifest list
-    * carries THREE manifest_file records. A reader must apply the
-    * UNION of both kinds; serving either alone is wrong, which is
-    * exactly what the lane's oracle catches. */
-  def exportIcebergMixedDeleteSnapshot(
-      s: org.apache.spark.sql.SparkSession, root: String): String = {
-    graft.Tables.once("iceberg_mixdelete_export", root,
-        exportStamp(root, Seq("_deletes/v3"), Seq(3)), exported) {
-      val outDir = java.nio.file.Paths.get(root, "_iceberg_mixdel")
-      java.nio.file.Files.createDirectories(outDir)
-      val out = outDir.toString
-      locally {
-        val outPath = new org.apache.hadoop.fs.Path(out)
-        val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq("delete-*.avro", "*.crc", ".*.crc").foreach { pat =>
-          Option(fs.globStatus(new org.apache.hadoop.fs.Path(outPath, pat)))
-            .getOrElse(Array.empty)
-            .foreach(st => fs.delete(st.getPath, false))
-        }
+      // positional: scan WITH row ordinals, keep only deleted rows. The
+      // key list broadcasts here (a fixture-sized set); a 100-TB delete
+      // set would ride the plain shuffle join — the per-file grouping
+      // downstream is unchanged either way.
+      val posFiles = positional.toSeq.flatMap { keep =>
+        val prefix = if (mixed) "delete-pos-" else "delete-"
+        s.read.parquet(dataFiles: _*)
+          .select(
+            regexp_replace(col("_metadata.file_path"), "^file:(//)?", "").as("fp"),
+            col("_metadata.row_index").as("pos"), col("o_orderkey"))
+          .join(broadcast(keys.where(keep)), Seq("o_orderkey"))
+          .select("fp", "pos")
+          .repartition(col("fp")).as[(String, Long)]
+          .mapPartitions { it =>
+            writeDeleteFiles(out, it.toSeq.groupBy(_._1).iterator.map { case (fp, ps) =>
+              val name = prefix + java.security.MessageDigest.getInstance("MD5")
+                .digest(fp.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+              (s"$name.avro", ps.size.toLong, graft.sources.AvroManifest
+                .encodePositionalDeletes(ps, s"iceberg-$tag:$fp"))
+            })
+          }.collect().sortBy(_._1).toSeq
       }
-      val dataFiles = readManifest(root, 3).sorted
-      val keys = s.read.parquet(s"$root/_deletes/v3")
-      import s.implicits._
-      // positional half: %14 == 0 keys through the ordinal conversion
-      val posDels = s.read.parquet(dataFiles: _*)
-        .select(
-          regexp_replace(col("_metadata.file_path"), "^file:(//)?", "")
-            .as("fp"),
-          col("_metadata.row_index").as("pos"), col("o_orderkey"))
-        .join(broadcast(keys.where(col("o_orderkey") % 14 === 0)),
-              Seq("o_orderkey"))
-        .select("fp", "pos")
-      val writtenPos = posDels.repartition(col("fp"))
-        .as[(String, Long)]
-        .mapPartitions { it =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-            new java.net.URI(s"file://$out"), conf)
-          try {
-            fs.setWriteChecksum(false)
-            it.toSeq.groupBy(_._1).iterator.map { case (fp, ps) =>
-              val name = "delete-pos-" + java.security.MessageDigest
-                .getInstance("MD5").digest(fp.getBytes("UTF-8"))
-                .take(8).map("%02x".format(_)).mkString + ".avro"
-              val bytes = graft.sources.AvroManifest
-                .encodePositionalDeletes(ps, s"iceberg-mixdel:$fp")
-              val p = new org.apache.hadoop.fs.Path(s"$out/$name")
-              val os = fs.create(p, true)
-              try os.write(bytes) finally os.close()
-              (s"$out/$name", ps.size.toLong, fs.getFileStatus(p).getLen)
-            }.toSeq.iterator
-          } finally fs.close()
-        }.collect().sortBy(_._1)
-      // equality half: %14 == 7 keys as one compact key file
-      val writtenEq = keys.where(col("o_orderkey") % 14 === 7)
-        .select(col("o_orderkey")).repartition(1).as[Long]
-        .mapPartitions { it =>
-          val ks = it.toSeq
-          if (ks.isEmpty) Iterator.empty
-          else {
-            val conf = new org.apache.hadoop.conf.Configuration()
-            val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-              new java.net.URI(s"file://$out"), conf)
-            try {
-              fs.setWriteChecksum(false)
-              val bytes = graft.sources.AvroManifest
-                .encodeEqualityDeletes("o_orderkey", 1, ks,
-                  "iceberg-mixdel-eq:v3")
-              val p = new org.apache.hadoop.fs.Path(
-                s"$out/delete-eq-keys.avro")
-              val os = fs.create(p, true)
-              try os.write(bytes) finally os.close()
-              Iterator((s"$out/delete-eq-keys.avro", ks.size.toLong,
-                        fs.getFileStatus(p).getLen))
-            } finally fs.close()
-          }
-        }.collect()
-      val dataMetas = dataFiles.map(f =>
-        graft.sources.AvroManifest.DataFileMeta(
-          f, "PARQUET", parquetRecordCount(f),
-          java.nio.file.Files.size(java.nio.file.Paths.get(f)), 3L))
-      val posMetas = writtenPos.toSeq.map { case (p, n, sz) =>
-        graft.sources.AvroManifest.DataFileMeta(p, "AVRO", n, sz, 3L) }
-      val eqMetas = writtenEq.toSeq.map { case (p, n, sz) =>
-        graft.sources.AvroManifest.DataFileMeta(p, "AVRO", n, sz, 3L,
-          equalityIds = Seq(1)) }
-      graft.sources.AvroManifest.writeSnapshotManifestsMixed(
-        outDir, 3L, dataMetas, posMetas, eqMetas,
-        s"$root#mixdelsnap-3").toString
+      val eqFiles = equality.toSeq.flatMap { keep =>
+        val name = if (mixed) "delete-eq-keys.avro" else "delete-keys.avro"
+        val seed = if (mixed) s"iceberg-$tag-eq:v3" else s"iceberg-$tag:v3"
+        keys.where(keep).select(col("o_orderkey")).repartition(1).as[Long]
+          .mapPartitions { it =>
+            val ks = it.toSeq
+            if (ks.isEmpty) Iterator.empty
+            else writeDeleteFiles(out, Iterator((name, ks.size.toLong, graft.sources
+              .AvroManifest.encodeEqualityDeletes("o_orderkey", 1, ks, seed))))
+          }.collect().toSeq
+      }
+      def metas(files: Seq[(String, Long, Long)], equalityIds: Seq[Int]) =
+        files.map { case (p, n, sz) =>
+          graft.sources.AvroManifest.DataFileMeta(p, "AVRO", n, sz, 3L, equalityIds) }
+      graft.sources.AvroManifest.writeSnapshotManifestsMixed(outDir, 3L,
+        dataFiles.map(f => graft.sources.AvroManifest.DataFileMeta(
+          f, "PARQUET", parquetRecordCount(f), Files.size(Paths.get(f)), 3L)),
+        metas(posFiles, Nil), metas(eqFiles, Seq(1)),
+        s"$root#${tag}snap-3").toString
     }
   }
 
-  /** scan_delta_export's pinned commit stamps: v1 = the base write,
-    * v2 = the append, v3 = the compaction (retentionBuild's shape).
-    * Shared verbatim with the oracle. */
-  val DeltaCommitTs: Map[Int, String] = Map(
-    1 -> "1998-06-01T00:00:00Z", 2 -> "1998-09-01T00:00:00Z",
-    3 -> "1999-03-01T00:00:00Z")
+  /** Write each (name, rows, bytes) delete file into `out` from the
+    * executor; (path, rows, byte length) returns driver-side for the
+    * manifest — O(files) metadata, like every exporter in the family. */
+  private def writeDeleteFiles(out: String, files: Iterator[(String, Long, Array[Byte])])
+      : Iterator[(String, Long, Long)] = {
+    val fs = org.apache.hadoop.fs.FileSystem.newInstance(
+      new java.net.URI(s"file://$out"), new org.apache.hadoop.conf.Configuration())
+    try {
+      fs.setWriteChecksum(false)
+      files.map { case (name, rows, bytes) =>
+        val p = new org.apache.hadoop.fs.Path(s"$out/$name")
+        val os = fs.create(p, true)
+        try os.write(bytes) finally os.close()
+        (s"$out/$name", rows, fs.getFileStatus(p).getLen)
+      }.toSeq.iterator
+    } finally fs.close()
+  }
 
   /** CATALOG-INTEROP EXPORT, DELTA SHAPE (the `scan_iceberg_export`
     * twin for the other catalog dialect a real lake migration meets):
@@ -2489,31 +2344,18 @@ object Scans {
     * FOOTERS (the footerIndexRow discipline) — metadata-scale, no data
     * reads. The export is rewritten atomically per version file. */
   def exportDeltaLog(root: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption => C}
-    def js(s: String): String =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                         case c if c < ' ' => f"\\u${c.toInt}%04x"
-                         case c => c.toString } + "\""
+    import java.nio.file.{StandardCopyOption => C}
     val stamped: Seq[(Int, Long)] = DeltaCommitTs.toSeq.sortBy(_._1)
-      .filter { case (v, _) =>
-        Files.exists(Paths.get(root, "_manifests", s"v$v.txt")) }
-      .map { case (v, ts) =>
-        v -> java.time.Instant.parse(ts).toEpochMilli }
+      .filter { case (v, _) => isCommitted(root, v) }
+      .map { case (v, ts) => v -> java.time.Instant.parse(ts).toEpochMilli }
     require(stamped.nonEmpty, s"no stamped committed versions at $root")
-    val outDir = Paths.get(root, "_delta_log")
+    val outDir = Paths.get(deltaLogDir(root))
     Files.createDirectories(outDir)
-    def numRecords(p: String): Long = parquetRecordCount(p)
     val schemaString =
       """{"type":"struct","fields":[""" +
       """{"name":"o_orderkey","type":"long","nullable":true,"metadata":{}},""" +
       """{"name":"o_orderdate","type":"timestamp","nullable":true,"metadata":{}},""" +
       """{"name":"o_totalprice","type":"double","nullable":true,"metadata":{}}]}"""
-    val tableId = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"delta:$root".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      s"${d.substring(0, 8)}-${d.substring(8, 12)}-${d.substring(12, 16)}-" +
-      s"${d.substring(16, 20)}-${d.substring(20, 32)}"
-    }
     stamped.zipWithIndex.foreach { case ((v, ts), d) =>
       val cur = readManifest(root, v).toSet
       val prev = if (d == 0) Set.empty[String]
@@ -2549,7 +2391,7 @@ object Scans {
         s"""{"commitInfo": {"timestamp": $ts, "operation": ${js(operation)}}}""") ++
         (if (d == 0) Seq(
           """{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}""",
-          s"""{"metaData": {"id": ${js(tableId)}, "format": {"provider": "parquet", "options": {}}, """ +
+          s"""{"metaData": {"id": ${js(md5Uuid(s"delta:$root"))}, "format": {"provider": "parquet", "options": {}}, """ +
           s""""schemaString": ${js(schemaString)}, "partitionColumns": [], """ +
           s""""configuration": {}, "createdTime": $ts}}""")
          else Seq.empty)
@@ -2557,7 +2399,7 @@ object Scans {
         adds.map { p =>
           s"""{"add": {"path": ${js(p)}, "partitionValues": {}, """ +
           s""""size": ${new java.io.File(p).length}, "modificationTime": $ts, """ +
-          s""""dataChange": $dataChange, "stats": ${js(s"""{"numRecords": ${numRecords(p)}}""")}}}"""
+          s""""dataChange": $dataChange, "stats": ${js(s"""{"numRecords": ${parquetRecordCount(p)}}""")}}}"""
         } ++
         removes.map { p =>
           s"""{"remove": {"path": ${js(p)}, "deletionTimestamp": $ts, "dataChange": $dataChange}}"""
@@ -2574,7 +2416,7 @@ object Scans {
     * (v1 base / v2 append / v3 compaction-rewrite — the shape whose
     * Delta log exercises add, append AND remove actions) WITHOUT the
     * expiry, plus pinned commit stamps. Memoized per fixture sig. */
-  def deltaFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+  def deltaFixture(s: SparkSession, dir: String): String = {
     val root = scratch(dir, "delta_export")
     graft.Tables.once(s, "delta_export", s"$dir/orders.parquet") {
       retentionBuild(s, dir, root)
@@ -2599,15 +2441,9 @@ object Scans {
     * for an uncommitted version would let resolveAsOf resolve to
     * nothing. O(1) metadata at any table size. */
   def writeCommitTs(root: String, v: Int, isoTs: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    require(Files.exists(Paths.get(root, "_manifests", s"v$v.txt")),
+    require(isCommitted(root, v),
       s"cannot stamp commit ts for uncommitted version $v at $root")
-    val d = Paths.get(root, "_commits")
-    Files.createDirectories(d)
-    val tmp = d.resolve(s".v$v.txt.tmp")
-    Files.write(tmp, isoTs.getBytes("UTF-8"))
-    Files.move(tmp, d.resolve(s"v$v.txt"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeVersionFile(root, Commits, v, isoTs)
   }
 
   /** Stamp a committed version as a COMPACTION REWRITE — one marker
@@ -2621,22 +2457,15 @@ object Scans {
     * (DELETE/MERGE) would otherwise be exported with dataChange=false
     * and silently vanish from every CDC consumer (r17 ADVICE). */
   def markCompaction(root: String, v: Int): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    require(Files.exists(Paths.get(root, "_manifests", s"v$v.txt")),
+    require(isCommitted(root, v),
       s"cannot mark uncommitted version $v as compaction at $root")
-    val d = Paths.get(root, "_compactions")
-    Files.createDirectories(d)
-    val tmp = d.resolve(s".v$v.txt.tmp")
-    Files.write(tmp, "compaction\n".getBytes("UTF-8"))
-    Files.move(tmp, d.resolve(s"v$v.txt"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeVersionFile(root, Compactions, v, "compaction\n")
   }
 
   /** Is version `v` declared a compaction rewrite? (see
     * [[markCompaction]]) */
   def isCompaction(root: String, v: Int): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "_compactions", s"v$v.txt"))
+    Files.exists(versionFile(root, Compactions, v))
 
   /** TIMESTAMP time travel — "the table as of <ts>" (the Delta/Iceberg
     * user entry point; scan_time_travel resolves by VERSION, tags and
@@ -2651,18 +2480,11 @@ object Scans {
     * history. Metadata-scale: reads only `_commits/` + manifest
     * existence, never data. */
   def resolveAsOf(root: String, ts: String, head: Option[Int] = None): Int = {
-    import java.nio.file.{Files, Paths}
     val cutoff = java.time.Instant.parse(ts)
-    val d = new java.io.File(s"$root/_commits")
-    val commits: Map[Int, java.time.Instant] =
-      if (!d.isDirectory) Map.empty
-      else d.listFiles().filter(_.getName.matches("v\\d+\\.txt")).map { f =>
-        f.getName.stripPrefix("v").stripSuffix(".txt").toInt ->
-          java.time.Instant.parse(new String(
-            Files.readAllBytes(f.toPath), "UTF-8").trim)
+    val live: Map[Int, java.time.Instant] =
+      versionsIn(root, Commits).filter(isCommitted(root, _)).map { v =>
+        v -> java.time.Instant.parse(readVersionFile(root, Commits, v).trim)
       }.toMap
-    val live = commits.filter { case (v, _) =>
-      Files.exists(Paths.get(root, "_manifests", s"v$v.txt")) }
     val inScope = head.fold(live) { h => live.filter(_._1 <= h) }
     val eligible = inScope.collect { case (v, t) if !t.isAfter(cutoff) => v }
     if (eligible.isEmpty) {
@@ -2680,24 +2502,17 @@ object Scans {
     * files into `root/data` as immutable `tag_NNN.parquet` files —
     * one "commit" of the minimal versioned table. Returns the
     * committed file paths (the manifest entries). */
-  private def ttCommit(df: org.apache.spark.sql.DataFrame, root: String,
-                       tag: String): Seq[String] = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+  private def ttCommit(df: DataFrame, root: String, tag: String): Seq[String] = {
     val tmp = Paths.get(root, s"stage_$tag")
     df.write.mode("overwrite").parquet(tmp.toString)
     val parts = tmp.toFile.listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     parts.zipWithIndex.map { case (f, i) =>
       val dst = Paths.get(root, "data").resolve(f"${tag}_$i%03d.parquet")
-      Files.copy(f.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
+      Files.copy(f.toPath, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       dst.toString
     }.toSeq
   }
-
-  private def ttWriteManifest(root: String, v: Int, files: Seq[String]): Unit =
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "_manifests", s"v$v.txt"),
-      files.mkString("\n").getBytes("UTF-8"))
 
   /** The source_avro record shape, shared by the null- and
     * deflate-coded lanes: every supported primitive (long, string,
@@ -2778,15 +2593,6 @@ object Scans {
     try r.getRecordCount finally r.close()
   }
 
-  /** Read one version's manifest — the exact file list, one path per
-    * line. The ONE place the manifest format is parsed (writer:
-    * [[ttWriteManifest]]); every reader (snapshotRead, expiry, the
-    * commit builders) goes through here so the format cannot fork. */
-  private def readManifest(root: String, v: Int): Seq[String] =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(root, "_manifests", s"v$v.txt")), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty)
-
   /** Write (or RETARGET — last write wins) a named tag: one metadata
     * file under `_tags/` binding `name` to a committed version.
     * Refuses to tag a version that was never committed (or has been
@@ -2805,9 +2611,9 @@ object Scans {
     * state). Pointing is O(1) metadata at any table size. */
   private def writePointer(root: String, kindDir: String, kind: String,
                            name: String, v: Int): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption => C}
+    import java.nio.file.{StandardCopyOption => C}
     require(name.matches("[A-Za-z0-9_-]+"), s"illegal $kind name: '$name'")
-    require(Files.exists(Paths.get(root, "_manifests", s"v$v.txt")),
+    require(isCommitted(root, v),
       s"cannot $kind version $v at $root: no such committed version")
     Files.createDirectories(Paths.get(root, kindDir))
     val tmp = Files.createTempFile(Paths.get(root, kindDir), s".$name", ".tmp")
@@ -2817,19 +2623,22 @@ object Scans {
   }
 
   private def resolvePointer(root: String, kindDir: String, kind: String,
-                             name: String): Int = {
-    val p = java.nio.file.Paths.get(root, kindDir, s"$name.txt")
-    if (!java.nio.file.Files.exists(p)) {
-      val d = new java.io.File(s"$root/$kindDir")
-      val avail =
-        if (!d.isDirectory) "none"
-        else d.listFiles().filter(_.getName.endsWith(".txt"))
-               .map(_.getName.stripSuffix(".txt")).sorted.mkString(", ")
+                             name: String): Int =
+    listPointers(root, kindDir).getOrElse(name, {
+      val avail = listPointers(root, kindDir).keys.toSeq.sorted
       throw new IllegalArgumentException(
-        s"$kind '$name' does not exist at $root; available ${kind}s: $avail")
-    }
-    new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toInt
-  }
+        s"$kind '$name' does not exist at $root; available ${kind}s: " +
+        (if (avail.isEmpty) "none" else avail.mkString(", ")))
+    })
+
+  /** Every named pointer of one kind (branches or tags) → its target
+    * version; empty if the kind's dir was never created. */
+  private def listPointers(root: String, kindDir: String): Map[String, Int] =
+    Option(new java.io.File(s"$root/$kindDir").listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".txt")).map { f =>
+        f.getName.stripSuffix(".txt") ->
+          new String(Files.readAllBytes(f.toPath), "UTF-8").trim.toInt
+      }.toMap
 
   /** Create (or reset) a BRANCH — the writable half of the pointer
     * family: a tag is a frozen name, a branch advances as commits
@@ -2843,6 +2652,11 @@ object Scans {
   def resolveBranch(root: String, name: String): Int =
     resolvePointer(root, "_branches", "branch", name)
 
+  /** Resolve a tag to its version, loudly listing the available tags
+    * on a miss (the [[snapshotRead]] unknown-version discipline). */
+  def resolveTag(root: String, name: String): Int =
+    resolvePointer(root, "_tags", "tag", name)
+
   /** Stage a commit ON a branch (the write half of
     * write-audit-publish): append `df`'s files as the next GLOBAL
     * version — manifest = the branch head's file list + the new
@@ -2851,13 +2665,10 @@ object Scans {
     * pointer, not the data directory (staged files physically share
     * `data/`, exactly like every committed version — spec-pinned).
     * Returns the staged version number. */
-  def commitOnBranch(s: org.apache.spark.sql.SparkSession, root: String,
-                     branch: String, df: org.apache.spark.sql.DataFrame,
-                     prefix: String): Int = {
+  def commitOnBranch(s: SparkSession, root: String, branch: String,
+                     df: DataFrame, prefix: String): Int = {
     val head = resolveBranch(root, branch)
-    val vre = "v(\\d+)\\.txt".r
-    val next = 1 + new java.io.File(s"$root/_manifests").listFiles()
-      .map(_.getName).collect { case vre(v) => v.toInt }.max
+    val next = nextVersion(root)
     val files = ttCommit(df, root, prefix)
     ttWriteManifest(root, next, readManifest(root, head) ++ files)
     createBranch(root, branch, next)
@@ -2896,9 +2707,7 @@ object Scans {
       s"refusing cherry-pick $from->$to: ${clash.size} staged file(s) " +
       s"already referenced by $to's head (already picked or conflicting " +
       s"rewrite): ${clash.toSeq.sorted.take(3).mkString(",")}")
-    val vre = "v(\\d+)\\.txt".r
-    val next = 1 + new java.io.File(s"$root/_manifests").listFiles()
-      .map(_.getName).collect { case vre(v) => v.toInt }.max
+    val next = nextVersion(root)
     ttWriteManifest(root, next, target ++ inc.toSeq.sorted)
     createBranch(root, to, next)
     next
@@ -2911,17 +2720,6 @@ object Scans {
   def initVersionedTable(root: String): Unit = {
     ttInitDirs(root)
     ttWriteManifest(root, 1, Seq.empty)
-  }
-
-  /** Every named pointer of one kind (branches or tags) → its target
-    * version; empty if the kind's dir was never created. */
-  private def listPointers(root: String, kindDir: String): Map[String, Int] = {
-    val d = new java.io.File(s"$root/$kindDir")
-    if (!d.isDirectory) Map.empty
-    else d.listFiles().filter(_.getName.endsWith(".txt")).map { f =>
-      f.getName.stripSuffix(".txt") -> new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toInt
-    }.toMap
   }
 
   /** BRANCH-AWARE RETENTION — expireSnapshots for a branched/tagged
@@ -2941,279 +2739,13 @@ object Scans {
   def branchVacuum(root: String): Seq[Int] = {
     val refs = (listPointers(root, "_branches") ++
                 listPointers(root, "_tags")).values.toSet
-    val vre = "v(\\d+)\\.txt".r
-    val all = new java.io.File(s"$root/_manifests").listFiles()
-      .map(_.getName).collect { case vre(v) => v.toInt }.toSet
+    val all = manifestVersions(root).toSet
     require(refs.subsetOf(all),
       s"refusing to vacuum $root: dangling pointer(s) reference expired/" +
       s"uncommitted version(s) ${(refs -- all).toSeq.sorted.mkString(",")}")
     val doomed = (all -- refs).toSeq.sorted
     if (doomed.nonEmpty) expireVersions(root, doomed)
     doomed
-  }
-
-  /** The write-audit-publish table feeding scan_branch_wap: v1/v2 as
-    * in the time-travel table with branches `main` and `audit` both
-    * at v2; the o_orderkey%10==0 slice is then staged ON `audit`
-    * (v3 — main still resolves to v2), the pre-publish main state is
-    * frozen under the `prepublish` tag (the rollback anchor), and
-    * `audit` publishes to `main`. Built once per (JVM, fixture
-    * state). */
-  def wapFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val root = scratch(dir, "branch_wap")
-    graft.Tables.once(s, "branch_wap", s"$dir/orders.parquet") {
-      evolutionBase(s, dir, root)
-      createBranch(root, "main", 2)
-      createBranch(root, "audit", 2)
-      val slice = orders(s, dir)
-        .select("o_orderkey", "o_orderdate", "o_totalprice")
-        .where(col("o_orderkey") % 10 === 0)
-      commitOnBranch(s, root, "audit", slice, "a3")
-      writeTag(root, "prepublish", resolveBranch(root, "main"))
-      publishBranch(root, "audit", "main")
-    }
-    root
-  }
-
-  /** The diverged-branches table feeding scan_branch_cherrypick:
-    * main and audit both fork at v2 (frozen under the `fork` tag);
-    * audit stages the %10==0 slice (v3) while a CONCURRENT commit
-    * lands the %10==1 slice directly on main (v4) — main has moved
-    * past audit's fork point, so fast-forward publish would drop the
-    * concurrent commit. [[cherryPick]] replays audit's increment
-    * onto main's head as v5 = v4's manifest + (v3 − fork). Built
-    * once per (JVM, fixture state). */
-  def cherrypickFixture(s: org.apache.spark.sql.SparkSession,
-                        dir: String): String = {
-    val root = scratch(dir, "branch_cp")
-    graft.Tables.once(s, "branch_cp", s"$dir/orders.parquet") {
-      evolutionBase(s, dir, root)
-      createBranch(root, "main", 2)
-      createBranch(root, "audit", 2)
-      writeTag(root, "fork", 2)
-      def slice(m: Int) = orders(s, dir)
-        .select("o_orderkey", "o_orderdate", "o_totalprice")
-        .where(col("o_orderkey") % 10 === m)
-      commitOnBranch(s, root, "audit", slice(0), "a3")
-      commitOnBranch(s, root, "main", slice(1), "m4")
-      cherryPick(root, "audit", "main", "fork")
-    }
-    root
-  }
-
-  /** The vacuumed branched table feeding scan_branch_vacuum: v1/v2
-    * with tag `release`→v1 and `main`→v2; `audit` stages the %10
-    * slice (v3), then COMPACTS its own state into fresh a4 files
-    * (v4 — a manifest of ONLY the rewrite, the retentionBuild shape)
-    * and advances to it, stranding v3; [[branchVacuum]] then expires
-    * exactly v3 and reclaims its exclusive a3 files while every
-    * pointer's state — release@v1, main@v2, audit@v4 — survives
-    * byte-identical. Built once per (JVM, fixture state). */
-  def branchVacuumFixture(s: org.apache.spark.sql.SparkSession,
-                          dir: String): String = {
-    val root = scratch(dir, "branch_vac")
-    graft.Tables.once(s, "branch_vac", s"$dir/orders.parquet") {
-      evolutionBase(s, dir, root)
-      createBranch(root, "main", 2)
-      writeTag(root, "release", 1)
-      createBranch(root, "audit", 2)
-      val slice = orders(s, dir)
-        .select("o_orderkey", "o_orderdate", "o_totalprice")
-        .where(col("o_orderkey") % 10 === 0)
-      commitOnBranch(s, root, "audit", slice, "a3")
-      val f4 = ttCommit(snapshotRead(s, root, 3).coalesce(2), root, "a4")
-      ttWriteManifest(root, 4, f4)
-      createBranch(root, "audit", 4)
-      branchVacuum(root)
-    }
-    root
-  }
-
-  /** The tagged table feeding scan_snapshot_tag: the time-travel
-    * fixture plus three tag writes — "audit" pinned at v1, "prod"
-    * bound to v1 then RETARGETED to v2 (the promote-after-validation
-    * loop). Tag state is written ONCE per (JVM, fixture state) like
-    * every other lifecycle fixture (ADVICE r14: re-tagging on every
-    * query execution raced concurrent readers of `_tags/prod.txt`). */
-  def tagFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val root = timeTravelFixture(s, dir)
-    graft.Tables.once(s, "time_travel_tags", s"$dir/orders.parquet") {
-      writeTag(root, "audit", 1)
-      writeTag(root, "prod", 1)
-      writeTag(root, "prod", 2) // retarget: promote v2 to prod
-    }
-    root
-  }
-
-  /** Resolve a tag to its version, loudly listing the available tags
-    * on a miss (the [[snapshotRead]] unknown-version discipline). */
-  def resolveTag(root: String, name: String): Int =
-    resolvePointer(root, "_tags", "tag", name)
-
-  private def ttInitDirs(root: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(root).toFile)
-    Files.createDirectories(Paths.get(root, "data"))
-    Files.createDirectories(Paths.get(root, "_manifests"))
-  }
-
-  /** Build (NOT memoized — specs drive it at explicit roots) the
-    * three-version SCHEMA-EVOLUTION fixture: v1/v2 as in the
-    * time-travel table, then v3 appends the o_orderkey%10==0 slice
-    * written WITH an added `o_flag` column (o_orderkey%3 — a closed
-    * form the oracle re-derives). v3's manifest spans the commit
-    * boundary: two schemas in one snapshot, the exact shape
-    * [[snapshotRead]]'s mergeSchema union exists for. The evolution
-    * commit writes ONLY new files — v1/v2 files are untouched bytes
-    * (spec-pinned), which is what makes old versions readable
-    * forever. */
-  def evolutionBuild(s: org.apache.spark.sql.SparkSession, dir: String,
-                     root: String): Unit = {
-    evolutionBase(s, dir, root)
-    evolutionCommitV3(s, dir, root)
-  }
-
-  /** Stage 1 of the evolution fixture: the plain two-version table
-    * (identical shape to timeTravelFixture). Split out so the spec
-    * can observe v1/v2 state BEFORE the schema-evolved commit. */
-  def evolutionBase(s: org.apache.spark.sql.SparkSession, dir: String,
-                    root: String): Unit = {
-    val cutoff = lit(TimeTravelCutoff).cast("timestamp")
-    val o = orders(s, dir).select("o_orderkey", "o_orderdate", "o_totalprice")
-    ttInitDirs(root)
-    val f1 = ttCommit(o.where(col("o_orderdate") < cutoff), root, "c1")
-    val f2 = ttCommit(o.where(col("o_orderdate") >= cutoff), root, "c2")
-    ttWriteManifest(root, 1, f1)
-    ttWriteManifest(root, 2, f1 ++ f2)
-  }
-
-  /** Stage 2: the SCHEMA-EVOLVED append. Like any real commit it
-    * builds on the current snapshot — the new manifest is v2's exact
-    * file list plus the freshly-written files; nothing pre-existing
-    * is rewritten or touched. */
-  def evolutionCommitV3(s: org.apache.spark.sql.SparkSession, dir: String,
-                        root: String): Unit = {
-    val o = orders(s, dir).select("o_orderkey", "o_orderdate", "o_totalprice")
-    val v2files = readManifest(root, 2)
-    val f3 = ttCommit(
-      o.where(col("o_orderkey") % 10 === 0)
-        .withColumn("o_flag", col("o_orderkey") % 3), root, "c3")
-    ttWriteManifest(root, 3, v2files ++ f3)
-  }
-
-  /** The merge-on-read DELETE table feeding scan_delete_vectors:
-    * v1/v2 the usual two commits, then v3 deletes the o_orderkey%7
-    * slice WITHOUT touching a data file — the commit writes (a) a
-    * manifest re-listing v2's exact files and (b) an EQUALITY-DELETE
-    * sidecar under `_deletes/v3/` (a parquet table of deleted keys,
-    * written DISTRIBUTED — at scale a delete list is data, not driver
-    * metadata). [[snapshotRead]] applies the sidecar as an anti-join
-    * at read time — Iceberg v2 equality-delete / Delta DV semantics:
-    * deletes are O(delete list) to commit, paid at read until a
-    * compaction rewrites. Built once per (JVM, fixture state). */
-  def deleteVectorFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val root = scratch(dir, "time_travel_dv")
-    graft.Tables.once(s, "time_travel_dv", s"$dir/orders.parquet") {
-      evolutionBase(s, dir, root)
-      ttWriteManifest(root, 3, readManifest(root, 2))
-      orders(s, dir).where(col("o_orderkey") % 7 === 0)
-        .select(col("o_orderkey"))
-        .write.mode("overwrite").parquet(s"$root/_deletes/v3")
-    }
-    root
-  }
-
-  /** The compaction table feeding scan_snapshot_compact: v1/v2 the
-    * usual two commits, v3 the merge-on-read DELETE (equality-delete
-    * sidecar, zero data files — the deleteVectorFixture shape), then
-    * v4 COMPACTS: the v3 read state (anti-join applied) is rewritten
-    * into fresh c4_* files and the new manifest references only
-    * those, with no sidecar — from v4 on, the delete costs nothing at
-    * read. Prior versions' files and sidecar are untouched (history
-    * stays readable); a later retention pass may expire them — that
-    * half is scan_retention_vacuum's. Built once per (JVM, fixture
-    * state). */
-  def compactionFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val root = scratch(dir, "time_travel_cp")
-    graft.Tables.once(s, "time_travel_cp", s"$dir/orders.parquet") {
-      evolutionBase(s, dir, root)
-      ttWriteManifest(root, 3, readManifest(root, 2))
-      orders(s, dir).where(col("o_orderkey") % 7 === 0)
-        .select(col("o_orderkey"))
-        .write.mode("overwrite").parquet(s"$root/_deletes/v3")
-      val f4 = ttCommit(snapshotRead(s, root, 3), root, "c4")
-      ttWriteManifest(root, 4, f4)
-    }
-    root
-  }
-
-  /** The rollback table feeding scan_snapshot_rollback: v1/v2 as in
-    * the time-travel table, then v3 RESTORES v1 — its manifest is
-    * v1's byte-identical file list republished under the new version
-    * number. No data file is written, moved, or deleted; v2 stays
-    * readable (rollback is an append to HISTORY, not a rewrite).
-    * Built once per (JVM, fixture state). */
-  def rollbackFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val root = scratch(dir, "time_travel_rb")
-    graft.Tables.once(s, "time_travel_rb", s"$dir/orders.parquet") {
-      evolutionBase(s, dir, root)
-      ttWriteManifest(root, 3, readManifest(root, 1))
-    }
-    root
-  }
-
-  /** The schema-evolution table feeding scan_snapshot_evolution.
-    * Built once per (JVM, fixture state). */
-  def evolutionFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val root = scratch(dir, "time_travel_evo")
-    graft.Tables.once(s, "time_travel_evo", s"$dir/orders.parquet") {
-      evolutionBuild(s, dir, root)
-    }
-    root
-  }
-
-  /** The two-commit versioned table feeding scan_time_travel: commit 1
-    * = pre-cutoff orders, commit 2 appends the rest into the SAME data
-    * directory; `_manifests/v{1,2}.txt` list each version's exact
-    * files. Built once per (JVM, fixture state). */
-  def timeTravelFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val root = scratch(dir, "time_travel")
-    graft.Tables.once(s, "time_travel", s"$dir/orders.parquet") {
-      val cutoff = lit(TimeTravelCutoff).cast("timestamp")
-      val o = orders(s, dir).select("o_orderkey", "o_orderdate", "o_totalprice")
-      ttInitDirs(root)
-      val f1 = ttCommit(o.where(col("o_orderdate") < cutoff), root, "c1")
-      val f2 = ttCommit(o.where(col("o_orderdate") >= cutoff), root, "c2")
-      ttWriteManifest(root, 1, f1)
-      ttWriteManifest(root, 2, f1 ++ f2)
-      TimeTravelCommitTs.foreach { case (v, ts) => writeCommitTs(root, v, ts) }
-    }
-    root
-  }
-
-  /** Build (NOT memoized — specs drive it at explicit roots) the
-    * three-version retention fixture: v1 = pre-cutoff orders, v2 = v1
-    * + appended rest, v3 = COMPACTION — v2's rows rewritten into fresh
-    * `c3_*` files and a manifest referencing ONLY those. After v3, the
-    * c1/c2 files are exclusive to v1/v2: the shape where retention
-    * actually reclaims storage (append-only manifests share every
-    * file forever; only a rewrite strands old ones). */
-  def retentionBuild(s: org.apache.spark.sql.SparkSession, dir: String,
-                     root: String): Unit = {
-    val cutoff = lit(TimeTravelCutoff).cast("timestamp")
-    val o = orders(s, dir).select("o_orderkey", "o_orderdate", "o_totalprice")
-    ttInitDirs(root)
-    val f1 = ttCommit(o.where(col("o_orderdate") < cutoff), root, "c1")
-    val f2 = ttCommit(o.where(col("o_orderdate") >= cutoff), root, "c2")
-    ttWriteManifest(root, 1, f1)
-    ttWriteManifest(root, 2, f1 ++ f2)
-    // compaction commit: read THROUGH the v2 snapshot, rewrite compact
-    val f3 = ttCommit(snapshotRead(s, root, 2).coalesce(2), root, "c3")
-    ttWriteManifest(root, 3, f3)
-    // declare WHAT v3 is at the only site that knows (this rewrite
-    // preserves content) — exportDeltaLog's dataChange=false gate
-    // reads this marker instead of inferring from commit shape
-    markCompaction(root, 3)
   }
 
   /** EXPIRE SNAPSHOTS + VACUUM, minimally (the Iceberg
@@ -3223,28 +2755,24 @@ object Scans {
     * are untouched byte-for-byte — expiry only ever removes EXCLUSIVE
     * files — and a read of an expired version fails loudly naming it
     * (the manifest is gone; [[snapshotRead]] raises before touching
-    * data). Metadata-scale: reads manifests only, never lists or
-    * parses data files. */
+    * data). Unknown versions are refused, naming the available ones.
+    * Metadata-scale: reads manifests only, never lists or parses data
+    * files. */
   def expireVersions(root: String, versions: Seq[Int]): Unit = {
-    import java.nio.file.{Files, Paths}
-    val manDir = Paths.get(root, "_manifests").toFile
-    val all = manDir.listFiles().filter(_.getName.matches("v\\d+\\.txt"))
-      .map(f => f.getName.stripPrefix("v").stripSuffix(".txt").toInt -> f).toMap
+    val all = manifestVersions(root)
     val doomed = versions.toSet
-    require(doomed.subsetOf(all.keySet),
+    require(doomed.subsetOf(all.toSet),
       s"cannot expire ${versions.mkString(",")}: available versions are " +
-      all.keys.toSeq.sorted.mkString(","))
-    val surviving = all.keys.filterNot(doomed)
-      .flatMap(v => readManifest(root, v)).toSet
-    val dead = all.keys.filter(doomed)
-      .flatMap(v => readManifest(root, v)).toSet -- surviving
-    // Metadata-first (the Iceberg expire order, ADVICE r12): remove the
+      all.mkString(","))
+    val surviving = all.filterNot(doomed).flatMap(v => readManifest(root, v)).toSet
+    val dead = all.filter(doomed).flatMap(v => readManifest(root, v)).toSet -- surviving
+    // Metadata-first (the Iceberg expire order): remove the
     // doomed manifests BEFORE their exclusive data files. A crash
     // between the two steps then only leaks orphan data files (safe —
     // no manifest names them), never an expired manifest pointing at
     // deleted files, which would pass snapshotRead's loud existence
     // check and fail mid-scan with FileNotFound.
-    doomed.foreach(v => Files.delete(all(v).toPath))
+    doomed.foreach(v => Files.delete(versionFile(root, Manifests, v)))
     dead.foreach(p => Files.deleteIfExists(Paths.get(p)))
     // an expired version's merge-on-read delete sidecar is exclusive
     // to it BY CONSTRUCTION (sidecars are keyed by version), so it is
@@ -3257,38 +2785,20 @@ object Scans {
     }
   }
 
-  /** The post-VACUUM table feeding scan_retention_vacuum: the
-    * three-version fixture with v1/v2 expired — only the compacted v3
-    * snapshot (and its files) survive. Built once per (JVM, fixture
-    * state). */
-  def retentionFixture(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val root = scratch(dir, "time_travel_ret")
-    graft.Tables.once(s, "time_travel_ret", s"$dir/orders.parquet") {
-      retentionBuild(s, dir, root)
-      expireVersions(root, Seq(1, 2))
-    }
-    root
-  }
-
   /** Read one snapshot: the manifest's exact file list (metadata-scale
     * driver read — the reader never lists the data directory). An
     * expired or never-committed version fails LOUDLY, naming the
-    * version — it must never fall through to a directory listing or a
-    * partial read of deleted files. */
-  def snapshotRead(s: org.apache.spark.sql.SparkSession, root: String,
-                   version: Int): org.apache.spark.sql.DataFrame = {
-    val man = java.nio.file.Paths.get(root, "_manifests", s"v$version.txt")
-    if (!java.nio.file.Files.exists(man)) {
-      val avail = new java.io.File(s"$root/_manifests").listFiles()
-        .map(_.getName).filter(_.matches("v\\d+\\.txt"))
-        .map(_.stripPrefix("v").stripSuffix(".txt")).sorted.mkString(", ")
+    * version and the available ones — it must never fall through to a
+    * directory listing or a partial read of deleted files. */
+  def snapshotRead(s: SparkSession, root: String, version: Int): DataFrame = {
+    if (!isCommitted(root, version))
       throw new IllegalArgumentException(
         s"snapshot version $version does not exist at $root " +
-        s"(expired or never committed); available versions: $avail")
-    }
+        s"(expired or never committed); available versions: " +
+        manifestVersions(root).mkString(", "))
     val files = readManifest(root, version)
     // mergeSchema: a snapshot may span a SCHEMA-EVOLVED commit
-    // boundary (VERDICT r12 #5) — files committed before a column was
+    // boundary — files committed before a column was
     // added lack it, so the read schema is the UNION of the
     // manifest's file schemas and pre-evolution rows null-fill the
     // added columns (exactly Delta/Iceberg read semantics). For a
@@ -3304,13 +2814,227 @@ object Scans {
     // of the table; AQE picks broadcast when it is runtime-small and
     // a shuffled anti-join when it is not — both correct, neither
     // hand-forced, because at 100 TB a delete list CAN be large.
-    val dv = java.nio.file.Paths.get(root, "_deletes", s"v$version")
-    if (java.nio.file.Files.isDirectory(dv)) {
+    val dv = Paths.get(root, "_deletes", s"v$version")
+    if (Files.isDirectory(dv)) {
       val del = s.read.parquet(dv.toString)
       base.join(del, del.columns.map(c => base(c) === del(c)).reduce(_ && _),
                 "left_anti")
     } else base
   }
+
+  // ---- the versioned fixtures: every one starts from evolutionBase ----
+
+  /** The three order columns every versioned fixture commits. */
+  private def ttOrders(s: SparkSession, dir: String): DataFrame =
+    orders(s, dir).select("o_orderkey", "o_orderdate", "o_totalprice")
+
+  /** The `o_orderkey % 10 == m` slice the branch and evolution
+    * fixtures stage on top of the two-commit base. */
+  private def orderSlice(s: SparkSession, dir: String, m: Int): DataFrame =
+    ttOrders(s, dir).where(col("o_orderkey") % 10 === m)
+
+  /** Stage 1 of every versioned fixture (NOT memoized — specs drive it
+    * at explicit roots): the plain two-version table. Commit 1 = the
+    * pre-cutoff orders (`c1_*` files), commit 2 appends the rest
+    * (`c2_*`) into the SAME data directory; v1's manifest lists c1, v2's
+    * c1 + c2. */
+  def evolutionBase(s: SparkSession, dir: String, root: String): Unit = {
+    val o = ttOrders(s, dir)
+    ttInitDirs(root)
+    val f1 = ttCommit(o.where(preCutoff), root, "c1")
+    val f2 = ttCommit(o.where(!preCutoff), root, "c2")
+    ttWriteManifest(root, 1, f1)
+    ttWriteManifest(root, 2, f1 ++ f2)
+  }
+
+  /** Build (NOT memoized — specs drive it at explicit roots) the
+    * three-version SCHEMA-EVOLUTION fixture: v1/v2 as in the
+    * time-travel table, then v3 appends the o_orderkey%10==0 slice
+    * written WITH an added `o_flag` column (o_orderkey%3 — a closed
+    * form the oracle re-derives). v3's manifest spans the commit
+    * boundary: two schemas in one snapshot, the exact shape
+    * [[snapshotRead]]'s mergeSchema union exists for. The evolution
+    * commit writes ONLY new files — v1/v2 files are untouched bytes
+    * (spec-pinned), which is what makes old versions readable
+    * forever. */
+  def evolutionBuild(s: SparkSession, dir: String, root: String): Unit = {
+    evolutionBase(s, dir, root)
+    evolutionCommitV3(s, dir, root)
+  }
+
+  /** Stage 2: the SCHEMA-EVOLVED append. Like any real commit it
+    * builds on the current snapshot — the new manifest is v2's exact
+    * file list plus the freshly-written files; nothing pre-existing
+    * is rewritten or touched. */
+  def evolutionCommitV3(s: SparkSession, dir: String, root: String): Unit = {
+    val f3 = ttCommit(
+      orderSlice(s, dir, 0).withColumn("o_flag", col("o_orderkey") % 3), root, "c3")
+    ttWriteManifest(root, 3, readManifest(root, 2) ++ f3)
+  }
+
+  /** The merge-on-read DELETE commit: v3 deletes the o_orderkey%7
+    * slice WITHOUT touching a data file — (a) a manifest re-listing
+    * v2's exact files and (b) an EQUALITY-DELETE sidecar under
+    * `_deletes/v3/` (a parquet table of deleted keys, written
+    * DISTRIBUTED — at scale a delete list is data, not driver
+    * metadata). [[snapshotRead]] applies the sidecar as an anti-join
+    * at read time — Iceberg v2 equality-delete / Delta DV semantics:
+    * deletes are O(delete list) to commit, paid at read until a
+    * compaction rewrites. */
+  private def deleteCommitV3(s: SparkSession, dir: String, root: String): Unit = {
+    ttWriteManifest(root, 3, readManifest(root, 2))
+    orders(s, dir).where(col("o_orderkey") % 7 === 0)
+      .select(col("o_orderkey"))
+      .write.mode("overwrite").parquet(s"$root/_deletes/v3")
+  }
+
+  /** A fixture at `scratch(dir, name)`, built once per (JVM, orders
+    * state) on top of [[evolutionBase]] by `build`. */
+  private def versionedFixture(s: SparkSession, dir: String, name: String)(
+      build: String => Unit): String = {
+    val root = scratch(dir, name)
+    graft.Tables.once(s, name, s"$dir/orders.parquet") {
+      evolutionBase(s, dir, root)
+      build(root)
+    }
+    root
+  }
+
+  /** The two-commit versioned table feeding scan_time_travel: the
+    * [[evolutionBase]] table with its commit timestamps stamped. */
+  def timeTravelFixture(s: SparkSession, dir: String): String =
+    versionedFixture(s, dir, "time_travel") { root =>
+      TimeTravelCommitTs.foreach { case (v, ts) => writeCommitTs(root, v, ts) }
+    }
+
+  /** The tagged table feeding scan_snapshot_tag: the time-travel
+    * fixture plus three tag writes — "audit" pinned at v1, "prod"
+    * bound to v1 then RETARGETED to v2 (the promote-after-validation
+    * loop). Tag state is written ONCE per (JVM, fixture state) like
+    * every other lifecycle fixture (re-tagging on every
+    * query execution raced concurrent readers of `_tags/prod.txt`). */
+  def tagFixture(s: SparkSession, dir: String): String = {
+    val root = timeTravelFixture(s, dir)
+    graft.Tables.once(s, "time_travel_tags", s"$dir/orders.parquet") {
+      writeTag(root, "audit", 1)
+      writeTag(root, "prod", 1)
+      writeTag(root, "prod", 2) // retarget: promote v2 to prod
+    }
+    root
+  }
+
+  /** The merge-on-read DELETE table feeding scan_delete_vectors: the
+    * two commits, then [[deleteCommitV3]]. */
+  def deleteVectorFixture(s: SparkSession, dir: String): String =
+    versionedFixture(s, dir, "time_travel_dv")(deleteCommitV3(s, dir, _))
+
+  /** The compaction table feeding scan_snapshot_compact: the
+    * [[deleteVectorFixture]] shape, then v4 COMPACTS: the v3 read state
+    * (anti-join applied) is rewritten into fresh c4_* files and the new
+    * manifest references only those, with no sidecar — from v4 on, the
+    * delete costs nothing at read. Prior versions' files and sidecar
+    * are untouched (history stays readable); a later retention pass may
+    * expire them — that half is scan_retention_vacuum's. */
+  def compactionFixture(s: SparkSession, dir: String): String =
+    versionedFixture(s, dir, "time_travel_cp") { root =>
+      deleteCommitV3(s, dir, root)
+      ttWriteManifest(root, 4, ttCommit(snapshotRead(s, root, 3), root, "c4"))
+    }
+
+  /** The rollback table feeding scan_snapshot_rollback: v1/v2 as in
+    * the time-travel table, then v3 RESTORES v1 — its manifest is
+    * v1's byte-identical file list republished under the new version
+    * number. No data file is written, moved, or deleted; v2 stays
+    * readable (rollback is an append to HISTORY, not a rewrite). */
+  def rollbackFixture(s: SparkSession, dir: String): String =
+    versionedFixture(s, dir, "time_travel_rb") { root =>
+      ttWriteManifest(root, 3, readManifest(root, 1))
+    }
+
+  /** The schema-evolution table feeding scan_snapshot_evolution. */
+  def evolutionFixture(s: SparkSession, dir: String): String =
+    versionedFixture(s, dir, "time_travel_evo")(evolutionCommitV3(s, dir, _))
+
+  /** Build (NOT memoized — specs drive it at explicit roots) the
+    * three-version retention fixture: v1 = pre-cutoff orders, v2 = v1
+    * + appended rest, v3 = COMPACTION — v2's rows rewritten into fresh
+    * `c3_*` files and a manifest referencing ONLY those. After v3, the
+    * c1/c2 files are exclusive to v1/v2: the shape where retention
+    * actually reclaims storage (append-only manifests share every
+    * file forever; only a rewrite strands old ones). */
+  def retentionBuild(s: SparkSession, dir: String, root: String): Unit = {
+    evolutionBase(s, dir, root)
+    // compaction commit: read THROUGH the v2 snapshot, rewrite compact
+    ttWriteManifest(root, 3, ttCommit(snapshotRead(s, root, 2).coalesce(2), root, "c3"))
+    // declare WHAT v3 is at the only site that knows (this rewrite
+    // preserves content) — exportDeltaLog's dataChange=false gate
+    // reads this marker instead of inferring from commit shape
+    markCompaction(root, 3)
+  }
+
+  /** The post-VACUUM table feeding scan_retention_vacuum: the
+    * three-version fixture with v1/v2 expired — only the compacted v3
+    * snapshot (and its files) survive. Built once per (JVM, fixture
+    * state). */
+  def retentionFixture(s: SparkSession, dir: String): String = {
+    val root = scratch(dir, "time_travel_ret")
+    graft.Tables.once(s, "time_travel_ret", s"$dir/orders.parquet") {
+      retentionBuild(s, dir, root)
+      expireVersions(root, Seq(1, 2))
+    }
+    root
+  }
+
+  /** The write-audit-publish table feeding scan_branch_wap: v1/v2 with
+    * branches `main` and `audit` both at v2; the %10==0 slice is then
+    * staged ON `audit` (v3 — main still resolves to v2), the
+    * pre-publish main state is frozen under the `prepublish` tag (the
+    * rollback anchor), and `audit` publishes to `main`. */
+  def wapFixture(s: SparkSession, dir: String): String =
+    versionedFixture(s, dir, "branch_wap") { root =>
+      createBranch(root, "main", 2)
+      createBranch(root, "audit", 2)
+      commitOnBranch(s, root, "audit", orderSlice(s, dir, 0), "a3")
+      writeTag(root, "prepublish", resolveBranch(root, "main"))
+      publishBranch(root, "audit", "main")
+    }
+
+  /** The diverged-branches table feeding scan_branch_cherrypick:
+    * main and audit both fork at v2 (frozen under the `fork` tag);
+    * audit stages the %10==0 slice (v3) while a CONCURRENT commit
+    * lands the %10==1 slice directly on main (v4) — main has moved
+    * past audit's fork point, so fast-forward publish would drop the
+    * concurrent commit. [[cherryPick]] replays audit's increment
+    * onto main's head as v5 = v4's manifest + (v3 − fork). */
+  def cherrypickFixture(s: SparkSession, dir: String): String =
+    versionedFixture(s, dir, "branch_cp") { root =>
+      createBranch(root, "main", 2)
+      createBranch(root, "audit", 2)
+      writeTag(root, "fork", 2)
+      commitOnBranch(s, root, "audit", orderSlice(s, dir, 0), "a3")
+      commitOnBranch(s, root, "main", orderSlice(s, dir, 1), "m4")
+      cherryPick(root, "audit", "main", "fork")
+    }
+
+  /** The vacuumed branched table feeding scan_branch_vacuum: v1/v2
+    * with tag `release`→v1 and `main`→v2; `audit` stages the %10
+    * slice (v3), then COMPACTS its own state into fresh a4 files
+    * (v4 — a manifest of ONLY the rewrite, the retentionBuild shape)
+    * and advances to it, stranding v3; [[branchVacuum]] then expires
+    * exactly v3 and reclaims its exclusive a3 files while every
+    * pointer's state — release@v1, main@v2, audit@v4 — survives
+    * byte-identical. */
+  def branchVacuumFixture(s: SparkSession, dir: String): String =
+    versionedFixture(s, dir, "branch_vac") { root =>
+      createBranch(root, "main", 2)
+      writeTag(root, "release", 1)
+      createBranch(root, "audit", 2)
+      commitOnBranch(s, root, "audit", orderSlice(s, dir, 0), "a3")
+      ttWriteManifest(root, 4, ttCommit(snapshotRead(s, root, 3).coalesce(2), root, "a4"))
+      createBranch(root, "audit", 4)
+      branchVacuum(root)
+    }
+
 
   /** The fixture writer's shuffle-partition count — `source_framed_runs`'
     * oracle derives its expected run count from THIS constant (not a
@@ -3941,6 +3665,53 @@ object Scans {
      "CAST(SUM(np * base + (np * (np - 1)) // 2) AS BIGINT) AS pulse_sum " +
      "FROM e GROUP BY event_type ORDER BY event_type")
 
+  // ---- the versioned-table family's oracle spelling ----
+
+  /** [[TotalCents]] in DuckDB, and its exact sum. */
+  private val CentsSql = "CAST(FLOOR(o_totalprice * 100) AS BIGINT)"
+  private val CentsSumSql = s"CAST(SUM($CentsSql) AS BIGINT)"
+  private val PreCutoffSql = s"o_orderdate < TIMESTAMP '$TimeTravelCutoff'"
+  private val PostCutoffSql = s"o_orderdate >= TIMESTAMP '$TimeTravelCutoff'"
+  private val PreCountSql = s"(SELECT COUNT(*) FROM orders WHERE $PreCutoffSql)"
+  private val PostCountSql = s"(SELECT COUNT(*) FROM orders WHERE $PostCutoffSql)"
+
+  /** A pinned ISO commit stamp as DuckDB epoch milliseconds. */
+  private def epochMsSql(isoTs: String): String =
+    s"CAST(epoch_ms(TIMESTAMP '${isoTs.replace("T", " ").stripSuffix("Z")}') AS BIGINT)"
+
+  private def ordersWhere(cond: String): String =
+    if (cond.isEmpty) "FROM orders" else s"FROM orders WHERE $cond"
+
+  /** The oracle twin of [[summaryRows]]: per (labels, condition) pair
+    * one `labels, n_rows, total_cents` row over the orders the
+    * condition keeps (every order when it is empty), unioned and
+    * ordered by `orderBy`. */
+  private def summaryRowsSql(orderBy: String, rows: (String, String)*): String =
+    rows.map { case (labels, cond) =>
+      (Seq(labels).filter(_.nonEmpty) ++ Seq("CAST(COUNT(*) AS BIGINT) AS n_rows",
+        s"$CentsSumSql AS total_cents")).mkString("SELECT ", ", ", s" ${ordersWhere(cond)} ")
+    }.mkString("UNION ALL ") + s"ORDER BY $orderBy"
+
+  /** `WITH name AS (n, c), … ` — each CTE one count-and-cents row over
+    * the orders its condition keeps. */
+  private def summaryCtesSql(ctes: (String, String)*): String =
+    ctes.map { case (name, cond) =>
+      s"$name AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, $CentsSumSql AS c ${ordersWhere(cond)})"
+    }.mkString("WITH ", ", ", " ")
+
+  /** scan_iceberg_delete_files' and _equality's oracle: v2 every order,
+    * v3 the orders whose key survives the %7 delete, and the deleted
+    * count. */
+  private val DeleteApplySql =
+    s"SELECT CAST(2 AS BIGINT) AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
+    s"$CentsSumSql AS total_cents, CAST(0 AS BIGINT) AS n_deleted FROM orders " +
+    "UNION ALL " +
+    "SELECT CAST(3 AS BIGINT), " +
+    "CAST(COUNT(CASE WHEN o_orderkey % 7 <> 0 THEN 1 END) AS BIGINT), " +
+    s"CAST(SUM(CASE WHEN o_orderkey % 7 <> 0 THEN $CentsSql END) AS BIGINT), " +
+    "CAST(COUNT(CASE WHEN o_orderkey % 7 = 0 THEN 1 END) AS BIGINT) " +
+    "FROM orders ORDER BY version"
+
   val oracle: Map[String, String] = Map(
     // lossless-extract checks: aggregates over each framed read equal
     // the same aggregates over the source events
@@ -4119,7 +3890,7 @@ object Scans {
        "CAST(SUM(o_orderkey) AS BIGINT) AS key_sig, " +
        "CAST(MIN(epoch_us(o_orderdate)) AS BIGINT) AS min_ts, " +
        "CAST(MAX(epoch_us(o_orderdate)) AS BIGINT) AS max_ts, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
+       s"$CentsSumSql AS total_cents " +
        "FROM orders GROUP BY 1 ORDER BY bucket"),
     "sink_avro_roundtrip" ->
       ("SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n, " +
@@ -4162,7 +3933,7 @@ object Scans {
       ("SELECT CAST(EXTRACT(YEAR FROM o_orderdate) * 100 + " +
        "EXTRACT(MONTH FROM o_orderdate) AS BIGINT) AS ym, " +
        "CAST(COUNT(*) AS BIGINT) AS n_orders, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
+       s"$CentsSumSql AS total_cents " +
        "FROM orders WHERE o_orderdate >= TIMESTAMP '2001-02-15' " +
        "AND o_orderdate < TIMESTAMP '2001-07-11' " +
        "GROUP BY 1 ORDER BY 1"),
@@ -4213,25 +3984,14 @@ object Scans {
     // the two snapshot states derived from the cutoff predicate — the
     // engine must reproduce them through manifests alone
     "scan_time_travel" ->
-      ("SELECT 1 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       s"FROM orders WHERE o_orderdate < TIMESTAMP '$TimeTravelCutoff' " +
-       "UNION ALL " +
-       "SELECT 2 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders ORDER BY version"),
+      summaryRowsSql("version", "1 AS version" -> PreCutoffSql, "2 AS version" -> ""),
 
     // mid probe → the pre-cutoff v1 state, late probe → all orders —
     // both derived from the cutoff predicate, with the as-of labels
     // and resolved versions pinned as literals
     "scan_time_travel_ts" ->
-      (s"SELECT '$AsOfMid' AS as_of, 1 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       s"FROM orders WHERE o_orderdate < TIMESTAMP '$TimeTravelCutoff' " +
-       "UNION ALL " +
-       s"SELECT '$AsOfLate' AS as_of, 2 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders ORDER BY as_of"),
+      summaryRowsSql("as_of", s"'$AsOfMid' AS as_of, 1 AS version" -> PreCutoffSql,
+        s"'$AsOfLate' AS as_of, 2 AS version" -> ""),
 
     // every field of the Iceberg-shaped export predicted from the
     // fixture's declared commit stamps — the engine must round-trip
@@ -4241,10 +4001,9 @@ object Scans {
       TimeTravelCommitTs.toSeq.sortBy(_._1).map { case (v, ts) =>
         val parent = if (v == TimeTravelCommitTs.keys.min) "CAST(NULL AS BIGINT)"
                      else s"CAST(${v - 1} AS BIGINT)"
-        val duckTs = ts.replace("T", " ").stripSuffix("Z")
         s"SELECT CAST($v AS BIGINT) AS snapshot_id, $parent AS parent_id, " +
         s"CAST($v AS BIGINT) AS sequence_number, " +
-        s"CAST(epoch_ms(TIMESTAMP '$duckTs') AS BIGINT) AS committed_at_ms, " +
+        s"${epochMsSql(ts)} AS committed_at_ms, " +
         s"'append' AS operation, ${v == maxV} AS is_current"
       }.mkString(" UNION ALL ") + " ORDER BY snapshot_id"
     },
@@ -4254,20 +4013,13 @@ object Scans {
     // post-cutoff APPEND (live = everything), v2 = the compaction
     // OPTIMIZE (rewrites all rows, live count unchanged)
     "scan_delta_export" -> {
-      def ms(v: Int) = {
-        val duckTs = DeltaCommitTs(v).replace("T", " ").stripSuffix("Z")
-        s"CAST(epoch_ms(TIMESTAMP '$duckTs') AS BIGINT)"
-      }
-      val pre = "(SELECT COUNT(*) FROM orders WHERE o_orderdate < " +
-        s"TIMESTAMP '$TimeTravelCutoff')"
-      val post = "(SELECT COUNT(*) FROM orders WHERE o_orderdate >= " +
-        s"TIMESTAMP '$TimeTravelCutoff')"
+      def ms(v: Int) = epochMsSql(DeltaCommitTs(v))
       val all = "(SELECT COUNT(*) FROM orders)"
       s"SELECT CAST(0 AS BIGINT) AS version, ${ms(1)} AS committed_at_ms, " +
-      s"'WRITE' AS operation, CAST($pre AS BIGINT) AS rows_added, " +
-      s"CAST($pre AS BIGINT) AS rows_live " +
+      s"'WRITE' AS operation, CAST($PreCountSql AS BIGINT) AS rows_added, " +
+      s"CAST($PreCountSql AS BIGINT) AS rows_live " +
       "UNION ALL " +
-      s"SELECT CAST(1 AS BIGINT), ${ms(2)}, 'APPEND', CAST($post AS BIGINT), " +
+      s"SELECT CAST(1 AS BIGINT), ${ms(2)}, 'APPEND', CAST($PostCountSql AS BIGINT), " +
       s"CAST($all AS BIGINT) " +
       "UNION ALL " +
       s"SELECT CAST(2 AS BIGINT), ${ms(3)}, 'OPTIMIZE', CAST($all AS BIGINT), " +
@@ -4278,94 +4030,59 @@ object Scans {
     // v1 adds the pre-cutoff rows to an empty table; v2 adds the rest
     // while the v1 files ride as EXISTING with their sequence window
     // anchored at 1
-    "scan_iceberg_manifest_stats" -> {
-      val pre = "(SELECT COUNT(*) FROM orders WHERE o_orderdate < " +
-        s"TIMESTAMP '$TimeTravelCutoff')"
-      val post = "(SELECT COUNT(*) FROM orders WHERE o_orderdate >= " +
-        s"TIMESTAMP '$TimeTravelCutoff')"
-      "SELECT CAST(1 AS BIGINT) AS sequence_number, " +
-      "CAST(1 AS BIGINT) AS min_sequence_number, " +
-      s"CAST($pre AS BIGINT) AS added_rows, CAST(0 AS BIGINT) AS existing_rows, " +
-      "TRUE AS has_added_files " +
-      "UNION ALL SELECT CAST(2 AS BIGINT), CAST(1 AS BIGINT), " +
-      s"CAST($post AS BIGINT), CAST($pre AS BIGINT), TRUE " +
-      "ORDER BY sequence_number"
-    },
+    "scan_iceberg_manifest_stats" ->
+      ("SELECT CAST(1 AS BIGINT) AS sequence_number, " +
+       "CAST(1 AS BIGINT) AS min_sequence_number, " +
+       s"CAST($PreCountSql AS BIGINT) AS added_rows, CAST(0 AS BIGINT) AS existing_rows, " +
+       "TRUE AS has_added_files " +
+       "UNION ALL SELECT CAST(2 AS BIGINT), CAST(1 AS BIGINT), " +
+       s"CAST($PostCountSql AS BIGINT), CAST($PreCountSql AS BIGINT), TRUE " +
+       "ORDER BY sequence_number"),
 
     // the one append window is exactly the post-cutoff slice
     "scan_iceberg_cdc" ->
-      ("SELECT CAST(1 AS BIGINT) AS from_snapshot, CAST(2 AS BIGINT) AS to_snapshot, " +
-       "CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       s"FROM orders WHERE o_orderdate >= TIMESTAMP '$TimeTravelCutoff' " +
-       "ORDER BY to_snapshot"),
+      summaryRowsSql("to_snapshot",
+        "CAST(1 AS BIGINT) AS from_snapshot, CAST(2 AS BIGINT) AS to_snapshot" -> PostCutoffSql),
 
     // the change feed sees each row exactly once: the base write and
     // the append, never the rewrite's re-added rows
     "scan_delta_cdc" ->
-      ("SELECT CAST(0 AS BIGINT) AS version, 'insert' AS change_type, " +
-       "CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       s"FROM orders WHERE o_orderdate < TIMESTAMP '$TimeTravelCutoff' " +
+      (s"SELECT CAST(0 AS BIGINT) AS version, 'insert' AS change_type, " +
+       s"CAST(COUNT(*) AS BIGINT) AS n_rows, $CentsSumSql AS total_cents " +
+       s"FROM orders WHERE $PreCutoffSql " +
        "UNION ALL " +
-       "SELECT CAST(1 AS BIGINT), 'insert', CAST(COUNT(*) AS BIGINT), " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) " +
-       s"FROM orders WHERE o_orderdate >= TIMESTAMP '$TimeTravelCutoff' " +
-       "ORDER BY version"),
+       s"SELECT CAST(1 AS BIGINT), 'insert', CAST(COUNT(*) AS BIGINT), $CentsSumSql " +
+       s"FROM orders WHERE $PostCutoffSql ORDER BY version"),
 
     // data served through the reconstructed live file set must BE the
     // table — the full orders state after the compaction rewrite
-    "scan_delta_import" ->
-      ("SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders ORDER BY 1"),
+    "scan_delta_import" -> summaryRowsSql("1", "" -> ""),
 
     // both exported snapshots served through their manifest lists:
     // v1 = the pre-cutoff state, v2 = everything
     "scan_iceberg_import" ->
-      ("SELECT CAST(1 AS BIGINT) AS snapshot_id, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       s"FROM orders WHERE o_orderdate < TIMESTAMP '$TimeTravelCutoff' " +
+      (s"SELECT CAST(1 AS BIGINT) AS snapshot_id, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
+       s"$CentsSumSql AS total_cents FROM orders WHERE $PreCutoffSql " +
        "UNION ALL " +
-       "SELECT CAST(2 AS BIGINT), CAST(COUNT(*) AS BIGINT), " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) " +
+       s"SELECT CAST(2 AS BIGINT), CAST(COUNT(*) AS BIGINT), $CentsSumSql " +
        "FROM orders ORDER BY snapshot_id"),
 
     // the surviving compacted snapshot must still be the COMPLETE
     // table after v1/v2 and their exclusive files were vacuumed
     "scan_retention_vacuum" ->
-      ("SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents, " +
-       "CAST(COUNT(*) FILTER (WHERE o_orderdate < " +
-       s"TIMESTAMP '$TimeTravelCutoff') AS BIGINT) AS n_pre_cutoff " +
+      (s"SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, $CentsSumSql AS total_cents, " +
+       s"CAST(COUNT(*) FILTER (WHERE $PreCutoffSql) AS BIGINT) AS n_pre_cutoff " +
        "FROM orders ORDER BY 1"),
 
     // v2 = every order, v3 = every order whose key survives the
     // equality-delete predicate
     "scan_delete_vectors" ->
-      ("SELECT 2 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders " +
-       "UNION ALL " +
-       "SELECT 3 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders WHERE o_orderkey % 7 <> 0 " +
-       "ORDER BY version"),
+      summaryRowsSql("version", "2 AS version" -> "", "3 AS version" -> "o_orderkey % 7 <> 0"),
 
     // both states and the deleted-row accounting from the key
     // predicate — the positional form must reproduce the equality
     // sidecar's exact effect
-    "scan_iceberg_delete_files" ->
-      ("SELECT CAST(2 AS BIGINT) AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents, " +
-       "CAST(0 AS BIGINT) AS n_deleted FROM orders " +
-       "UNION ALL " +
-       "SELECT CAST(3 AS BIGINT), " +
-       "CAST(COUNT(CASE WHEN o_orderkey % 7 <> 0 THEN 1 END) AS BIGINT), " +
-       "CAST(SUM(CASE WHEN o_orderkey % 7 <> 0 " +
-       "THEN CAST(FLOOR(o_totalprice * 100) AS BIGINT) END) AS BIGINT), " +
-       "CAST(COUNT(CASE WHEN o_orderkey % 7 = 0 THEN 1 END) AS BIGINT) " +
-       "FROM orders ORDER BY version"),
+    "scan_iceberg_delete_files" -> DeleteApplySql,
 
     // the union of both kinds + the per-kind split, all from the key
     // residues: survivors are %7<>0, positional half %14=0, equality
@@ -4373,25 +4090,14 @@ object Scans {
     "scan_iceberg_delete_mixed" ->
       ("SELECT CAST(3 AS BIGINT) AS version, " +
        "CAST(COUNT(CASE WHEN o_orderkey % 7 <> 0 THEN 1 END) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CASE WHEN o_orderkey % 7 <> 0 " +
-       "THEN CAST(FLOOR(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS total_cents, " +
+       s"CAST(SUM(CASE WHEN o_orderkey % 7 <> 0 THEN $CentsSql END) AS BIGINT) AS total_cents, " +
        "CAST(COUNT(CASE WHEN o_orderkey % 14 = 0 THEN 1 END) AS BIGINT) AS n_pos_deleted, " +
        "CAST(COUNT(CASE WHEN o_orderkey % 14 = 7 THEN 1 END) AS BIGINT) AS n_eq_deleted " +
        "FROM orders ORDER BY version"),
 
     // both delete encodings must reproduce the sidecar's exact effect:
     // identical oracle to the positional lane
-    "scan_iceberg_delete_equality" ->
-      ("SELECT CAST(2 AS BIGINT) AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents, " +
-       "CAST(0 AS BIGINT) AS n_deleted FROM orders " +
-       "UNION ALL " +
-       "SELECT CAST(3 AS BIGINT), " +
-       "CAST(COUNT(CASE WHEN o_orderkey % 7 <> 0 THEN 1 END) AS BIGINT), " +
-       "CAST(SUM(CASE WHEN o_orderkey % 7 <> 0 " +
-       "THEN CAST(FLOOR(o_totalprice * 100) AS BIGINT) END) AS BIGINT), " +
-       "CAST(COUNT(CASE WHEN o_orderkey % 7 = 0 THEN 1 END) AS BIGINT) " +
-       "FROM orders ORDER BY version"),
+    "scan_iceberg_delete_equality" -> DeleteApplySql,
 
     // the retracted batch from the key predicate; key_residue_sig = 0
     // proves ONLY %7 rows were retracted (any stray ordinal would
@@ -4399,73 +4105,46 @@ object Scans {
     "scan_iceberg_cdc_deletes" ->
       ("SELECT CAST(2 AS BIGINT) AS from_snapshot, " +
        "CAST(3 AS BIGINT) AS to_snapshot, 'delete' AS change_type, " +
-       "CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents, " +
+       s"CAST(COUNT(*) AS BIGINT) AS n_rows, $CentsSumSql AS total_cents, " +
        "CAST(SUM(o_orderkey % 7) AS BIGINT) AS key_residue_sig " +
        "FROM orders WHERE o_orderkey % 7 = 0 ORDER BY from_snapshot"),
 
     // v3 (sidecar applied at read) and v4 (the compacted rewrite)
     // must be the SAME state: the surviving o_orderkey % 7 <> 0 rows
     "scan_snapshot_compact" ->
-      ("SELECT 3 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders WHERE o_orderkey % 7 <> 0 " +
-       "UNION ALL " +
-       "SELECT 4 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders WHERE o_orderkey % 7 <> 0 " +
-       "ORDER BY version"),
+      summaryRowsSql("version", "3 AS version" -> "o_orderkey % 7 <> 0",
+        "4 AS version" -> "o_orderkey % 7 <> 0"),
 
     // the v1→v2 change set is exactly the appended post-cutoff slice;
     // n_pre_cutoff = 0 proves no base-commit row leaks into the diff
     "scan_snapshot_diff" ->
-      ("SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents, " +
-       s"CAST(COUNT(CASE WHEN o_orderdate < TIMESTAMP '$TimeTravelCutoff' THEN 1 END) AS BIGINT) AS n_pre_cutoff " +
-       s"FROM orders WHERE o_orderdate >= TIMESTAMP '$TimeTravelCutoff' ORDER BY 1"),
+      (s"SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, $CentsSumSql AS total_cents, " +
+       s"CAST(COUNT(CASE WHEN $PreCutoffSql THEN 1 END) AS BIGINT) AS n_pre_cutoff " +
+       s"FROM orders WHERE $PostCutoffSql ORDER BY 1"),
 
     // v2 = the full table, v3 = the restore of v1 (pre-cutoff) — both
     // states derive from the cutoff predicate
     "scan_snapshot_rollback" ->
-      ("SELECT 2 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders " +
-       "UNION ALL " +
-       "SELECT 3 AS version, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       s"FROM orders WHERE o_orderdate < TIMESTAMP '$TimeTravelCutoff' " +
-       "ORDER BY version"),
+      summaryRowsSql("version", "2 AS version" -> "", "3 AS version" -> PreCutoffSql),
 
     // audit is pinned at v1 (pre-cutoff slice); prod, after the
     // retarget, resolves to v2 (the full table) — last write wins
     "scan_snapshot_tag" ->
-      ("SELECT 'audit' AS tag, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       s"FROM orders WHERE o_orderdate < TIMESTAMP '$TimeTravelCutoff' " +
-       "UNION ALL " +
-       "SELECT 'prod' AS tag, CAST(COUNT(*) AS BIGINT) AS n_rows, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
-       "FROM orders " +
-       "ORDER BY tag"),
+      summaryRowsSql("tag", "'audit' AS tag" -> PreCutoffSql, "'prod' AS tag" -> ""),
 
     // the staged increment is exactly the %10 slice — nothing from
     // the base commits leaks into the audit read
     "scan_branch_audit_diff" ->
       ("SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, " +
        "CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_keys, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents " +
+       s"$CentsSumSql AS total_cents " +
        "FROM orders WHERE o_orderkey % 10 = 0 ORDER BY 1"),
 
     // audit staged the %10 slice on top of the full table; publish
     // fast-forwarded main to that state; the prepublish tag still
     // resolves to the unstaged table
     "scan_branch_wap" ->
-      ("WITH f AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c " +
-       "FROM orders), " +
-       "sl AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c " +
-       "FROM orders WHERE o_orderkey % 10 = 0) " +
+      (summaryCtesSql("f" -> "", "sl" -> "o_orderkey % 10 = 0") +
        "SELECT 'audit-head' AS ref, f.n + sl.n AS n_rows, " +
        "f.c + sl.c AS total_cents FROM f, sl " +
        "UNION ALL SELECT 'main-head' AS ref, f.n + sl.n, f.c + sl.c FROM f, sl " +
@@ -4476,15 +4155,7 @@ object Scans {
     // slice), main untouched (all orders), release tag frozen at the
     // pre-cutoff v1 — each derived straight from the source predicates
     "scan_branch_vacuum" ->
-      ("WITH f AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c " +
-       "FROM orders), " +
-       "sl AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c " +
-       "FROM orders WHERE o_orderkey % 10 = 0), " +
-       "p AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c " +
-       s"FROM orders WHERE o_orderdate < TIMESTAMP '$TimeTravelCutoff') " +
+      (summaryCtesSql("f" -> "", "sl" -> "o_orderkey % 10 = 0", "p" -> PreCutoffSql) +
        "SELECT 'audit-head' AS ref, f.n + sl.n AS n_rows, " +
        "f.c + sl.c AS total_cents FROM f, sl " +
        "UNION ALL SELECT 'main-head' AS ref, f.n, f.c FROM f " +
@@ -4495,15 +4166,7 @@ object Scans {
     // concurrent commit survived); audit only its own staged slice;
     // the fork tag still the unstaged table
     "scan_branch_cherrypick" ->
-      ("WITH f AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c " +
-       "FROM orders), " +
-       "s0 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c " +
-       "FROM orders WHERE o_orderkey % 10 = 0), " +
-       "s1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c " +
-       "FROM orders WHERE o_orderkey % 10 = 1) " +
+      (summaryCtesSql("f" -> "", "s0" -> "o_orderkey % 10 = 0", "s1" -> "o_orderkey % 10 = 1") +
        "SELECT 'audit-head' AS ref, f.n + s0.n AS n_rows, " +
        "f.c + s0.c AS total_cents FROM f, s0 " +
        "UNION ALL SELECT 'fork-tag' AS ref, f.n, f.c FROM f " +
@@ -4514,11 +4177,9 @@ object Scans {
     // v3 = every order (v2) plus the %10 slice re-appended WITH the
     // added column; only the slice's rows carry non-null o_flag
     "scan_snapshot_evolution" ->
-      ("WITH a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n1, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c1 " +
+      (s"WITH a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n1, $CentsSumSql AS c1 " +
        "FROM orders), " +
-       "b AS (SELECT CAST(COUNT(*) AS BIGINT) AS n2, " +
-       "CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS c2, " +
+       s"b AS (SELECT CAST(COUNT(*) AS BIGINT) AS n2, $CentsSumSql AS c2, " +
        "CAST(SUM(o_orderkey % 3) AS BIGINT) AS fs " +
        "FROM orders WHERE o_orderkey % 10 = 0) " +
        "SELECT n1 + n2 AS n_rows, c1 + c2 AS total_cents, " +

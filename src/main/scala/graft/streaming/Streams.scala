@@ -1093,9 +1093,7 @@ object Streams {
       }
       Scans.snapshotRead(s, root, Scans.resolveBranch(root, "main"))
         .groupBy("o_orderstatus")
-        .agg(big(count(lit(1))).as("n_orders"),
-             big(sum(floor(col("o_totalprice") * 100).cast("long")))
-               .as("total_cents"))
+        .agg(big(count(lit(1))).as("n_orders"), big(sum(Scans.TotalCents)).as("total_cents"))
         .orderBy("o_orderstatus")
     })
   )

@@ -174,14 +174,25 @@ class IcebergDeleteManifestSpec extends SparkSpec {
     }
   }
 
+  /** The three delete exports and their output dirs: the memo and
+    * re-export tests run each of them as an input. */
+  private val exports: Seq[(String, (org.apache.spark.sql.SparkSession, String) => String)] = Seq(
+    "_iceberg_del" -> Scans.exportIcebergDeleteSnapshot,
+    "_iceberg_eqdel" -> Scans.exportIcebergEqualityDeleteSnapshot,
+    "_iceberg_mixdel" -> Scans.exportIcebergMixedDeleteSnapshot)
+
   test("a repeated export is memoized and byte-stable") {
-    val again = Scans.exportIcebergDeleteSnapshot(spark, root)
-    assert(again == listPath)
-    val b1 = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(listPath))
-    val b2 = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(again))
-    assert(b1.sameElements(b2))
+    exports.foreach { case (out, export) =>
+      val first = export(spark, root)
+      val again = export(spark, root)
+      assert(again == first, out)
+      val b1 = java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(first))
+      val b2 = java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(again))
+      assert(b1.sameElements(b2), out)
+    }
+    assert(Scans.exportIcebergDeleteSnapshot(spark, root) == listPath)
   }
 
   test("a listed data file rewritten in place re-exports the positional " +
@@ -195,16 +206,27 @@ class IcebergDeleteManifestSpec extends SparkSpec {
     Files.copy(Paths.get(own, "_manifests", "v2.txt"), Paths.get(own, "_manifests", "v3.txt"))
     Tables.orders(spark, sf001).where(col("o_orderkey") % 7 === 0)
       .select("o_orderkey").write.parquet(s"$own/_deletes/v3")
+    // the positional deletes of a list, per data file
     def positions(list: String): Map[String, Seq[Long]] =
-      AvroManifest.readContentFilePaths(list).collect { case (1, p) => p }
+      AvroManifest.readDeleteFiles(list).collect { case (1, p) => p }
         .flatMap(p => AvroManifest.decodePositionalDeletes(Files.readAllBytes(Paths.get(p))))
         .groupBy(_._1).map { case (fp, ds) => fp -> ds.map(_._2).sorted }
-    def truth(fp: String): Seq[Long] = spark.read.parquet(fp)
-      .select(col("_metadata.row_index"), col("o_orderkey"))
-      .where(col("o_orderkey") % 7 === 0).collect().map(_.getLong(0)).toSeq.sorted
+    def equalityKeys(list: String): Seq[Long] =
+      AvroManifest.readDeleteFiles(list).collect { case (2, p) => p }
+        .flatMap(p => AvroManifest.decodeEqualityDeletes(Files.readAllBytes(Paths.get(p))))
+        .sorted
+    // the ordinals of fp's rows whose key the export deletes positionally
+    def truth(fp: String, positional: org.apache.spark.sql.Column): Seq[Long] =
+      spark.read.parquet(fp)
+        .select(col("_metadata.row_index"), col("o_orderkey"))
+        .where(positional).collect().map(_.getLong(0)).toSeq.sorted
+    val pos7 = col("o_orderkey") % 7 === 0
+    val pos14 = col("o_orderkey") % 14 === 0
     val first = Scans.exportIcebergDeleteSnapshot(spark, own)
     val fp = positions(first).keys.min
     val before = positions(first)(fp)
+    val mixedBefore = positions(Scans.exportIcebergMixedDeleteSnapshot(spark, own))(fp)
+    val keysBefore = equalityKeys(Scans.exportIcebergEqualityDeleteSnapshot(spark, own))
     // same rows in reverse order at the same path: the listing is
     // unchanged, every ordinal moves
     val mtime = new java.io.File(fp).lastModified
@@ -214,10 +236,18 @@ class IcebergDeleteManifestSpec extends SparkSpec {
     Files.copy(part.toPath, Paths.get(fp), StandardCopyOption.REPLACE_EXISTING)
     new java.io.File(fp).setLastModified(mtime + 60000L)
     val second = Scans.exportIcebergDeleteSnapshot(spark, own)
-    assert(positions(second)(fp) == truth(fp), "stale positional deletes served")
+    assert(positions(second)(fp) == truth(fp, pos7), "stale positional deletes served")
     assert(positions(second)(fp) != before)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$own/_iceberg_del"))
-    val third = Scans.exportIcebergDeleteSnapshot(spark, own)
-    assert(Files.exists(Paths.get(third)), "a removed export must be redone")
+    // the mixed export's positional half moves with the rows too; the
+    // equality keys name values, not ordinals, so they stay the sidecar
+    val mixedSecond = positions(Scans.exportIcebergMixedDeleteSnapshot(spark, own))(fp)
+    assert(mixedSecond == truth(fp, pos14), "stale mixed positional deletes served")
+    assert(mixedSecond != mixedBefore)
+    assert(equalityKeys(Scans.exportIcebergEqualityDeleteSnapshot(spark, own)) == keysBefore)
+    exports.foreach { case (out, export) =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$own/$out"))
+      val third = export(spark, own)
+      assert(Files.exists(Paths.get(third)), s"a removed export must be redone: $out")
+    }
   }
 }

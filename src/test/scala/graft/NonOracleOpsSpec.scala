@@ -1052,6 +1052,21 @@ class NonOracleOpsSpec extends SparkSpec {
       new java.io.File(root).getParentFile)
   }
 
+  test("a root with no manifest directory: snapshotRead and expireVersions fail loudly, naming the version") {
+    import graft.operators.Scans
+    val root = java.nio.file.Files.createTempDirectory("graft_no_manifests").toString
+    val e1 = intercept[IllegalArgumentException] {
+      Scans.snapshotRead(spark, root, 1)
+    }
+    assert(e1.getMessage.contains("snapshot version 1 does not exist") &&
+           e1.getMessage.endsWith("available versions: "), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      Scans.expireVersions(root, Seq(1))
+    }
+    assert(e2.getMessage.contains("cannot expire 1: available versions are"), e2.getMessage)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
   test("snapshot schema evolution: v3 adds a column; older versions byte-identical, null-fill exact") {
     import graft.operators.Scans
     val root = java.nio.file.Files.createTempDirectory("graft_evo_spec")
