@@ -113,7 +113,9 @@ object Tables {
   /** Run `f` with adaptive query execution disabled, restoring the
     * previous value after (r22, guide §1.2 step 1). Four callers
     * remain, all cap-bounded iterative builds whose rounds still carry
-    * exchanges: the NN-descent build (`knnGraphNnDescentScored`), the
+    * exchanges: the NN-descent build's over-budget arm
+    * (`knnGraphNnDescentDistributed`; a corpus under the driver budget
+    * runs its rounds on the driver and never enters the scope), the
     * DiskANN insert patch (`nndInsertGraph`), HITS
     * (`hitsRoundsOnCheckpointed`) and label propagation
     * (`labelPropagate`). Per-round volumes there are bounded by
@@ -260,6 +262,13 @@ object Tables {
     * emission could drift from the batch declaration silently). Same
     * NaN caveat as [[fround]]. */
   def round6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
+  /** JVM-scalar twin of [[fround]] at n=4 as Spark evaluates it: Spark's
+    * `floor` returns a LONG, so NaN pins to 0.0 here (where [[round6]]
+    * keeps it NaN) and the quotient is never −0.0. The driver-side
+    * NN-descent arm scores with it, bit-identical to the distributed
+    * arm's `fround(cosine(..), 4)`. */
+  def fround4(x: Double): Double = math.floor(x * 1e4 + 0.5).toLong / 1e4
 
   /** JVM-scalar twin of [[dsum6]] — ONE definition shared by every
     * driver-side budget-gated arm (the PCA eigensolve, HITS): each

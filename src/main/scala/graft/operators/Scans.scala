@@ -2498,20 +2498,23 @@ object Scans {
     eligible.max
   }
 
-  /** Stage `df` through a normal parquet write, then copy the part
-    * files into `root/data` as immutable `tag_NNN.parquet` files —
-    * one "commit" of the minimal versioned table. Returns the
-    * committed file paths (the manifest entries). */
+  /** Stage `df` through a normal parquet write, then move the part
+    * files into `root/data` as immutable `tag_NNN.parquet` files and
+    * drop the stage directory — one "commit" of the minimal versioned
+    * table, each file stored once. Returns the committed file paths
+    * (the manifest entries). */
   private def ttCommit(df: DataFrame, root: String, tag: String): Seq[String] = {
     val tmp = Paths.get(root, s"stage_$tag")
     df.write.mode("overwrite").parquet(tmp.toString)
     val parts = tmp.toFile.listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.map { case (f, i) =>
+    val files = parts.zipWithIndex.map { case (f, i) =>
       val dst = Paths.get(root, "data").resolve(f"${tag}_$i%03d.parquet")
-      Files.copy(f.toPath, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.move(f.toPath, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       dst.toString
     }.toSeq
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    files
   }
 
   /** The source_avro record shape, shared by the null- and

@@ -1,8 +1,12 @@
 package graft.operators
 
 import graft.Tables._
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.CosineSimImpl
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Similarity search over embedding columns (Array[Float], dim 64).
   *
@@ -214,19 +218,96 @@ object Similarity {
     * (cos desc, nbr_id), every cosine fround4-pinned, the seed hash
     * is seeded md5 — fully deterministic, so the DuckDB oracle
     * replays the build move for move and the beam search on top stays
-    * hash-checked. Returns (vec_id, nbr_id), ≤ M out-edges each. */
+    * hash-checked. Returns (vec_id, nbr_id), ≤ M out-edges each.
+    *
+    * Two arms, one algebra (the driver-budget hybrid of
+    * `Dedup.connectedComponents` and `Analytics.hitsRounds`): one job
+    * ([[nndLocalRows]]) counts rows and embedding elements, looks for a
+    * null id, embedding or element and collects the rows; a null-free
+    * corpus whose [[nndLocalBytes]] fit `Dedup.LocalCcBudgetBytes` runs
+    * the seed and every round on the driver
+    * ([[knnGraphNnDescentLocal]]), anything else runs the distributed
+    * rounds ([[knnGraphNnDescentDistributed]]). The arms are
+    * bit-identical (NndDriverArmSpec). */
   def knnGraphNnDescent(emb: DataFrame, m: Int = GraphM,
                         rounds: Int = NndRounds): DataFrame =
     knnGraphNnDescentScored(emb, m, rounds).select("vec_id", "nbr_id")
+
+  /** Driver bytes the local arm holds per collected vector, apart from
+    * its elements. Measured on the sf0.1 corpus (2,000 vectors of 64,
+    * M = GraphM = 16; live heap after forced GCs, sampled through the
+    * build): the collected rows hold 1.5 MB, the build's state peaks
+    * at 4.7 MB (3.0 MB of it the output edges), the local frame's rows
+    * add 4.4 MB while the edges are still held — about 9.5 MB at the
+    * peak, 2 MB of it elements (below), so ≈ 3.7 KB per vector. 6 KB
+    * leaves half again as headroom. */
+  val NndLocalBytesPerVector = 6144L
+  /** Driver bytes per embedding element: the collected double and its
+    * copy in the UnsafeArrayData the cosine kernel reads, 8 B each. */
+  val NndLocalBytesPerElement = 16L
+
+  /** Driver bytes the local arm needs for `rows` vectors holding
+    * `elements` embedding elements in all — the gate's left side. */
+  private[graft] def nndLocalBytes(rows: Long, elements: Long): Long =
+    rows * NndLocalBytesPerVector + elements * NndLocalBytesPerElement
 
   /** The build WITH its final edge scores (vec_id, nbr_id, cos) — the
     * append patch consumes these directly instead of re-scoring the
     * base edges it already paid for (review r19 follow-through; the
     * values are the same pinned fround4 cosines the oracle's ne-round
-    * CTEs carry). */
+    * CTEs carry). `localMaxBytes` is the driver arm's gate; specs pass
+    * it to force either arm. */
   private[graft] def knnGraphNnDescentScored(
-      emb: DataFrame, m: Int = GraphM,
-      rounds: Int = NndRounds): DataFrame =
+      emb: DataFrame, m: Int = GraphM, rounds: Int = NndRounds,
+      localMaxBytes: Long = Dedup.LocalCcBudgetBytes): DataFrame = {
+    val localTypes = (emb.schema("vec_id").dataType, emb.schema("embedding").dataType) match {
+      case (LongType, ArrayType(FloatType | DoubleType, _)) => true
+      case _ => false
+    }
+    val rows = if (localTypes) nndLocalRows(emb, localMaxBytes) else None
+    rows.fold(knnGraphNnDescentDistributed(emb, m, rounds))(
+      knnGraphNnDescentLocal(emb, _, m, rounds))
+  }
+
+  /** The gate, fused with the driver arm's collect into ONE job: each
+    * partition counts its rows and embedding elements, flags a null id,
+    * embedding or element, and ships its `(vec_id, embedding)` pairs
+    * when they fit its share of `budget` (budget / partitions, so the
+    * driver never receives more than `budget`). None when the corpus
+    * holds a null or its [[nndLocalBytes]] exceed `budget`: the
+    * distributed arm then runs, and this scan is the one job it pays on
+    * top of its rounds. A corpus that fits but sits unevenly across
+    * partitions pays a second job for the collect. */
+  private def nndLocalRows(emb: DataFrame,
+                           budget: Long): Option[Array[(Long, Array[Double])]] = {
+    val rdd = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+      .queryExecution.toRdd
+    val share = budget / math.max(1, rdd.getNumPartitions)
+    val parts = rdd.mapPartitions { it =>
+      var (rows, elements, nulls) = (0L, 0L, false)
+      val kept = Array.newBuilder[(Long, Array[Double])]
+      it.foreach { r =>
+        rows += 1
+        if (r.isNullAt(0) || r.isNullAt(1)) nulls = true
+        else {
+          val a = r.getArray(1)
+          elements += a.numElements
+          if ((0 until a.numElements).exists(a.isNullAt)) nulls = true
+          else if (nndLocalBytes(rows, elements) <= share) kept += ((r.getLong(0), a.toDoubleArray))
+        }
+      }
+      val fits = !nulls && nndLocalBytes(rows, elements) <= share
+      Iterator((rows, elements, nulls, if (fits) Some(kept.result()) else None))
+    }.collect()
+    if (parts.exists(_._3) || nndLocalBytes(parts.map(_._1).sum, parts.map(_._2).sum) > budget)
+      None
+    else if (parts.forall(_._4.isDefined)) Some(parts.flatMap(_._4.get))
+    else Some(rdd.map(r => (r.getLong(0), r.getArray(1).toDoubleArray)).collect())
+  }
+
+  /** The distributed rounds — the over-budget arm. */
+  private[graft] def knnGraphNnDescentDistributed(
+      emb: DataFrame, m: Int = GraphM, rounds: Int = NndRounds): DataFrame =
     // r22 (guide §1.2 step 1 — fix the job shape before the tasks):
     // AQE off for the build scope. Every per-round volume is bounded
     // by construction (NndUndCap² candidates per vertex, GraphM edges
@@ -239,6 +320,150 @@ object Similarity {
     graft.Tables.withAqeOff(emb.sparkSession) {
       knnGraphNnDescentScoredBody(emb, m, rounds)
     }
+
+  /** The driver arm: the seed and `rounds` rounds of
+    * [[knnGraphNnDescentScoredBody]] replayed move for move in Scala
+    * ([[NndLocal]]) over the collected `(vec_id, embedding)` rows,
+    * returned as a local frame with the distributed arm's column names,
+    * types and nullability. */
+  private def knnGraphNnDescentLocal(emb: DataFrame, rows: Array[(Long, Array[Double])],
+                                     m: Int, rounds: Int): DataFrame = {
+    val s = emb.sparkSession
+    val id = emb.schema("vec_id")
+    val edges = NndLocal.build(rows.map(_._1),
+      rows.map(r => UnsafeArrayData.fromPrimitiveArray(r._2)), m, rounds)
+    val schema = StructType(Seq(StructField("vec_id", LongType, id.nullable),
+      StructField("nbr_id", LongType, id.nullable), StructField("cos", DoubleType)))
+    s.createDataFrame(java.util.Arrays.asList(edges.map { case (a, b, c) => Row(a, b, c) }: _*),
+      schema)
+  }
+
+  /** The driver arm's state and moves. Vertices are the distinct ids in
+    * ascending order, so a vertex index orders like its id; a vertex
+    * keeps every row its id has (duplicate ids), and a pair of
+    * vertices scores every row against every row, as the distributed
+    * join does. Per vertex it holds a top-M state only: candidates
+    * stream into it, and an offer for a neighbour it holds keeps the
+    * larger score (topM's max dedup), so a pair proposed by several
+    * hubs needs no pair set to be deduplicated first. */
+  private[graft] object NndLocal {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+
+    /** Rank order of (cos desc, nbr asc) under SQL double order. */
+    private def better(c1: Double, n1: Int, c2: Double, n2: Int): Boolean = {
+      val x = compareDoubles(c1, c2)
+      x > 0 || (x == 0 && n1 < n2)
+    }
+
+    /** Per-vertex top-`m` edges, best first; an offer for a neighbour
+      * already held keeps the larger score (topM's max dedup). */
+    final class TopM(val nV: Int, val m: Int) {
+      val nbr = new Array[Int](nV * m)
+      val cos = new Array[Double](nV * m)
+      val size = new Array[Int](nV)
+
+      def copy(): TopM = {
+        val t = new TopM(nV, m)
+        System.arraycopy(nbr, 0, t.nbr, 0, nbr.length)
+        System.arraycopy(cos, 0, t.cos, 0, cos.length)
+        System.arraycopy(size, 0, t.size, 0, nV)
+        t
+      }
+
+      def offer(v: Int, w: Int, c: Double): Unit = {
+        val base = v * m
+        var k = size(v)
+        var i = 0
+        while (i < k && nbr(base + i) != w) i += 1
+        if (i < k) {
+          if (compareDoubles(c, cos(base + i)) <= 0) return
+          System.arraycopy(nbr, base + i + 1, nbr, base + i, k - i - 1)
+          System.arraycopy(cos, base + i + 1, cos, base + i, k - i - 1)
+          k -= 1
+        } else if (k == m && !better(c, w, cos(base + k - 1), nbr(base + k - 1))) return
+        var p = 0
+        while (p < k && !better(c, w, cos(base + p), nbr(base + p))) p += 1
+        val moved = math.min(k, m - 1) - p
+        if (moved > 0) {
+          System.arraycopy(nbr, base + p, nbr, base + p + 1, moved)
+          System.arraycopy(cos, base + p, cos, base + p + 1, moved)
+        }
+        nbr(base + p) = w
+        cos(base + p) = c
+        size(v) = math.min(k + 1, m)
+      }
+    }
+
+    /** The seed bucket of `id` in one arm: pmod(conv(substring(md5(arm ‖
+      * id), 1, 8), 16, 10), nb) — the first 4 md5 bytes, unsigned. */
+    def bucket(arm: String, id: Long, nb: Long): Long = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest((arm + id).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val h = (d(0) & 0xffL) << 24 | (d(1) & 0xffL) << 16 | (d(2) & 0xffL) << 8 | (d(3) & 0xffL)
+      h % nb
+    }
+
+    /** (vec_id, nbr_id, cos) of the build over rows (`ids(r)`,
+      * `vecs(r)`). */
+    def build(ids: Array[Long], vecs: Array[ArrayData], m: Int,
+              rounds: Int): Array[(Long, Long, Double)] = {
+      val verts = ids.distinct.sorted
+      val nV = verts.length
+      val vOf = ids.map(java.util.Arrays.binarySearch(verts, _))
+      // rows of each vertex, in collect order
+      val rowsOf = Array.fill(nV)(Array.newBuilder[Int])
+      ids.indices.foreach(r => rowsOf(vOf(r)) += r)
+      val vRows = rowsOf.map(_.result())
+      def score(r1: Int, r2: Int): Double =
+        fround4(CosineSimImpl.cosine(vecs(r1), vecs(r2), false, false))
+
+      // SEED: per arm, bucket members by vec_id (first NndBucketCap),
+      // every member pair with distinct ids scored both ways
+      var e = new TopM(nV, m)
+      val nb = math.max(1L, math.floor(ids.length / NndBucketTarget.toDouble).toLong)
+      for (arm <- Seq("nnd:", "nnd2:")) {
+        val buckets = ids.indices.groupBy(r => bucket(arm, ids(r), nb))
+        for (rs <- buckets.valuesIterator) {
+          val mem = rs.sortBy(r => (ids(r), r)).take(NndBucketCap).toArray
+          for (i <- mem.indices; j <- i + 1 until mem.length if ids(mem(i)) != ids(mem(j))) {
+            val c = score(mem(i), mem(j))
+            e.offer(vOf(mem(i)), vOf(mem(j)), c)
+            e.offer(vOf(mem(j)), vOf(mem(i)), c)
+          }
+        }
+      }
+
+      // DESCEND: per hub, its undirected adjacency (max score per
+      // neighbour), the NndUndCap best by (cos desc, nbr), id-sorted;
+      // every i<j pair of it scored into the next state
+      for (_ <- 1 to rounds) {
+        val und = Array.fill(nV)(Array.newBuilder[(Int, Double)])
+        for (v <- 0 until nV; k <- 0 until e.size(v)) {
+          val (w, c) = (e.nbr(v * m + k), e.cos(v * m + k))
+          und(v) += ((w, c))
+          und(w) += ((v, c))
+        }
+        val next = e.copy()
+        for (v <- 0 until nV) {
+          val adj = und(v).result()
+          if (adj.length > 1) {
+            val near = adj.groupMapReduce(_._1)(_._2)((a, b) => if (compareDoubles(a, b) >= 0) a else b)
+              .toArray.sortWith { case ((n1, c1), (n2, c2)) => better(c1, n1, c2, n2) }
+              .take(NndUndCap).map(_._1).sorted
+            for (i <- near.indices; j <- i + 1 until near.length; ra <- vRows(near(i));
+                 rb <- vRows(near(j))) {
+              val c = score(ra, rb)
+              next.offer(near(i), near(j), c)
+              next.offer(near(j), near(i), c)
+            }
+          }
+        }
+        e = next
+      }
+      (for (v <- 0 until nV; k <- 0 until e.size(v))
+        yield (verts(v), verts(e.nbr(v * m + k)), e.cos(v * m + k))).toArray
+    }
+  }
 
   /** (vec_id, nbr_id, cos) edges src→dst AND dst→src for every row of
     * `df`, emitted by one generator so `df`'s plan is evaluated once:
@@ -404,7 +629,7 @@ object Similarity {
     * patched (vec_id, nbr_id) edge list. */
   def nndInsertGraph(all: DataFrame, base: DataFrame,
                      baseGraphScored: DataFrame, newV: DataFrame): DataFrame =
-    // same cap-bounded-loop posture as knnGraphNnDescentScored (r22):
+    // same cap-bounded-loop posture as knnGraphNnDescentDistributed (r22):
     // AQE's per-exchange materialize-and-replan jobs buy nothing for
     // volumes bounded by 2·cap + M·NndUndCap per appended vector
     graft.Tables.withAqeOff(all.sparkSession) {

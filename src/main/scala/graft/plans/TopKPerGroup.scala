@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -139,15 +139,23 @@ object TopKPerGroupStrategy extends SparkStrategy {
 }
 
 object TopKPerGroup {
+  /** Install [[TopKPerGroupStrategy]] in `spark` unless it is there:
+    * check and append under the session's strategy-list lock, so two
+    * threads sharing one session install it once. */
+  private def setup(spark: SparkSession): Unit = {
+    val x = spark.experimental
+    x.synchronized {
+      if (!x.extraStrategies.contains(TopKPerGroupStrategy))
+        x.extraStrategies = x.extraStrategies :+ TopKPerGroupStrategy
+    }
+  }
+
   /** Top `k` rows of `df` per `groupCols`, ordered by `orderCol`
     * (descending by default) with deterministic `tieCols` tie-break. */
   def apply(df: DataFrame, groupCols: Seq[String], orderCol: String, k: Int,
             descending: Boolean = true, tieCols: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-    }
+    setup(spark)
     val plan = TopKPerGroupPlan(
       groupCols.map(c => shims.expression(df(c))),
       shims.expression(df(orderCol)),

@@ -1068,6 +1068,12 @@ object Streams {
         orders(s, dir)
           .select("o_orderkey", "o_orderdate", "o_totalprice", "o_orderstatus")
           .repartition(4).write.mode("overwrite").parquet(stage)
+        // mtimes rising strictly in name order, as the Avro tail's
+        // staging stamps them: the file source takes files in mtime
+        // order, and ties would let any part land in any batch
+        new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet"))
+          .sortBy(_.getName).zipWithIndex.foreach { case (f, b) =>
+            f.setLastModified(1700000000000L + b * 60000L) }
         Scans.initVersionedTable(root)
         Scans.createBranch(root, "main", 1)
         Scans.createBranch(root, "staging", 1)

@@ -2,7 +2,7 @@ package graft
 
 import graft.Tables._
 import graft.operators.Similarity
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,6 +14,39 @@ import org.apache.spark.sql.functions._
   * must equal row for row. */
 object NndDescentReference {
   import Similarity.{GraphM, NndBucketCap, NndBucketTarget, NndRounds, NndUndCap, cosine}
+
+  /** 160 vectors in 32 dims, one unit axis each (i % 32), with a
+    * ±1e-6 or 0 leak into the next axis: every cross-axis raw cosine
+    * is a tiny positive, a tiny negative or exactly 0, and all of them
+    * pin to a 0.0 score. Each vector has 4 same-axis neighbours (a
+    * score of 1.0), fewer than GraphM, so every top-M cut and every
+    * adjacency cap falls inside a wide zero tie, whose negation (-0.0)
+    * keys the adjacency sort. */
+  def zeroTies(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    (0L until 160L).map { i =>
+      val axis = (i % 32).toInt
+      val leak = ((i / 32) % 3 - 1) * 1e-6
+      (i, Array.tabulate(32)(d =>
+        if (d == axis) 1.0f else if (d == (axis + 1) % 32) leak.toFloat else 0.0f))
+    }.toDF("vec_id", "embedding")
+  }
+
+  /** 150 ids over 6 embeddings (exact cosine ties everywhere), plus
+    * duplicate vec_id rows: 7 a second time with another vector, 11 a
+    * second time with its own — one pair then scores twice. */
+  def duplicates(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val patterns = Array.tabulate(6, 16)((p, d) => ((p * 7 + d * 3) % 5 - 2).toFloat)
+    val rows = (0L until 150L).map(i => (i, patterns((i % 6).toInt)))
+    (rows ++ Seq((7L, patterns(2)), (11L, patterns(5)))).toDF("vec_id", "embedding")
+  }
+
+  /** (vec_id, nbr_id, cos bits), sorted: -0.0 and 0.0 differ here. */
+  def bits(df: DataFrame): Seq[(Long, Long, Long)] =
+    df.select("vec_id", "nbr_id", "cos").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+      .sorted
 
   def knnGraphNnDescentScored(emb: DataFrame, m: Int = GraphM,
                               rounds: Int = NndRounds): DataFrame =

@@ -66,4 +66,14 @@ class TopKOperatorSpec extends SparkSpec {
       .withColumn("rn", row_number().over(w)).where(col("rn") <= 1).drop("rn")
     assertSameRows(got, expect, "bottom-1")
   }
+
+  test("threads sharing a fresh session install the strategy exactly once") {
+    for (round <- 1 to 25) {
+      val s = spark.newSession()
+      val df = s.range(10).selectExpr("id % 2 AS g", "id AS v")
+      inParallel(8)(TopKPerGroup(df, Seq("g"), "v", 1))
+      val n = s.experimental.extraStrategies.count(_ == graft.plans.TopKPerGroupStrategy)
+      assert(n == 1, s"round $round: $n strategies installed")
+    }
+  }
 }

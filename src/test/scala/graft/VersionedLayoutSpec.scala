@@ -4,13 +4,13 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Scans
 
 /** The versioned table's on-disk layout (the manifest directory, the
   * `vN.txt` version files) is written down once, in the layout helpers
   * of `Scans.scala`; every other line under src/main reaches it through
   * them, so the layout cannot fork. */
-class VersionedLayoutSpec extends AnyFunSuite {
+class VersionedLayoutSpec extends SparkSpec {
   private val Begin = "// ---- versioned-table layout: the ONLY code that names its files ----"
   private val End = "// ---- end of the versioned-table layout ----"
   // the directory name, a version-file regex in any quoting, or a
@@ -40,6 +40,20 @@ class VersionedLayoutSpec extends AnyFunSuite {
     val inside = lines.slice(b + 1, e).filterNot(_.trim.startsWith("*"))
     Seq("\"_manifests\"", "\"v(\\\\d+)\\\\.txt\"", "s\"v$v.txt\"").foreach { text =>
       assert(inside.count(_.contains(text)) == 1, s"$text in the layout helpers")
+    }
+  }
+
+  test("a built versioned fixture stores each committed file once: no stage " +
+       "directory is left, and every file a manifest lists exists") {
+    val roots = Seq(Scans.timeTravelFixture(spark, sf001), Scans.compactionFixture(spark, sf001),
+                    Scans.evolutionFixture(spark, sf001), Scans.rollbackFixture(spark, sf001))
+    for (root <- roots) {
+      val left = new java.io.File(root).listFiles().map(_.getName).filter(_.startsWith("stage_"))
+      assert(left.isEmpty, s"$root keeps ${left.mkString(", ")}")
+      val manifests = new java.io.File(root, "_manifests").listFiles().filter(_.getName.endsWith(".txt"))
+      assert(manifests.nonEmpty, root)
+      for (m <- manifests; f <- Files.readAllLines(m.toPath).asScala if f.nonEmpty)
+        assert(Files.exists(Paths.get(f)), s"${m.getName} lists missing $f")
     }
   }
 }
